@@ -2088,11 +2088,10 @@ FROM sid_sigs
         # references are safe; nothing here is pickled to workers)
         s = batch_df.sparkSession
         gens = load_gens(epoch_id)  # disk-derived, restart/replay-safe
-        # the batch arrives as ONE file split (1 partition at harness
-        # scale) — spread the md5-shingle/minhash compute across the
-        # machine before the heavy expression; the split estimate
-        # replaces a per-epoch physical-planning RDD probe (r14 opt —
-        # see sources.registry.spread_batch)
+        # a batch that lists input files is spread before the heavy
+        # md5-shingle/minhash expression when it has too few splits; a
+        # foreachBatch batch lists none and passes through (see
+        # sources.registry.spread_batch)
         par = s.sparkContext.defaultParallelism
         batch_df = spread_batch(batch_df, min(8, par))
         sigs = batch_df.select("doc_id", F.expr(row_expr).alias("s")).select(

@@ -4141,9 +4141,10 @@ FROM sei_vecs
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
         gens = load_gens(epoch_id)
-        # spread the per-row LSH-fold work off the 1-3 file splits;
-        # the split estimate replaces a per-epoch physical-planning
-        # RDD probe (r14 opt — see sources.registry.spread_batch)
+        # a batch that lists input files is spread before the per-row
+        # LSH folds when it has too few splits; a foreachBatch batch
+        # lists none and passes through (see
+        # sources.registry.spread_batch)
         par = s.sparkContext.defaultParallelism
         batch_df = spread_batch(batch_df, min(8, par))
         ok = F.expr(valid_vec_pred_spark())

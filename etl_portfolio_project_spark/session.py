@@ -6,6 +6,8 @@ Local-mode defaults mirror what we would set on a real cluster:
   selective filter, and splits skewed partitions.
 - shuffle.partitions sized to cores locally; on a 1000-executor
   cluster this would be ~2-3× total cores (AQE coalesces down).
+- Tungsten pages sized from the heap (`page_size_bytes`), not from
+  the core count.
 - Arrow enabled for the (rare) pandas-interchange paths.
 - Session timezone pinned to UTC so date/timestamp semantics are
   reproducible and match the DuckDB oracle.
@@ -17,6 +19,27 @@ import os
 
 from pyspark.sql import SparkSession
 
+from etl_portfolio_project_spark.sources.registry import _size_bytes
+
+# TaskMemoryManager's page table: one task holds at most this many
+# pages at once and fails when it needs another.
+_PAGE_TABLE_SIZE = 8192
+
+
+def page_size_bytes(max_heap_bytes: int) -> int:
+    """`spark.buffer.pageSize` for JVMs whose largest heap is
+    `max_heap_bytes`: the smallest power of two whose 8192-page table
+    still covers that heap, so one task can address all of it, clamped
+    to Spark's own [1 MB, 64 MB] range.
+
+    Spark's default divides the execution pool by cores × 16 instead,
+    which is 16 MB at local[4] with 2 GB. Every broadcast hash join
+    whose key is not a single long builds a map on the driver that
+    holds at least one page until its plan is collected, so a
+    500-row broadcast pinned 16 MB."""
+    per_page = -(-max_heap_bytes // _PAGE_TABLE_SIZE)
+    return min(max(1 << (per_page - 1).bit_length(), 1 << 20), 64 << 20)
+
 
 def get_spark(
     app_name: str = "etl_portfolio_project_spark",
@@ -24,22 +47,27 @@ def get_spark(
     driver_memory: str = "16g",
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's defaults."""
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_memory)
-        .config("spark.ui.enabled", "false")
+    """Build (or reuse) a SparkSession with the engine's defaults.
+
+    `cpus` falls back to SPARK_GRAFT_CPUS, then to the CPUs this
+    process may run on. A reused session keeps the static confs it was
+    started with, the page size among them."""
+    cpus = (
+        cpus
+        or os.environ.get("SPARK_GRAFT_CPUS")
+        or len(os.sched_getaffinity(0))
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
+    conf = {
+        "spark.sql.shuffle.partitions": str(cpus),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": driver_memory,
+        "spark.ui.enabled": "false",
+    }
+    conf.update(extra_conf or {})
     # scale-dependent overrides without code edits (r13 opt): a JSON
     # object of conf key/values, e.g. production advisory partition
     # sizing — local defaults above stay the bench-comparable baseline.
@@ -55,9 +83,24 @@ def get_spark(
             raise ValueError(
                 f"SPARK_GRAFT_CONF_JSON is not valid JSON: {e}"
             ) from e
-        for k, v in overrides.items():
-            builder = builder.config(k, str(v))
-    pre = SparkSession.getActiveSession()
+        conf.update({k: str(v) for k, v in overrides.items()})
+    # derived from the heap that the final conf asks for; an explicit
+    # page size from either source above wins
+    max_heap = max(
+        _size_bytes(conf[k], 0)
+        for k in ("spark.driver.memory", "spark.executor.memory")
+        if k in conf
+    )
+    conf.setdefault(
+        "spark.buffer.pageSize", f"{page_size_bytes(max_heap) >> 20}m"
+    )
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
+    for k, v in conf.items():
+        builder = builder.config(k, v)
+    # getOrCreate() reuses the process-wide instantiated session, which
+    # may have been created on another thread; getActiveSession() is
+    # thread-local and would miss it
+    pre = SparkSession._instantiatedSession
     spark = builder.getOrCreate()
     # when a session already exists, getOrCreate() applies only
     # RUNTIME SQL confs (static ones — driver memory, master — are

@@ -12,6 +12,9 @@ tables.
 
 from __future__ import annotations
 
+import os
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = [
@@ -121,23 +124,25 @@ def spread_batch(df: DataFrame, target: int) -> DataFrame:
     as 1-3 splits, which would pin the heavy per-row work — md5
     shingles, LSH folds — to as many tasks). The split count is
     estimated from the batch's input files (same FilePartition math as
-    `balanced`), replacing the former per-epoch
-    `df.rdd.getNumPartitions()` physical-planning round trip; an
-    unlistable file (remote scheme) falls back to the exact probe. A
-    production-size batch with ≥ `target` splits passes through
-    untouched — the repartition never LOWERS parallelism."""
-    import os
+    `balanced`) instead of a `df.rdd.getNumPartitions()` physical-
+    planning round trip; an unlistable file (remote scheme) falls back
+    to that exact probe. A production-size batch with ≥ `target`
+    splits passes through untouched — the repartition never LOWERS
+    parallelism.
 
-    spark = df.sparkSession
+    A batch that reports no input files passes through unspread. That
+    is every foreachBatch batch today: Spark hands the body a
+    LogicalRDD, which lists no files. Spreading those 1-split epochs
+    through the exact probe costs more executor CPU than it saves at
+    harness scale."""
     try:
-        files = df.inputFiles()
-        total, n = 0, 0
-        for f in files:
-            p = f[7:] if f.startswith("file://") else f
-            total += os.path.getsize(p)  # OSError -> exact fallback
-            n += 1
-        if n == 0:
-            return df  # empty batch: nothing to spread
+        sizes = [_local_file_size(f) for f in df.inputFiles()]
+    except (OSError, ValueError):
+        n = df.rdd.getNumPartitions()
+    else:
+        if not sizes:
+            return df
+        spark = df.sparkSession
         max_pb = _size_bytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"),
             128 * 1024 * 1024,
@@ -147,14 +152,18 @@ def spread_batch(df: DataFrame, target: int) -> DataFrame:
             4 * 1024 * 1024,
         )
         par = spark.sparkContext.defaultParallelism
-        est = _scan_split_estimate(total, n, par, max_pb, open_cost)
-        if est < target:
-            return df.repartition(target)
-        return df
-    except Exception:
-        if df.rdd.getNumPartitions() < target:
-            return df.repartition(target)
-        return df
+        n = _scan_split_estimate(sum(sizes), len(sizes), par, max_pb, open_cost)
+    return df.repartition(target) if n < target else df
+
+
+def _local_file_size(uri: str) -> int:
+    """Size of a local input file given as a path or a `file:` URI in
+    any of its forms (`file:/p`, `file:///p`); ValueError for any other
+    scheme."""
+    u = urlparse(uri)
+    if u.scheme not in ("", "file"):
+        raise ValueError(f"not a local file: {uri}")
+    return os.path.getsize(unquote(u.path))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -186,8 +195,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # split and force a repartition on an arbitrarily large
         # dataset — the exact 100 TB anti-pattern).
         try:
-            import os
-
             if os.path.isfile(path):
                 df._graft_src_probe = (os.path.getsize(path), 1)
             elif os.path.isdir(path):

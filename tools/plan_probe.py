@@ -9,7 +9,7 @@ Usage:
   python tools/plan_probe.py --plans-dir plans/r13 --suffix after --time 3 q1
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS   (default 32).
+     SPARK_GRAFT_CPUS   (default: the CPUs this process may run on).
 
 Plan files land as <plans-dir>/<query>_<suffix>.txt. Timings print as
 one JSON line per query. Plans are captured from the SAME DataFrame
@@ -43,12 +43,11 @@ def main() -> None:
     args = p.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from etl_portfolio_project_spark import api, caches
     from etl_portfolio_project_spark.session import get_spark
 
-    spark = get_spark(app_name="plan_probe", cpus=cpus)
+    spark = get_spark(app_name="plan_probe")
     spark.read.parquet(f"{sf_dir}/orders.parquet").count()  # warm
 
     if args.plans_dir:
