@@ -464,69 +464,53 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import caches
     from .dedup import (
         JACCARD_TAU,
-        _banded_candidate_pairs,
-        _shingle_sig_row_expr,
+        _band_candidates,
+        _jaccard_verify,
+        _shingle_sigs,
         collapse_exact_reps,
     )
 
-    row_expr = _shingle_sig_row_expr()
     base = load_table(spark, sf_dir, "documents").select(
         "doc_id", split_assignment_expr().alias("split"), "text"
     )
     d = caches.claim(
         "split_leak_sigs",
-        collapse_exact_reps(base, key_cols=("split",))
-        .select("doc_id", "split", "n_dup", F.expr(row_expr).alias("s"))
-        .select(
+        _shingle_sigs(
+            collapse_exact_reps(base, key_cols=("split",)),
             "doc_id",
             "split",
             "n_dup",
-            F.col("s.items").alias("items"),
-            F.col("s.sig").alias("sig"),
         ),
     )
-    cand = _banded_candidate_pairs(d)
-    w1 = d.select(
-        F.col("doc_id").alias("id1"),
-        F.col("split").alias("sp1"),
-        F.col("items").alias("w1"),
-        F.col("n_dup").alias("m1"),
-    )
-    w2 = d.select(
-        F.col("doc_id").alias("id2"),
-        F.col("split").alias("sp2"),
-        F.col("items").alias("w2"),
-        F.col("n_dup").alias("m2"),
-    )
-    shared = F.size(F.array_intersect("w1", "w2")).cast("long")
-    n1 = F.size("w1").cast("long")
-    n2 = F.size("w2").cast("long")
-    r1 = F.expr(_SPLIT_RANK_CASE.format(c="sp1"))
-    r2 = F.expr(_SPLIT_RANK_CASE.format(c="sp2"))
+    r1 = F.expr(_SPLIT_RANK_CASE.format(c="split1"))
+    r2 = F.expr(_SPLIT_RANK_CASE.format(c="split2"))
     leaks = (
-        cand.join(w1, "id1")
-        .join(w2, "id2")
-        # cheap split filter FIRST: ~⅔ of true near-dup candidates are
+        _jaccard_verify(
+            _band_candidates(d.where(F.size("items") >= 1)),
+            d.select("doc_id", "items", "split", "n_dup"),
+        )
+        # cheap split test FIRST: ~⅔ of true near-dup candidates are
         # same-split under an 80/10/10 split, and the O(|items|)
-        # intersect below is the expensive part — don't compute it for
-        # pairs the audit discards anyway (values are unaffected)
-        .where(F.col("sp1") != F.col("sp2"))
-        .withColumn("jaccard", shared / (n1 + n2 - shared))
-        .where(F.col("jaccard") >= JACCARD_TAU)
+        # intersect is the expensive part — don't compute it for pairs
+        # the audit discards anyway (values are unaffected)
+        .where(
+            (F.col("split1") != F.col("split2"))
+            & (F.col("jaccard") >= JACCARD_TAU)
+        )
         .select(
-            F.when(r1 < r2, F.col("sp1")).otherwise(F.col("sp2")).alias(
+            F.when(r1 < r2, F.col("split1")).otherwise(F.col("split2")).alias(
                 "split_a"
             ),
-            F.when(r1 < r2, F.col("sp2")).otherwise(F.col("sp1")).alias(
+            F.when(r1 < r2, F.col("split2")).otherwise(F.col("split1")).alias(
                 "split_b"
             ),
             F.when(r1 < r2, F.col("id2")).otherwise(F.col("id1")).alias(
                 "late_doc"
             ),
-            F.when(r1 < r2, F.col("m2")).otherwise(F.col("m1")).alias(
+            F.when(r1 < r2, F.col("n_dup2")).otherwise(F.col("n_dup1")).alias(
                 "late_mult"
             ),
-            (F.col("m1") * F.col("m2")).alias("w"),
+            (F.col("n_dup1") * F.col("n_dup2")).alias("w"),
             "jaccard",
         )
     )

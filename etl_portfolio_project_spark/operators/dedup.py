@@ -40,8 +40,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import caches
-from ..sources.registry import balanced, load_table, spread_batch
-from .text import portable_hash60, portable_hash60_sql, tokens_expr
+from ..sources.registry import balanced, load_table
+from .text import (
+    bind_once_sql,
+    portable_hash60_spark_sql,
+    portable_hash60_sql,
+    tokens_expr,
+)
 
 #: MinHash parameters — k hash functions in b bands of r rows (k=b*r).
 MH_P = 2_147_483_647  # modulus (2^31-1): keeps a*h+b < 2^62 under ANSI
@@ -172,11 +177,10 @@ GROUP BY prefix_fp HAVING count(*) >= 2
 def _prefix_candidates(
     d: DataFrame, tau_num: int, tau_den: int, claim_key: str | None = None
 ) -> DataFrame:
-    """Candidate-pair stage of the prefix-filtered SSJoin (exposed so
-    tools/scaling_probe.py can measure candidate growth separately
-    from verification): distinct (id1<id2) pairs sharing a prefix item
-    — the prefix being each doc's (n − ⌈τ·n⌉ + 1) globally-rarest
-    items. See `_prefix_filtered_jaccard_pairs` for theory/citations.
+    """Candidate-pair stage of the prefix-filtered SSJoin: distinct
+    (id1<id2) pairs sharing a prefix item — the prefix being each
+    doc's (n − ⌈τ·n⌉ + 1) globally-rarest items. See
+    `_prefix_filtered_jaccard_pairs` for theory/citations.
 
     `claim_key` (r13 opt): the prefix index feeds BOTH sides of the
     self-join — left lazy, the explode + df join + two windows behind
@@ -250,27 +254,48 @@ def _prefix_filtered_jaccard_pairs(
     ⌈τ·n⌉ is exact integer arithmetic ((num·n + num) div den), not a
     double multiplication."""
     cand = _prefix_candidates(d, tau_num, tau_den, claim_key=claim_key)
-    w1 = d.select(F.col("doc_id").alias("id1"), F.col("items").alias("items1"))
-    w2 = d.select(F.col("doc_id").alias("id2"), F.col("items").alias("items2"))
-    shared = F.size(F.array_intersect("items1", "items2")).cast("long")
-    n1 = F.size("items1").cast("long")
-    n2 = F.size("items2").cast("long")
-    return (
-        cand.join(w1, "id1")
-        .join(w2, "id2")
-        .select(
-            "id1",
-            "id2",
-            shared.alias("shared"),
-            n1.alias("n1"),
-            n2.alias("n2"),
+    return _jaccard_verify(cand, d).where(F.col("jaccard") >= tau)
+
+
+def _jaccard_verify(
+    cand: DataFrame, d: DataFrame, index: DataFrame | None = None
+) -> DataFrame:
+    """Exact set-Jaccard of (id1, id2, ...) candidate pairs — the ONE
+    Spark definition of the verify step every candidate generator
+    (prefix filter, LSH banding) ends in.
+
+    `d` is a (doc_id, items, *carry) relation; id2 is looked up in
+    `index` when given (batch × index candidates), else in `d`. Each
+    side's columns come back suffixed by side (doc_id → id1/id2, carry
+    column c → c1/c2), after the candidate columns, followed by
+    shared / n1 / n2 (BIGINT set sizes) and jaccard = shared / (n1 +
+    n2 − shared) — the operation order of every DuckDB twin, so the
+    double is bit-identical to the oracle's."""
+
+    def side(frame: DataFrame, i: int) -> DataFrame:
+        return frame.select(
+            *(
+                F.col(c).alias(f"id{i}" if c == "doc_id" else f"{c}{i}")
+                for c in frame.columns
+            )
         )
-        .withColumn(
-            "jaccard",
-            F.col("shared") / (F.col("n1") + F.col("n2") - F.col("shared")),
-        )
-        .where(F.col("jaccard") >= tau)
-        .select("id1", "id2", "shared", "n1", "n2", "jaccard")
+
+    pairs = cand.join(side(d, 1), "id1").join(
+        side(d if index is None else index, 2), "id2"
+    )
+    carry = [
+        c for c in pairs.columns if c not in ("id1", "id2", "items1", "items2")
+    ]
+    return pairs.select(
+        "id1",
+        "id2",
+        *carry,
+        F.size(F.array_intersect("items1", "items2")).cast("long").alias("shared"),
+        F.size("items1").cast("long").alias("n1"),
+        F.size("items2").cast("long").alias("n2"),
+    ).withColumn(
+        "jaccard",
+        F.col("shared") / (F.col("n1") + F.col("n2") - F.col("shared")),
     )
 
 
@@ -374,14 +399,13 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _shingle_hashes_spark_sql() -> str:
     """Spark-SQL 60-bit md5 hashes of the distinct 3-word shingles
     (LET-bound token split — see `ngram_jaccard_neardup`)."""
-    from .text import _ngrams_spark_sql, bind_once_sql
+    from .text import _ngrams_spark_sql
 
-    hash_g = "CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)"
     return bind_once_sql(
         "split(trim(text), '\\\\s+')",
         "t",
         f"array_distinct(transform({_ngrams_spark_sql('t', SHINGLE_N)}, "
-        f"g -> {hash_g}))",
+        f"g -> {portable_hash60_spark_sql('g')}))",
     )
 
 
@@ -419,51 +443,74 @@ LIMIT {SHINGLE_TOPK}
 # --- MinHash LSH ----------------------------------------------------------
 
 
-def _token_hashes(text: Column) -> Column:
-    return F.transform(
-        _distinct_words(text), lambda t: portable_hash60(t) % F.lit(MH_P)
-    )
-
-
-#: Spark-SQL token-hash array over the `text` column — the string
-#: mirror of `_token_hashes`, for LET-bound signature expressions
-#: (an unbound Column reused k times re-tokenizes + re-md5s k times
-#: per row under interpreted HOF eval — see text.bind_once_sql).
-_TOKEN_HASHES_SPARK_SQL = (
-    "transform(array_distinct(split(trim(text), '\\\\s+')), "
-    f"t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT) % {MH_P})"
-)
-
-
-def _minhash_signature() -> Column:
-    """Array of MH_K min-hash values (portable affine hashes); the
-    token-hash array is LET-bound so it is computed once per row, not
-    once per hash function."""
-    from .text import bind_once_sql
-
+def _affine_minhash_sql(hashes_sql: str) -> str:
+    """Spark-SQL MinHash signature of the hash array `hashes_sql`: the
+    MH_K portable affine min-hashes min((a·h + b) % MH_P) for (a, b) in
+    MH_AB. The hash array is LET-bound (text.bind_once_sql), so it is
+    computed once per row, not once per hash function — an unbound
+    array reused k times re-tokenizes and re-md5s k times per row
+    under interpreted HOF eval."""
     sigs = ", ".join(
         f"array_min(transform(hs, h -> ({a} * h + {b}) % {MH_P}))"
         for a, b in MH_AB
     )
-    return F.expr(bind_once_sql(_TOKEN_HASHES_SPARK_SQL, "hs", f"array({sigs})"))
+    return bind_once_sql(hashes_sql, "hs", f"array({sigs})")
 
 
-def _minhash_band_candidates(d: DataFrame) -> DataFrame:
-    """Band-collision candidate stage of MinHash-LSH (exposed for
-    tools/scaling_probe.py): explode each doc's signature into
-    MH_BANDS (band, band_key) rows via the ONE Spark banding helper
-    (`_band_rows` — previously a second inline copy that could drift,
-    the same risk the DuckDB side's _duck_bands_from_sql removes),
-    equi-join on the band key, count collisions per (id1<id2) pair."""
-    bands = _band_rows(d)
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+def _minhash_signature() -> Column:
+    """MinHash signature of each row's distinct whitespace tokens."""
+    return F.expr(
+        _affine_minhash_sql(
+            "transform(array_distinct(split(trim(text), '\\\\s+')), "
+            f"t -> {portable_hash60_spark_sql('t')} % {MH_P})"
         )
+    )
+
+
+def _band_rows(d: DataFrame) -> DataFrame:
+    """(doc_id, band, band_key) rows from a (doc_id, sig) relation —
+    the LSH index layout: one row per signature band, keyed by the
+    concatenated in-band hash values."""
+    return d.selectExpr("doc_id", f"inline(array({_band_structs_sql()}))")
+
+
+def _band_structs_sql() -> str:
+    """The (band, band_key) structs of a `sig` column, as one Spark-SQL
+    list — the ONE definition of the banding layout (`_band_rows` and
+    the streaming epoch SQL both explode it; one generated string is
+    a single py4j round trip, where a Column chain costs ~30)."""
+    structs = []
+    for i in range(MH_BANDS):
+        keys = ", ".join(
+            f"CAST(sig[{i * MH_ROWS + r}] AS STRING)"
+            for r in range(MH_ROWS)
+        )
+        structs.append(
+            f"named_struct('band', {i}, "
+            f"'band_key', concat_ws('-', {keys}))"
+        )
+    return ", ".join(structs)
+
+
+def _band_candidates(d: DataFrame, index: DataFrame | None = None) -> DataFrame:
+    """Band-collision candidates of MinHash-LSH — the ONE Spark
+    definition of the collision rule: (id1, id2, n_band_hits) for
+    every pair sharing at least one full band of the `sig` column,
+    n_band_hits = the number of shared bands. Without `index` it is
+    the self-join of `d` (id1 < id2); with it, `d` (id1) × `index`
+    (id2), e.g. an incoming batch against the corpus index. Rows with
+    an all-NULL signature (no shingles) must be filtered out by the
+    caller: their band keys are all '' and would collide."""
+    bands = _band_rows(d)
+    a = bands.alias("a")
+    b = (bands if index is None else _band_rows(index)).alias("b")
+    on = (F.col("a.band") == F.col("b.band")) & (
+        F.col("a.band_key") == F.col("b.band_key")
+    )
+    if index is None:
+        on = on & (F.col("a.doc_id") < F.col("b.doc_id"))
+    return (
+        a.join(b, on)
         .groupBy(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"))
         .agg(F.count(F.lit(1)).alias("n_band_hits"))
     )
@@ -496,29 +543,13 @@ def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "n_dup",
-            _distinct_words(F.col("text")).alias("words"),
+            _distinct_words(F.col("text")).alias("items"),
             _minhash_signature().alias("sig"),
         )
         .localCheckpoint(eager=True)
     )
-    candidates = _minhash_band_candidates(d)
-    w1 = d.select(
-        F.col("doc_id").alias("id1"),
-        F.col("words").alias("w1"),
-        F.col("n_dup").alias("n_dup1"),
-    )
-    w2 = d.select(
-        F.col("doc_id").alias("id2"),
-        F.col("words").alias("w2"),
-        F.col("n_dup").alias("n_dup2"),
-    )
-    shared = F.size(F.array_intersect("w1", "w2")).cast("long")
-    n1 = F.size("w1").cast("long")
-    n2 = F.size("w2").cast("long")
-    verified = (
-        candidates.join(w1, "id1")
-        .join(w2, "id2")
-        .withColumn("jaccard", shared / (n1 + n2 - shared))
+    return (
+        _jaccard_verify(_band_candidates(d), d.select("doc_id", "items", "n_dup"))
         .where(F.col("jaccard") >= JACCARD_TAU)
         .select(
             "id1",
@@ -530,7 +561,6 @@ def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_dup1") * F.col("n_dup2")).alias("pair_weight"),
         )
     )
-    return verified
 
 
 def _duck_collapse_reps_sql(
@@ -1106,7 +1136,7 @@ WHERE l.doc_id IS NULL
 #: ~3 orders of magnitude. SimHash needs all 48 packed bits live.
 _RAW_TOKEN_HASHES_SPARK_SQL = (
     "transform(array_distinct(split(trim(text), '\\\\s+')), "
-    "t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT))"
+    f"t -> {portable_hash60_spark_sql('t')})"
 )
 
 
@@ -1116,8 +1146,6 @@ def _simhash() -> Column:
     live (see _RAW_TOKEN_HASHES_SPARK_SQL). Pure expression fold — no
     UDF; the token-hash array is LET-bound so tokenize+md5 runs once
     per row, not once per bit."""
-    from .text import bind_once_sql
-
     terms = " + ".join(
         f"CASE WHEN size(filter(hs, h -> (h & {2 ** bit}) != 0)) * 2 "
         f"> size(hs) THEN CAST({2 ** bit} AS BIGINT) "
@@ -1200,7 +1228,7 @@ def _decon_ngrams_spark() -> str:
     """4-gram array with the token split LET-bound (evaluated once per
     row — see text.bind_once_sql; an inlined split re-runs per
     element under interpreted HOF eval)."""
-    from .text import _ngrams_spark_sql, bind_once_sql
+    from .text import _ngrams_spark_sql
 
     return bind_once_sql(
         "split(trim(text), '\\\\s+')", "t", _ngrams_spark_sql("t", DECON_N)
@@ -1558,76 +1586,22 @@ NEARDUP_PAGERANK_SQL = _build_neardup_pagerank_sql()
 INC_BATCH_MOD = 5
 
 
-def _band_rows(d: DataFrame) -> DataFrame:
-    """(doc_id, band, band_key) rows from a (doc_id, words, sig)
-    relation — the LSH index layout: one row per signature band, keyed
-    by the concatenated in-band hash values."""
-    return d.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.concat_ws(
-                            "-",
-                            *[
-                                F.col("sig")[i * MH_ROWS + r].cast("string")
-                                for r in range(MH_ROWS)
-                            ],
-                        ).alias("band_key"),
-                    )
-                    for i in range(MH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        "doc_id",
-        F.col("bk.band").alias("band"),
-        F.col("bk.band_key").alias("band_key"),
-    )
-
-
-def _band_structs_sql() -> str:
-    """Spark-SQL text twin of `_band_rows`'s explode payload: the
-    array of (band, band_key) structs from a `sig` column. Used where
-    the band explode runs once per micro-batch — building the ~30
-    Column objects of `_band_rows` through py4j inside a foreachBatch
-    body costs ~0.2 s per call site per epoch (the loop-chained-Column
-    trap); one generated SQL string is a single round-trip."""
-    structs = []
-    for i in range(MH_BANDS):
-        keys = ", ".join(
-            f"CAST(sig[{i * MH_ROWS + r}] AS STRING)"
-            for r in range(MH_ROWS)
-        )
-        structs.append(
-            f"named_struct('band', {i}, "
-            f"'band_key', concat_ws('-', {keys}))"
-        )
-    return ", ".join(structs)
-
-
-def _shingle_sig_row_expr() -> str:
-    """One LET-bound Spark-SQL expression producing
-    `struct(items, sig)` per row — shingle hashes + the MinHash
-    signature computed from them, with the md5-per-shingle projection
-    evaluated once per row (CollapseProject would otherwise inline it
-    into all 16 sig expressions). Shared by the batch and streaming
-    incremental dedup builders."""
-    from .text import bind_once_sql
-
-    sigs = ", ".join(
-        f"array_min(transform(hs, h -> ({a} * h + {b}) % {MH_P}))"
-        for a, b in MH_AB
-    )
-    sig_from_items = bind_once_sql(
-        f"transform(items_, x -> x % {MH_P})", "hs", f"array({sigs})"
-    )
-    return bind_once_sql(
+def _shingle_sigs(d: DataFrame, *cols: str) -> DataFrame:
+    """(*cols, items, sig) for each row of a relation with a `text`
+    column: its distinct 3-word shingle hashes and their MinHash
+    signature — the ONE Spark definition of the shingle-signature
+    table every shingle-banding operator indexes. One LET-bound
+    expression: the md5-per-shingle projection runs once per row
+    (CollapseProject would otherwise inline it into all 16 signature
+    expressions)."""
+    sig = _affine_minhash_sql(f"transform(items_, x -> x % {MH_P})")
+    row = bind_once_sql(
         _shingle_hashes_spark_sql(),
         "items_",
-        f"struct(items_ AS items, {sig_from_items} AS sig)",
+        f"struct(items_ AS items, {sig} AS sig)",
+    )
+    return d.select(*cols, F.expr(row).alias("s")).select(
+        *cols, F.col("s.items").alias("items"), F.col("s.sig").alias("sig")
     )
 
 
@@ -1669,65 +1643,34 @@ def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates ∝ batch collisions, and the verify join touches
     candidate corpus representatives only. Nothing is ever all-pairs.
     """
-    row_expr = _shingle_sig_row_expr()
     base = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     batch = caches.claim(
         "inc_minhash_batch_sigs",
-        base.where(F.col("doc_id") % INC_BATCH_MOD == 0)
-        .select("doc_id", F.expr(row_expr).alias("s"))
-        .select(
-            "doc_id",
-            F.col("s.items").alias("items"),
-            F.col("s.sig").alias("sig"),
-        ),
+        _shingle_sigs(base.where(F.col("doc_id") % INC_BATCH_MOD == 0), "doc_id"),
     )
     corpus = caches.claim(
         "inc_minhash_corpus_sigs",
-        collapse_exact_reps(base.where(F.col("doc_id") % INC_BATCH_MOD != 0))
-        .select("doc_id", "max_id", "n_dup", F.expr(row_expr).alias("s"))
-        .select(
+        _shingle_sigs(
+            collapse_exact_reps(base.where(F.col("doc_id") % INC_BATCH_MOD != 0)),
             "doc_id",
             "max_id",
             "n_dup",
-            F.col("s.items").alias("items"),
-            F.col("s.sig").alias("sig"),
         ),
     )
     # <SHINGLE_N-token docs have no shingles → all-NULL signatures;
     # exclude them from banding on BOTH engines (they can't near-dup)
-    cand = (
-        _band_rows(batch.where(F.size("items") >= 1))
-        .alias("b")
-        .join(
-            _band_rows(corpus.where(F.size("items") >= 1)).alias("c"),
-            (F.col("b.band") == F.col("c.band"))
-            & (F.col("b.band_key") == F.col("c.band_key")),
-        )
-        .groupBy(
-            F.col("b.doc_id").alias("batch_id"),
-            F.col("c.doc_id").alias("corpus_id"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_band_hits"))
+    cand = _band_candidates(
+        batch.where(F.size("items") >= 1), corpus.where(F.size("items") >= 1)
     )
-    wb = batch.select(F.col("doc_id").alias("batch_id"), F.col("items").alias("w1"))
-    wc = corpus.select(
-        F.col("doc_id").alias("corpus_id"),
-        F.col("items").alias("w2"),
-        "max_id",
-        "n_dup",
-    )
-    shared = F.size(F.array_intersect("w1", "w2")).cast("long")
-    n1 = F.size("w1").cast("long")
-    n2 = F.size("w2").cast("long")
-    scored = (
-        cand.join(wb, "batch_id")
-        .join(wc, "corpus_id")
-        .withColumn("jaccard", shared / (n1 + n2 - shared))
+    scored = _jaccard_verify(
+        cand,
+        batch.select("doc_id", "items"),
+        corpus.select("doc_id", "items", "max_id", "n_dup"),
     )
     dup = F.col("jaccard") >= JACCARD_TAU
-    per_batch = scored.groupBy("batch_id").agg(
-        F.sum("n_dup").alias("n_candidates"),
-        F.coalesce(F.sum(F.when(dup, F.col("n_dup"))), F.lit(0)).alias(
+    per_batch = scored.groupBy("id1").agg(
+        F.sum("n_dup2").alias("n_candidates"),
+        F.coalesce(F.sum(F.when(dup, F.col("n_dup2"))), F.lit(0)).alias(
             "n_dups"
         ),
         F.max(
@@ -1735,16 +1678,16 @@ def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dup,
                 F.struct(
                     F.col("jaccard").alias("j"),
-                    F.col("max_id").alias("cid"),
+                    F.col("max_id2").alias("cid"),
                 ),
             )
         ).alias("best"),
     )
     return (
-        batch.select(F.col("doc_id").alias("batch_id"))
-        .join(per_batch, "batch_id", "left")
+        batch.select(F.col("doc_id").alias("id1"))
+        .join(per_batch, "id1", "left")
         .select(
-            F.col("batch_id").alias("doc_id"),
+            F.col("id1").alias("doc_id"),
             F.coalesce(F.col("n_candidates"), F.lit(0)).cast("long").alias("n_candidates"),
             F.coalesce(F.col("n_dups"), F.lit(0)).cast("long").alias("n_dups"),
             (F.coalesce(F.col("n_dups"), F.lit(0)) > 0).alias("is_dup"),
@@ -2037,8 +1980,6 @@ def _sid_run_stream(
         .load()
     )
 
-    row_expr = _shingle_sig_row_expr()
-
     def manifest_path(epoch_id: int) -> str:
         return os.path.join(res_dir, f"manifest_{epoch_id}.json")
 
@@ -2088,17 +2029,7 @@ FROM sid_sigs
         # references are safe; nothing here is pickled to workers)
         s = batch_df.sparkSession
         gens = load_gens(epoch_id)  # disk-derived, restart/replay-safe
-        # a batch that lists input files is spread before the heavy
-        # md5-shingle/minhash expression when it has too few splits; a
-        # foreachBatch batch lists none and passes through (see
-        # sources.registry.spread_batch)
-        par = s.sparkContext.defaultParallelism
-        batch_df = spread_batch(batch_df, min(8, par))
-        sigs = batch_df.select("doc_id", F.expr(row_expr).alias("s")).select(
-            "doc_id",
-            F.col("s.items").alias("items"),
-            F.col("s.sig").alias("sig"),
-        )
+        sigs = _shingle_sigs(batch_df, "doc_id")
         if gens:
             # 3 plan references below (band rows, verify items, the
             # full-batch left-join spine): hash the shingle/sig chain
@@ -2392,31 +2323,8 @@ def _cc_large_small_star(pairs: DataFrame) -> DataFrame:
 # --- cross-source duplication audit (data-governance surface) -------------
 
 
-def _banded_candidate_pairs(d: DataFrame) -> DataFrame:
-    """Corpus-wide shingle-band candidate pairs (distinct id1 < id2)
-    from a `doc_id/items/sig` table — the ONE Spark definition of the
-    banding collision rule, shared by `cross_source_dup_audit` and
-    `corpus.split_leakage_audit` (single-definition rationale of
-    `_duck_affine_sigs_sql`: a tweak to the collision rule must reach
-    every operator documented as 'the same machinery')."""
-    bands = _band_rows(d.where(F.size("items") >= 1))
-    return (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2")
-        )
-        .distinct()
-    )
-
-
 def duck_sig_band_cand_ctes_sql(inner_col_sql: str, col_name: str) -> str:
-    """DuckDB mirror of `_banded_candidate_pairs`: the shared
+    """DuckDB mirror of `_shingle_sigs` → `_band_candidates`: the shared
     `d`/`bands`/`cand` MATERIALIZED CTE prefix (signature projection →
     band explode → distinct collision pairs) parameterized by the one
     extra per-doc column the consumer carries (`source`, or a computed
@@ -2475,52 +2383,38 @@ def cross_source_dup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly — the oracle deliberately stays the uncollapsed
     restatement, so the parity test proves the collapse
     value-preserving."""
-    row_expr = _shingle_sig_row_expr()
     base = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
     d = caches.claim(
         "cross_source_sigs",
-        collapse_exact_reps(base, key_cols=("source",))
-        .select("doc_id", "source", "n_dup", F.expr(row_expr).alias("s"))
-        .select(
+        _shingle_sigs(
+            collapse_exact_reps(base, key_cols=("source",)),
             "doc_id",
             "source",
             "n_dup",
-            F.col("s.items").alias("items"),
-            F.col("s.sig").alias("sig"),
         ),
     )
-    cand = _banded_candidate_pairs(d)
-    w1 = d.select(
-        F.col("doc_id").alias("id1"),
-        F.col("source").alias("s1"),
-        F.col("items").alias("w1"),
-        F.col("n_dup").alias("m1"),
-    )
-    w2 = d.select(
-        F.col("doc_id").alias("id2"),
-        F.col("source").alias("s2"),
-        F.col("items").alias("w2"),
-        F.col("n_dup").alias("m2"),
-    )
-    shared = F.size(F.array_intersect("w1", "w2")).cast("long")
-    n1 = F.size("w1").cast("long")
-    n2 = F.size("w2").cast("long")
     cross = (
-        cand.join(w1, "id1")
-        .join(w2, "id2")
-        .withColumn("jaccard", shared / (n1 + n2 - shared))
-        .where(
-            (F.col("jaccard") >= JACCARD_TAU) & (F.col("s1") != F.col("s2"))
+        _jaccard_verify(
+            _band_candidates(d.where(F.size("items") >= 1)),
+            d.select("doc_id", "items", "source", "n_dup"),
         )
-        .select("s1", "s2", (F.col("m1") * F.col("m2")).alias("w"))
+        .where(
+            (F.col("jaccard") >= JACCARD_TAU)
+            & (F.col("source1") != F.col("source2"))
+        )
+        .select(
+            "source1", "source2", (F.col("n_dup1") * F.col("n_dup2")).alias("w")
+        )
     )
     per_side = cross.select(
-        F.col("s1").alias("source"), F.col("s2").alias("partner"), "w"
+        F.col("source1").alias("source"), F.col("source2").alias("partner"), "w"
     ).union(
         cross.select(
-            F.col("s2").alias("source"), F.col("s1").alias("partner"), "w"
+            F.col("source2").alias("source"),
+            F.col("source1").alias("partner"),
+            "w",
         )
     )
     rollup = per_side.groupBy("source").agg(
@@ -2625,33 +2519,14 @@ def minhash_tau_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the oracle's banding; gate their C(n_dup,2) self-weight
             # out identically (r7 NULL-parity family)
             F.col("text").isNotNull().alias("has_text"),
-            _distinct_words(F.col("text")).alias("words"),
+            _distinct_words(F.col("text")).alias("items"),
             _minhash_signature().alias("sig"),
         )
         .localCheckpoint(eager=True)  # bands + both verify joins
     )
-    candidates = _minhash_band_candidates(d)
-    w1 = d.select(
-        F.col("doc_id").alias("id1"),
-        F.col("words").alias("w1"),
-        F.col("n_dup").alias("n_dup1"),
-    )
-    w2 = d.select(
-        F.col("doc_id").alias("id2"),
-        F.col("words").alias("w2"),
-        F.col("n_dup").alias("n_dup2"),
-    )
-    shared = F.size(F.array_intersect("w1", "w2")).cast("long")
-    n1 = F.size("w1").cast("long")
-    n2 = F.size("w2").cast("long")
-    scored = (
-        candidates.join(w1, "id1")
-        .join(w2, "id2")
-        .withColumn("jaccard", shared / (n1 + n2 - shared))
-        .select(
-            "jaccard", (F.col("n_dup1") * F.col("n_dup2")).alias("w")
-        )
-    )
+    scored = _jaccard_verify(
+        _band_candidates(d), d.select("doc_id", "items", "n_dup")
+    ).select("jaccard", (F.col("n_dup1") * F.col("n_dup2")).alias("w"))
     self_pairs = d.where((F.col("n_dup") >= 2) & F.col("has_text")).select(
         F.lit(1.0).cast("double").alias("jaccard"),
         F.expr("(n_dup * (n_dup - 1)) DIV 2").alias("w"),
@@ -2929,7 +2804,6 @@ def exact_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     one narrow generated HOF expression per row (position filter
     against ≤ doc-length intervals, zero Python). At 100 TB every
     stage is a keyed shuffle or a map."""
-    from .text import bind_once_sql
 
     spans = exact_substring_rewrite_spans(spark, sf_dir)
     iv = spans.groupBy(F.col("id2").alias("doc_id")).agg(

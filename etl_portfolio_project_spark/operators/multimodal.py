@@ -27,7 +27,6 @@ batches bounded.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -85,21 +84,12 @@ def decode_payload(payload: bytes, media_format: str):  # pragma: no cover
     (`multimodal_bmp_decode`), and compressed PNG with DEFLATE + CRC +
     all five scanline filters (`multimodal_png_decode`). Everything
     around this hook (schemas, Arrow batching, partitioning) is live
-    and tested with the deterministic fake below."""
+    and tested with the deterministic fake in `extract_features`."""
     raise NotImplementedError(
         "JPEG/video decode requires a codec library not present in "
         "this environment (PIL/ffmpeg); WAV/BMP/PNG have real "
         "in-harness codecs — see multimodal_{wav,bmp,png}_decode"
     )
-
-
-def _fake_features(payload: bytes) -> tuple[int, str, int]:
-    """Deterministic stand-in for decode+featurize: byte length, md5,
-    and an integer 'feature' derived from length (mirrored in SQL)."""
-    n = len(payload)
-    digest = hashlib.md5(payload).hexdigest()
-    feature_0 = (n * 2654435761) % 1000000007
-    return n, digest, feature_0
 
 
 def extract_features(media: DataFrame) -> DataFrame:

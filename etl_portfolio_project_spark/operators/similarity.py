@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import caches
-from ..sources.registry import balanced, load_table, spread_batch
+from ..sources.registry import balanced, load_table
 
 DIM = 64
 TOP_K = 10
@@ -122,10 +122,6 @@ def _dot_spark_sql(a: str, b: str) -> str:
 
 def _norm_spark_sql(a: str) -> str:
     return f"sqrt({_dot_spark_sql(a, a)})"
-
-
-def dot_expr(a: str, b: str) -> Column:
-    return F.expr(_dot_spark_sql(a, b))
 
 
 def norm_expr(a: str) -> Column:
@@ -4141,12 +4137,6 @@ FROM sei_vecs
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
         gens = load_gens(epoch_id)
-        # a batch that lists input files is spread before the per-row
-        # LSH folds when it has too few splits; a foreachBatch batch
-        # lists none and passes through (see
-        # sources.registry.spread_batch)
-        par = s.sparkContext.defaultParallelism
-        batch_df = spread_batch(batch_df, min(8, par))
         ok = F.expr(valid_vec_pred_spark())
         vecs = (
             batch_df.where(ok)

@@ -138,7 +138,7 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # empty-fold value; drift-sweep NULL-doc finding, r7)
     rolling = (
         "coalesce(aggregate(transform(tk, x -> "
-        f"CAST(conv(substring(md5(x), 1, 15), 16, 10) AS BIGINT) % {FP_P}), "
+        f"{portable_hash60_spark_sql('x')} % {FP_P}), "
         f"CAST(0 AS BIGINT), (acc, h) -> (acc * {FP_B} + h) % {FP_P}), "
         "CAST(0 AS BIGINT))"
     )

@@ -13,7 +13,6 @@ tables.
 from __future__ import annotations
 
 import os
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -115,55 +114,6 @@ def balanced(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df
-
-
-def spread_batch(df: DataFrame, target: int) -> DataFrame:
-    """Micro-batch twin of `balanced()` for foreachBatch bodies:
-    round-robin to `target` partitions ONLY if the batch's file splits
-    are fewer (a file-source trigger typically delivers ONE file read
-    as 1-3 splits, which would pin the heavy per-row work — md5
-    shingles, LSH folds — to as many tasks). The split count is
-    estimated from the batch's input files (same FilePartition math as
-    `balanced`) instead of a `df.rdd.getNumPartitions()` physical-
-    planning round trip; an unlistable file (remote scheme) falls back
-    to that exact probe. A production-size batch with ≥ `target`
-    splits passes through untouched — the repartition never LOWERS
-    parallelism.
-
-    A batch that reports no input files passes through unspread. That
-    is every foreachBatch batch today: Spark hands the body a
-    LogicalRDD, which lists no files. Spreading those 1-split epochs
-    through the exact probe costs more executor CPU than it saves at
-    harness scale."""
-    try:
-        sizes = [_local_file_size(f) for f in df.inputFiles()]
-    except (OSError, ValueError):
-        n = df.rdd.getNumPartitions()
-    else:
-        if not sizes:
-            return df
-        spark = df.sparkSession
-        max_pb = _size_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"),
-            128 * 1024 * 1024,
-        )
-        open_cost = _size_bytes(
-            spark.conf.get("spark.sql.files.openCostInBytes", "4m"),
-            4 * 1024 * 1024,
-        )
-        par = spark.sparkContext.defaultParallelism
-        n = _scan_split_estimate(sum(sizes), len(sizes), par, max_pb, open_cost)
-    return df.repartition(target) if n < target else df
-
-
-def _local_file_size(uri: str) -> int:
-    """Size of a local input file given as a path or a `file:` URI in
-    any of its forms (`file:/p`, `file:///p`); ValueError for any other
-    scheme."""
-    u = urlparse(uri)
-    if u.scheme not in ("", "file"):
-        raise ValueError(f"not a local file: {uri}")
-    return os.path.getsize(unquote(u.path))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

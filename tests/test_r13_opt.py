@@ -14,11 +14,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from etl_portfolio_project_spark.sources.registry import (
-    _local_file_size,
     _scan_split_estimate,
     balanced,
     load_table,
-    spread_batch,
 )
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -140,24 +138,6 @@ def test_balanced_untagged_frame_falls_back(spark):
     out = balanced(df)
     par = spark.sparkContext.defaultParallelism
     assert out.rdd.getNumPartitions() == par
-
-
-def test_spread_batch_spreads_a_file_batch_and_passes_others(spark):
-    """A 1-split file batch is spread to `target`; a batch without
-    input files (what foreachBatch delivers) passes through as is."""
-    df = spark.read.parquet(f"{SF_DIR}/documents.parquet").coalesce(1)
-    assert spread_batch(df, 4).rdd.getNumPartitions() == 4
-    ranged = spark.range(100).coalesce(1)
-    assert spread_batch(ranged, 4) is ranged
-
-
-def test_local_file_size_accepts_every_file_uri_form(tmp_path):
-    f = tmp_path / "a b.bin"
-    f.write_bytes(b"x" * 37)
-    for uri in (str(f), f"file:{f}", f"file://{f}", f.as_uri()):
-        assert _local_file_size(uri) == 37, uri
-    with pytest.raises(ValueError):
-        _local_file_size("s3a://bucket/part-0.parquet")
 
 
 def test_lazy_ranged_checkpoint_branch_consistency(spark):

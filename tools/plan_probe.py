@@ -1,6 +1,6 @@
 """Optimization-round measurement probe (guide §1).
 
-Captures `.explain("formatted")` and (optionally) isolated best-of-N
+Captures normalized optimized plans and (optionally) isolated best-of-N
 noop-sink timings for named queries, without running the full bench.
 
 Usage:
@@ -11,11 +11,15 @@ Usage:
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS   (default: the CPUs this process may run on).
 
-Plan files land as <plans-dir>/<query>_<suffix>.txt. Timings print as
-one JSON line per query. Plans are captured from the SAME DataFrame
-object that gets timed, in a fresh-claims session (caches released
-first) so the cold plan is what's recorded (matches test_plans.py's
-convention of releasing the shared tier before pinning shapes).
+Plan files land as <plans-dir>/<query>_<suffix>.txt: the optimized
+logical plan, normalized (`normalize_plan`) so that two captures of the
+same code diff empty and captures of two commits diff only where the
+plans differ. The header carries the physical plan's Exchange count.
+Timings print as one JSON line per query. Plans are captured from the
+SAME DataFrame object that gets timed, in a fresh-claims session
+(caches released first) so the cold plan is what's recorded (matches
+test_plans.py's convention of releasing the shared tier before pinning
+shapes).
 """
 
 from __future__ import annotations
@@ -23,11 +27,28 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
+
+#: session-local numbering in plan text: expression ids, PySpark's
+#: global lambda-variable counter, exchange plan ids, and the RDD
+#: attributes of a checkpointed relation
+_PLAN_NOISE = [
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"\bx_\d+#"), "x_#"),
+    (re.compile(r" ?\[plan_id=\d+\]"), ""),
+    (re.compile(r"LogicalRDD \[[^\]]*\], false"), "LogicalRDD"),
+]
+
+
+def normalize_plan(plan: str) -> str:
+    for pattern, repl in _PLAN_NOISE:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> None:
@@ -65,14 +86,16 @@ def main() -> None:
         caches.release_all()  # fresh-claims build: cold plan shape
         df = spec.builder(spark, sf_dir)
         if args.plans_dir:
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            qe = df._jdf.queryExecution()
+            physical = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
+            n_ex = physical.count("Exchange")
+            n_py = physical.count("EvalPython") + physical.count("MapInPandas") \
+                + physical.count("MapInArrow") + physical.count("FlatMapGroupsInPandas")
             path = os.path.join(
                 _REPO, args.plans_dir, f"{name}_{args.suffix}.txt"
             )
             # ADVICE r13: builders run eager claim jobs at BUILD time,
-            # so claimed relations print as InMemoryTableScan subtrees
+            # so claimed relations print as InMemoryRelation subtrees
             # here (their build cost is charged when the builder runs,
             # not inside this captured plan) — same convention
             # test_plans.py pins (fresh claims, cold shared tier only
@@ -80,15 +103,13 @@ def main() -> None:
             header = (
                 "-- plan_probe capture: fresh-claims build "
                 "(caches.release_all() before builder). Claimed "
-                "relations appear as InMemoryTableScan; their build "
+                "relations appear as InMemoryRelation; their build "
                 "cost is paid at claim time inside the builder, "
                 "outside this plan.\n"
+                f"-- physical plan: Exchange={n_ex}, PythonNodes={n_py}\n"
             )
             with open(path, "w") as f:
-                f.write(header + plan)
-            n_ex = plan.count("Exchange")
-            n_py = plan.count("EvalPython") + plan.count("MapInPandas") \
-                + plan.count("MapInArrow") + plan.count("FlatMapGroupsInPandas")
+                f.write(header + normalize_plan(qe.optimizedPlan().toString()))
             print(f"{name}: plan -> {path} "
                   f"(Exchange={n_ex}, PythonNodes={n_py})")
         best = float("inf")

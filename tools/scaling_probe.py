@@ -212,13 +212,9 @@ def probe_sf(spark, sf_dir: str, label: str) -> dict:
     r["pf_pairs"] = out
 
     # 2. MinHash-LSH (word sets)
-    dm = block.select(
-        "doc_id",
-        dedup._distinct_words(F.col("text")).alias("words"),
-        dedup._minhash_signature().alias("sig"),
-    )
+    dm = block.select("doc_id", dedup._minhash_signature().alias("sig"))
     r["mh_candidates"], _ = timed(
-        lambda: dedup._minhash_band_candidates(dm).count()
+        lambda: dedup._band_candidates(dm).count()
     )
     out, r["mh_secs"] = timed(
         lambda: dedup.minhash_lsh_neardup(spark, sf_dir).count()
@@ -400,29 +396,9 @@ def probe_r4_new(spark, sf_dir: str, label: str) -> dict:
     r = {"sf": label}
 
     # cross-source dup audit: band-candidate count vs verified pairs
-    row_expr = dedup._shingle_sig_row_expr()
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "source", F.expr(row_expr).alias("s"))
-        .select(
-            "doc_id",
-            "source",
-            F.col("s.items").alias("items"),
-            F.col("s.sig").alias("sig"),
-        )
-    )
-    bands = dedup._band_rows(d.where(F.size("items") >= 1))
+    d = dedup._shingle_sigs(load_table(spark, sf_dir, "documents"), "doc_id")
     r["xs_candidates"], _ = timed(
-        lambda: bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select("a.doc_id", "b.doc_id")
-        .distinct()
-        .count()
+        lambda: dedup._band_candidates(d.where(F.size("items") >= 1)).count()
     )
     out, r["xs_secs"] = timed(
         lambda: dedup.cross_source_dup_audit(spark, sf_dir)
@@ -1548,7 +1524,7 @@ def probe_r11_viral(spark) -> dict:
     m=1,000-copy exact-dup cluster, the UNCOLLAPSED banding baseline
     emits O(m²) candidate pairs from that one cluster (~m²/2 ≈ 500k)
     while the collapsed paths see O(m) rows — measured from the ops'
-    OWN helpers (collapse_exact_reps → _minhash_band_candidates), plus
+    OWN helpers (collapse_exact_reps → _band_candidates), plus
     end-to-end walls of all four rewired banding consumers on the
     viral corpus."""
     from pyspark.sql import functions as F
@@ -1566,12 +1542,10 @@ def probe_r11_viral(spark) -> dict:
 
     # uncollapsed baseline: band candidates straight off the raw block
     raw = block.select(
-        "doc_id",
-        dedup._distinct_words(F.col("text")).alias("words"),
-        dedup._minhash_signature().alias("sig"),
+        "doc_id", dedup._minhash_signature().alias("sig")
     ).localCheckpoint(eager=True)
     r["mh_cand_uncollapsed"], r["mh_uncollapsed_secs"] = timed(
-        lambda: dedup._minhash_band_candidates(raw).count()
+        lambda: dedup._band_candidates(raw).count()
     )
 
     # collapsed path (the shipped op's own stages)
@@ -1586,7 +1560,7 @@ def probe_r11_viral(spark) -> dict:
         dedup._minhash_signature().alias("sig"),
     ).localCheckpoint(eager=True)
     r["mh_cand_collapsed"], r["mh_collapsed_secs"] = timed(
-        lambda: dedup._minhash_band_candidates(collapsed).count()
+        lambda: dedup._band_candidates(collapsed).count()
     )
 
     # PPJoin twin (r11 clusters rewire): uncollapsed prefix-filter
