@@ -97,6 +97,13 @@ def _load_receipt() -> dict:
     return rec
 
 
+def codegen_compiles(spark) -> int:
+    """Janino compiles so far in this JVM, i.e. generated-code cache
+    misses (in local mode the executors share the driver's JVM)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -188,6 +195,9 @@ def main() -> None:
     # timed runs): lets a reader attribute a single-query smear to a
     # load spike without cross-referencing external monitoring
     query_load_1m: dict[str, float] = {}
+    # Janino compiles during each query's LAST run: nonzero means the
+    # code cache thrashed or the query generates different code per run
+    compiles: dict[str, int] = {}
 
     # Watchdog cancels ONLY the timed query's job group, and only if
     # that query is still the current generation — a Timer that fires
@@ -226,11 +236,14 @@ def main() -> None:
             watchdog.start()
             # time the builder too: streaming builders execute the
             # whole readStream→sink job inside the builder call
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             try:
                 df = spec.builder(spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
                 best = min(best, time.perf_counter() - t0)
+                if run_i == RUNS - 1:
+                    compiles[name] = codegen_compiles(spark) - c0
             except Exception:
                 err = traceback.format_exc(limit=3)[-500:]
                 break
@@ -299,6 +312,7 @@ def main() -> None:
         "load_before": load_before,
         "load_after": {**_load_receipt(), "jvm_cpu_sec": _jvm_cpu_sec()},
         "query_load_1m": query_load_1m,
+        "codegen_compiles": compiles,
     }
     # Absolute perf anchor (r4 VERDICT #5): if tools/oracle_bench.py
     # has recorded DuckDB oracle wall times at this SF, publish the

@@ -1292,15 +1292,6 @@ _RECONFIRM = [
     "events_tumbling_5min",
     "stream_tumbling_5min",
     "loan_final",
-    # r14 TEMPORARY infra padding (rotation_check warned:
-    # sources/registry.py + session.py changed — balanced()'s split
-    # estimate now reads session conf and probes directories, and the
-    # session builder reordered env-conf application): one §2-surface
-    # rep and one classic balanced()-consumer text rep re-prove the
-    # blast radius on driver hardware. Drop these two after the r14
-    # grade lands green.
-    "src_join_projection",
-    "top_words",
 ]
 
 

@@ -1851,6 +1851,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from .. import tmpdirs
+    from ..streaming.events import read_epoch_outputs
 
     root = tmpdirs.claim("stream_inc_dedup", "stream_inc_dedup_")
     in_dir = os.path.join(root, "in")
@@ -1859,7 +1860,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(in_dir)
     _sid_write_batches(sf_dir, in_dir, range(SD_NBATCH))
     _sid_run_stream(spark, in_dir, res_dir, idx_root)
-    return spark.read.parquet(os.path.join(res_dir, "epoch_*")).select(
+    return read_epoch_outputs(spark, res_dir).select(
         "doc_id", "batch_id", "n_candidates", "n_dups", "is_dup"
     )
 

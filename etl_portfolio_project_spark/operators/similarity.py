@@ -3952,6 +3952,7 @@ def stream_embedding_index_ingest(
     import os
 
     from .. import tmpdirs
+    from ..streaming.events import read_epoch_outputs
 
     root = tmpdirs.claim("stream_emb_index", "stream_emb_idx_")
     in_dir = os.path.join(root, "in")
@@ -3960,7 +3961,7 @@ def stream_embedding_index_ingest(
     os.makedirs(in_dir)
     _sei_write_batches(sf_dir, in_dir, range(SE_NBATCH))
     _sei_run_stream(spark, in_dir, res_dir, idx_root)
-    return spark.read.parquet(os.path.join(res_dir, "epoch_*")).select(
+    return read_epoch_outputs(spark, res_dir).select(
         "vec_id",
         "batch_id",
         "n_candidates",

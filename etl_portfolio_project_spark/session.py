@@ -8,6 +8,10 @@ Local-mode defaults mirror what we would set on a real cluster:
   cluster this would be ~2-3× total cores (AQE coalesces down).
 - Tungsten pages sized from the heap (`page_size_bytes`), not from
   the core count.
+- The generated-code cache sized from the heap
+  (`codegen_cache_entries`, one entry per MiB), not Spark's fixed 100
+  entries, so a long-lived session stops recompiling the classes it
+  already compiled.
 - Arrow enabled for the (rare) pandas-interchange paths.
 - Session timezone pinned to UTC so date/timestamp semantics are
   reproducible and match the DuckDB oracle.
@@ -41,6 +45,19 @@ def page_size_bytes(max_heap_bytes: int) -> int:
     return min(max(1 << (per_page - 1).bit_length(), 1 << 20), 64 << 20)
 
 
+def codegen_cache_entries(max_heap_bytes: int) -> int:
+    """`spark.sql.codegen.cache.maxEntries` for JVMs whose largest heap
+    is `max_heap_bytes`: one entry per MiB.
+
+    A cached class retains ~27 KB of heap, so a full cache stays under
+    ~2.7% of the heap. Spark's fixed 100 entries hold only the loan
+    pipeline's 12 classes; one corpus_index iteration generates ~290
+    and the whole registry ~3,060, so past 100 every repeat of a query
+    misses, recompiles in Janino and runs interpreted until the JIT
+    catches up again."""
+    return max_heap_bytes >> 20
+
+
 def get_spark(
     app_name: str = "etl_portfolio_project_spark",
     cpus: int | str | None = None,
@@ -51,7 +68,8 @@ def get_spark(
 
     `cpus` falls back to SPARK_GRAFT_CPUS, then to the CPUs this
     process may run on. A reused session keeps the static confs it was
-    started with, the page size among them."""
+    started with, the page size and the codegen cache size among
+    them."""
     cpus = (
         cpus
         or os.environ.get("SPARK_GRAFT_CPUS")
@@ -85,7 +103,7 @@ def get_spark(
             ) from e
         conf.update({k: str(v) for k, v in overrides.items()})
     # derived from the heap that the final conf asks for; an explicit
-    # page size from either source above wins
+    # page size or cache size from either source above wins
     max_heap = max(
         _size_bytes(conf[k], 0)
         for k in ("spark.driver.memory", "spark.executor.memory")
@@ -93,6 +111,10 @@ def get_spark(
     )
     conf.setdefault(
         "spark.buffer.pageSize", f"{page_size_bytes(max_heap) >> 20}m"
+    )
+    conf.setdefault(
+        "spark.sql.codegen.cache.maxEntries",
+        str(codegen_cache_entries(max_heap)),
     )
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
     for k, v in conf.items():

@@ -187,6 +187,27 @@ def record_stream_stats(name: str, q) -> None:
         )
 
 
+class NoEpochOutputError(FileNotFoundError):
+    """A foreachBatch sink root holds no `epoch_<id>` directory."""
+
+
+def read_epoch_outputs(spark: SparkSession, root: str) -> DataFrame:
+    """Read the per-epoch parquet directories (`epoch_<id>`) that a
+    foreachBatch sink wrote under `root`.
+
+    The directories are listed here instead of handing Spark an
+    `epoch_*` glob: Spark probes a single read path for a file-sink
+    metadata log, and probing a glob logs a FileNotFoundException with
+    its stack trace on every read."""
+    import glob
+    import os
+
+    paths = sorted(glob.glob(os.path.join(root, "epoch_*")))
+    if not paths:
+        raise NoEpochOutputError(f"no epoch_<id> output under {root}")
+    return spark.read.parquet(*paths)
+
+
 def _run_to_table(
     result: DataFrame, name: str, mode: str, partitions: int = 1
 ) -> None:
@@ -749,7 +770,7 @@ def stream_to_parquet_sink(
     a crash-replay of a committed-but-unacknowledged epoch rewrites
     the same data instead of appending a duplicate — a bare
     mode("append") here would be at-least-once, not idempotent.
-    Returns the output ROOT; read with `{out}/epoch_*`."""
+    Returns the output ROOT; read it with `read_epoch_outputs`."""
     import os as _os
 
     out = out_dir or tmpdirs.claim("stream_sink", "stream_sink_")
@@ -964,7 +985,7 @@ def stream_checkpoint_restart_ingest(
     run_phase()  # same checkpoint → resumes, ingests ONLY file b
 
     return (
-        spark.read.parquet(os.path.join(out, "epoch_*"))
+        read_epoch_outputs(spark, out)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

@@ -4,10 +4,14 @@ registry grows (the round-2 bench artifact was lost to a ~4 KB line)."""
 
 from __future__ import annotations
 
+import itertools
 import json
+from types import SimpleNamespace
 
 import bench
 from etl_portfolio_project_spark import api
+
+from .conftest import SF_SMALL
 
 
 def test_compact_line_stays_small_at_full_registry_size():
@@ -106,3 +110,39 @@ def test_canary_lists_are_registered_queries():
     # and they must stay disjoint tiers — a query in both would be
     # double-decomposed
     assert not set(bench.CANARY_QUERIES) & set(bench.HEAVY_CANARY_QUERIES)
+
+
+def test_detail_records_second_run_codegen_compiles(
+    spark, tmp_path, monkeypatch
+):
+    """BENCH_DETAIL.json carries, per query, the Janino compiles of its
+    second run: 0 for a query whose classes are cached, nonzero for one
+    that generates different code on every run."""
+    fresh = itertools.count(1000)
+    monkeypatch.setattr(
+        api,
+        "REGISTRY",
+        {
+            "same_code": SimpleNamespace(
+                builder=lambda s, _sf: s.range(8).selectExpr(
+                    "id * 5 + 11 AS v"
+                )
+            ),
+            "new_code": SimpleNamespace(
+                builder=lambda s, _sf: s.range(8).selectExpr(
+                    f"id * {next(fresh)} AS v"
+                )
+            ),
+        },
+    )
+    monkeypatch.setattr(bench, "CANARY_QUERIES", [])
+    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_SMALL)
+    monkeypatch.delenv("SPARK_GRAFT_CONF_JSON", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_SNAPSHOT", raising=False)
+    bench.main()
+    detail = json.loads((tmp_path / "BENCH_DETAIL.json").read_text())
+    assert detail["errors"] == {}
+    assert detail["codegen_compiles"]["same_code"] == 0
+    assert detail["codegen_compiles"]["new_code"] > 0
+    assert set(detail["codegen_compiles"]) == set(detail["queries"])

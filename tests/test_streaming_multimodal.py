@@ -56,8 +56,14 @@ def test_foreachbatch_parquet_sink(spark, tmp_path):
     from etl_portfolio_project_spark.sources.registry import load_table
 
     n_in = load_table(spark, SF_SMALL, "events").count()
-    n_out = spark.read.parquet(out + "/epoch_*").count()
+    n_out = E.read_epoch_outputs(spark, out).count()
     assert n_in == n_out
+
+
+def test_read_epoch_outputs_names_an_empty_sink(spark, tmp_path):
+    (tmp_path / "_checkpoint").mkdir()
+    with pytest.raises(E.NoEpochOutputError, match="epoch_"):
+        E.read_epoch_outputs(spark, str(tmp_path))
 
 
 def test_multimodal_decode_stub_is_marked(spark):
@@ -686,7 +692,7 @@ def test_stream_inc_dedup_checkpoint_restart(spark, tmp_path):
     D._sid_run_stream(
         spark, str(in_dir), str(res_dir), str(idx_root), str(ck)
     )
-    phase1 = spark.read.parquet(str(res_dir / "epoch_*")).collect()
+    phase1 = E.read_epoch_outputs(spark, str(res_dir)).collect()
     assert sorted(r.doc_id for r in phase1) == [0, 1]
 
     # phase 2: two more batches arrive; RESTART from the checkpoint
@@ -696,7 +702,7 @@ def test_stream_inc_dedup_checkpoint_restart(spark, tmp_path):
         spark, str(in_dir), str(res_dir), str(idx_root), str(ck)
     )
 
-    rows = spark.read.parquet(str(res_dir / "epoch_*")).select(
+    rows = E.read_epoch_outputs(spark, str(res_dir)).select(
         "doc_id", "batch_id", "n_candidates", "n_dups", "is_dup"
     ).collect()
     # (a) no duplicate results across the restart
@@ -941,14 +947,14 @@ def test_stream_embedding_index_checkpoint_restart(spark, tmp_path):
     S._sei_run_stream(
         spark, str(in_dir), str(res_dir), str(idx_root), str(ck)
     )
-    phase1 = spark.read.parquet(str(res_dir / "epoch_*")).collect()
+    phase1 = E.read_epoch_outputs(spark, str(res_dir)).collect()
     assert sorted(r.vec_id for r in phase1) == [0, 1]
 
     S._sei_write_batches(str(corpus), str(in_dir), [2, 3])
     S._sei_run_stream(
         spark, str(in_dir), str(res_dir), str(idx_root), str(ck)
     )
-    rows = spark.read.parquet(str(res_dir / "epoch_*")).select(
+    rows = E.read_epoch_outputs(spark, str(res_dir)).select(
         "vec_id", "n_candidates", "n_sim", "nearest_id", "is_novel"
     ).collect()
     # (a) exactly one decision per vector across the restart
