@@ -109,7 +109,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    from etl_portfolio_project_spark import api, caches
+    from etl_portfolio_project_spark import api
     from etl_portfolio_project_spark.session import get_spark
 
     load_before = _load_receipt()
@@ -156,133 +156,13 @@ def main() -> None:
     # ambient session/machine drift by construction, while a suite
     # move WITHOUT a canary move is a real regression — the
     # decomposition PERF_ANCHOR previously reconstructed by hand.
-    canary: dict[str, float] = {}
-    for name in CANARY_QUERIES:
-        spec = api.REGISTRY.get(name)
-        if spec is None:
-            continue
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            try:
-                spec.builder(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-            except Exception:
-                break
-        if best < float("inf"):
-            canary[name] = round(best, 3)
-        caches.release_all()
-        spark._jvm.System.gc()
+    canary = time_queries(
+        spark, sf_dir, [n for n in CANARY_QUERIES if n in api.REGISTRY]
+    )["seconds"]
 
-    # Best of RUNS full build+execute cycles per query. Run 1 pays the
-    # one-time Janino codegen of each stage; the min reflects
-    # steady-state throughput (what matters at scale, where codegen is
-    # amortized over hours) and is robust to transient co-process load.
-    # Each cycle rebuilds the DataFrame, so nothing is reused between
-    # runs — AQE re-plans and all shuffles/streams re-execute.
-    RUNS = 2
-    # Per-query fault isolation (round-1 lesson: one broken query
-    # zeroed the whole bench). Every query gets try/except plus a
-    # watchdog that cancels its Spark jobs/streams after TIMEOUT so a
-    # hung stream can't stall the harness; failures are reported in
-    # "errors" and the JSON line ALWAYS prints.
-    timeout_s = float(os.environ.get("SPARK_GRAFT_QUERY_TIMEOUT", "300"))
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    # per-query ambient-load sample (taken right after each query's
-    # timed runs): lets a reader attribute a single-query smear to a
-    # load spike without cross-referencing external monitoring
-    query_load_1m: dict[str, float] = {}
-    # Janino compiles during each query's LAST run: nonzero means the
-    # code cache thrashed or the query generates different code per run
-    compiles: dict[str, int] = {}
-
-    # Watchdog cancels ONLY the timed query's job group, and only if
-    # that query is still the current generation — a Timer that fires
-    # just as the query completes must not cancel the NEXT query's
-    # jobs (ADVICE r2: the old cancelAllJobs raced exactly that way).
-    # Streams are stopped too (their jobs run on stream threads,
-    # outside the job group), guarded by the same generation check.
-    gen_box = {"gen": 0}
-
-    def _make_cancel(my_gen: int, group: str):
-        def _cancel() -> None:
-            if gen_box["gen"] != my_gen:
-                return  # query already finished; don't touch successor
-            try:
-                for q in spark.streams.active:
-                    q.stop()
-            except Exception:
-                pass
-            try:
-                spark.sparkContext.cancelJobGroup(group)
-            except Exception:
-                pass
-
-        return _cancel
-
-    for name, spec in sorted(api.REGISTRY.items()):
-        best = float("inf")
-        err: str | None = None
-        for run_i in range(RUNS):
-            gen_box["gen"] += 1
-            group = f"bench-{name}-{run_i}"
-            spark.sparkContext.setJobGroup(group, name, True)
-            watchdog = threading.Timer(
-                timeout_s, _make_cancel(gen_box["gen"], group)
-            )
-            watchdog.start()
-            # time the builder too: streaming builders execute the
-            # whole readStream→sink job inside the builder call
-            c0 = codegen_compiles(spark)
-            t0 = time.perf_counter()
-            try:
-                df = spec.builder(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-                if run_i == RUNS - 1:
-                    compiles[name] = codegen_compiles(spark) - c0
-            except Exception:
-                err = traceback.format_exc(limit=3)[-500:]
-                break
-            finally:
-                gen_box["gen"] += 1  # invalidate any in-flight Timer
-                watchdog.cancel()
-                # PySpark's SparkContext has no clearJobGroup(); reset
-                # the thread-local property directly
-                spark.sparkContext.setLocalProperty(
-                    "spark.jobGroup.id", None
-                )
-        if best < float("inf"):
-            timings[name] = round(best, 3)
-        else:
-            errors[name] = err or "unknown"
-        try:
-            with open("/proc/loadavg") as f:
-                query_load_1m[name] = float(f.read().split()[0])
-        except (OSError, ValueError, IndexError):
-            pass
-        # Isolate queries from each other: drop this query's claimed
-        # caches before the next one starts (outside the timed window).
-        # NOTE: run 2's re-claim already unpersisted run 1's generation
-        # (one live generation per key), so there is no cross-run data
-        # reuse to protect — this only clears the LAST run's leftovers.
-        # Left live, every cached plan tree taxes the analysis of all
-        # later queries via CacheManager plan matching and accumulates
-        # executor memory.
-        caches.release_all()
-        # Session-age hygiene (r5 verdict #4, root-caused in r6): JVM
-        # garbage accumulated across a long bench session taxes the
-        # large-collect queries — measured src_join_projection 1.29 s
-        # fresh → 1.59 s after 50 assorted queries → 1.25 s after a
-        # full GC. The headline is the SUM of timed regions, so a GC
-        # here (outside the timed window) costs wall only, and makes
-        # per-query numbers comparable across rounds regardless of
-        # registry size/order (grading_window reorders every round —
-        # that position shift was r5's "uniform +0.3 s drift").
-        spark._jvm.System.gc()
+    suite = time_queries(spark, sf_dir, sorted(api.REGISTRY))
+    timings = suite["seconds"]
+    errors = suite["errors"]
 
     total = round(sum(timings.values()), 3)
     run_ts = int(time.time())
@@ -293,8 +173,7 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "errors": errors,
-        # distinguishes builder-committed snapshots from the driver's
-        # in-place overwrite of BENCH_DETAIL.json (VERDICT r3 #7)
+        # matches the compact line's run_ts (provenance)
         "run_unix_ts": run_ts,
         "runner": os.environ.get("SPARK_GRAFT_RUNNER", "unspecified"),
         # fresh-session fixed-subset drift reference (r9): compare to
@@ -311,8 +190,8 @@ def main() -> None:
         # co-tenant load, decomposable without prose
         "load_before": load_before,
         "load_after": {**_load_receipt(), "jvm_cpu_sec": _jvm_cpu_sec()},
-        "query_load_1m": query_load_1m,
-        "codegen_compiles": compiles,
+        "query_load_1m": suite["load_1m"],
+        "codegen_compiles": suite["codegen_compiles"],
     }
     # Absolute perf anchor (r4 VERDICT #5): if tools/oracle_bench.py
     # has recorded DuckDB oracle wall times at this SF, publish the
@@ -344,21 +223,127 @@ def main() -> None:
         pass
     with open(os.path.join(_REPO, "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
-    # optional per-round builder snapshot (committed alongside, so the
-    # driver overwrite can't erase per-query history again)
-    snap = os.environ.get("SPARK_GRAFT_BENCH_SNAPSHOT")
-    if snap:
-        # the value lands in os.path.join(_REPO, ...): reject absolute
-        # paths / directory components so it can't escape the repo
-        if os.path.basename(snap) != snap or snap in (".", ".."):
-            raise ValueError(
-                f"SPARK_GRAFT_BENCH_SNAPSHOT must be a bare filename, "
-                f"got {snap!r}"
-            )
-        with open(os.path.join(_REPO, snap), "w") as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
-
     print(json.dumps(compact_line(timings, errors, total, sf, run_ts)))
+
+
+#: Best of RUNS full build+execute cycles per query. Run 1 pays the
+#: one-time Janino codegen of each stage; the min reflects steady-state
+#: throughput (what matters at scale, where codegen is amortized over
+#: hours) and is robust to transient co-process load. Each cycle
+#: rebuilds the DataFrame, so nothing is reused between runs — AQE
+#: re-plans and all shuffles/streams re-execute.
+RUNS = 2
+
+
+def time_queries(spark, sf_dir: str, names: list[str]) -> dict:
+    """Build and fully execute each registered query in `names` over
+    `sf_dir`, RUNS times, and return one record of per-query dicts:
+    "seconds" (best run), "codegen_compiles" (Janino compiles during
+    the LAST run: nonzero means the code cache thrashed or the query
+    generates different code per run), "errors" (a traceback tail for
+    each query that raised) and "load_1m" (the 1-minute loadavg right
+    after the query, so a single-query smear can be attributed to a
+    load spike without external monitoring).
+
+    Per-query fault isolation (round-1 lesson: one broken query zeroed
+    the whole bench): every query gets try/except plus a watchdog that
+    cancels its Spark jobs/streams after SPARK_GRAFT_QUERY_TIMEOUT
+    seconds, so a hung stream can't stall the caller."""
+    from etl_portfolio_project_spark import api, caches
+
+    timeout_s = float(os.environ.get("SPARK_GRAFT_QUERY_TIMEOUT", "300"))
+    rec: dict[str, dict] = {
+        "seconds": {}, "codegen_compiles": {}, "errors": {}, "load_1m": {}
+    }
+
+    # Watchdog cancels ONLY the timed query's job group, and only if
+    # that query is still the current generation — a Timer that fires
+    # just as the query completes must not cancel the NEXT query's
+    # jobs (ADVICE r2: the old cancelAllJobs raced exactly that way).
+    # Streams are stopped too (their jobs run on stream threads,
+    # outside the job group), guarded by the same generation check.
+    gen_box = {"gen": 0}
+
+    def _make_cancel(my_gen: int, group: str):
+        def _cancel() -> None:
+            if gen_box["gen"] != my_gen:
+                return  # query already finished; don't touch successor
+            try:
+                for q in spark.streams.active:
+                    q.stop()
+            except Exception:
+                pass
+            try:
+                spark.sparkContext.cancelJobGroup(group)
+            except Exception:
+                pass
+
+        return _cancel
+
+    for name in names:
+        spec = api.REGISTRY[name]
+        best = float("inf")
+        err: str | None = None
+        for run_i in range(RUNS):
+            gen_box["gen"] += 1
+            group = f"bench-{name}-{run_i}"
+            spark.sparkContext.setJobGroup(group, name, True)
+            watchdog = threading.Timer(
+                timeout_s, _make_cancel(gen_box["gen"], group)
+            )
+            watchdog.start()
+            # time the builder too: streaming builders execute the
+            # whole readStream→sink job inside the builder call
+            c0 = codegen_compiles(spark)
+            t0 = time.perf_counter()
+            try:
+                df = spec.builder(spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+                best = min(best, time.perf_counter() - t0)
+                if run_i == RUNS - 1:
+                    rec["codegen_compiles"][name] = (
+                        codegen_compiles(spark) - c0
+                    )
+            except Exception:
+                err = traceback.format_exc(limit=3)[-500:]
+                break
+            finally:
+                gen_box["gen"] += 1  # invalidate any in-flight Timer
+                watchdog.cancel()
+                # PySpark's SparkContext has no clearJobGroup(); reset
+                # the thread-local property directly
+                spark.sparkContext.setLocalProperty(
+                    "spark.jobGroup.id", None
+                )
+        if best < float("inf"):
+            rec["seconds"][name] = round(best, 3)
+        else:
+            rec["errors"][name] = err or "unknown"
+        try:
+            with open("/proc/loadavg") as f:
+                rec["load_1m"][name] = float(f.read().split()[0])
+        except (OSError, ValueError, IndexError):
+            pass
+        # Isolate queries from each other: drop this query's claimed
+        # caches before the next one starts (outside the timed window).
+        # NOTE: run 2's re-claim already unpersisted run 1's generation
+        # (one live generation per key), so there is no cross-run data
+        # reuse to protect — this only clears the LAST run's leftovers.
+        # Left live, every cached plan tree taxes the analysis of all
+        # later queries via CacheManager plan matching and accumulates
+        # executor memory.
+        caches.release_all()
+        # Session-age hygiene (r5 verdict #4, root-caused in r6): JVM
+        # garbage accumulated across a long bench session taxes the
+        # large-collect queries — measured src_join_projection 1.29 s
+        # fresh → 1.59 s after 50 assorted queries → 1.25 s after a
+        # full GC. The headline is the SUM of timed regions, so a GC
+        # here (outside the timed window) costs wall only, and makes
+        # per-query numbers comparable across rounds regardless of
+        # registry size/order (grading_window reorders every round —
+        # that position shift was r5's "uniform +0.3 s drift").
+        spark._jvm.System.gc()
+    return rec
 
 
 def compact_line(

@@ -189,9 +189,9 @@ def boundary_survivors(
     """Pass 1+2 of `boundary_pruned_topk` WITHOUT the final window:
     the boundary-pruned survivor frame. The ONE implementation of the
     threshold blocks — `boundary_pruned_topk` windows this frame, and
-    `tools/scaling_probe.py` measures its cardinality, so the
-    survivor-invariance evidence in SCALING.md can never drift from
-    the shipped operator (ADVICE r8)."""
+    the survivor-invariance findings in SCALING.md were measured on
+    this frame's cardinality, so they describe the shipped operator
+    (ADVICE r8)."""
     # bucket on (vec_id DIV MOD) so sampled ids spread across ALL
     # buckets (vec_id % B would alias the sample predicate's stride)
     bmax = scored_sample.groupBy(

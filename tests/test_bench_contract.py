@@ -139,10 +139,54 @@ def test_detail_records_second_run_codegen_compiles(
     monkeypatch.setattr(bench, "_REPO", str(tmp_path))
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_SMALL)
     monkeypatch.delenv("SPARK_GRAFT_CONF_JSON", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_SNAPSHOT", raising=False)
     bench.main()
     detail = json.loads((tmp_path / "BENCH_DETAIL.json").read_text())
     assert detail["errors"] == {}
     assert detail["codegen_compiles"]["same_code"] == 0
     assert detail["codegen_compiles"]["new_code"] > 0
     assert set(detail["codegen_compiles"]) == set(detail["queries"])
+
+
+def test_ladder_records_every_rung_and_missing_tables_as_errors(
+    spark, tmp_path, monkeypatch
+):
+    """The SF ladder times every registered query on every rung; a
+    query whose input table a rung lacks becomes an error entry of
+    that rung instead of stopping the ladder."""
+    import shutil
+
+    from tools import scaling_probe
+
+    docs_only = tmp_path / "docs_only"
+    docs_only.mkdir()
+    shutil.copyfile(
+        f"{SF_SMALL}/documents.parquet", docs_only / "documents.parquet"
+    )
+    monkeypatch.setattr(
+        api,
+        "REGISTRY",
+        {
+            "reads_documents": SimpleNamespace(
+                builder=lambda s, sf: s.read.parquet(
+                    f"{sf}/documents.parquet"
+                ).select("doc_id")
+            ),
+            "reads_orders": SimpleNamespace(
+                builder=lambda s, sf: s.read.parquet(
+                    f"{sf}/orders.parquet"
+                ).select("o_orderkey")
+            ),
+        },
+    )
+    monkeypatch.setattr(scaling_probe, "_REPO", str(tmp_path))
+    scaling_probe.run_ladder(
+        spark, [("small", SF_SMALL), ("docs_only", str(docs_only))]
+    )
+    raw = json.loads((tmp_path / "SCALING_RAW.json").read_text())
+    assert raw["cpus"] == spark.sparkContext.defaultParallelism
+    assert set(raw["rungs"]) == {"small", "docs_only"}
+    for rung in raw["rungs"].values():
+        assert rung["seconds"]["reads_documents"] > 0
+    assert raw["rungs"]["small"]["errors"] == {}
+    assert set(raw["rungs"]["docs_only"]["errors"]) == {"reads_orders"}
+    assert "reads_orders" not in raw["rungs"]["docs_only"]["seconds"]

@@ -13,6 +13,7 @@ from __future__ import annotations
 import hashlib
 
 from etl_portfolio_project_spark.operators import curation as CU
+from etl_portfolio_project_spark.operators import text as T
 
 from .conftest import SF_SMALL
 
@@ -149,3 +150,90 @@ def test_span_mask_rate_targets_density(spark):
     masked = sum(r.n_masked for r in rows)
     rate = masked / total
     assert 0.10 < rate < 0.20, rate
+
+
+def _hm_py(doc_id, text) -> int:
+    """Python twin of curation._manifest_hm_of (md5-60 recipe)."""
+    s = f"{doc_id}:{'<NULL>' if text is None else text}"
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % CU.FP_MOD
+
+
+def test_persisted_v1_release_memo_invalidates_on_source_change(
+    spark, tmp_path, monkeypatch
+):
+    """The ADVICE r12 fingerprint: regenerating testdata under sf_dir
+    mid-process must invalidate the persisted v1 artifact (a stale
+    reuse would silently diverge from the inline-recomputing oracle).
+    Simulated on a private copy of sf0.001 by bumping the source
+    parquet's mtime."""
+    import os
+    import shutil
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for t in ("documents",):
+        shutil.copyfile(
+            f"{SF_SMALL}/{t}.parquet", sf / f"{t}.parquet"
+        )
+    CU.persisted_v1_release(spark, str(sf)).count()
+    key1 = [k for k in CU._V1_RELEASE_PATHS if k.startswith(str(sf))]
+    assert len(key1) == 1
+    path1 = CU._V1_RELEASE_PATHS[key1[0]]
+    # unchanged source → same artifact (memo hit)
+    CU.persisted_v1_release(spark, str(sf)).count()
+    assert CU._V1_RELEASE_PATHS[key1[0]] == path1
+    # bump the source mtime → new memo key, artifact rebuilt
+    p = sf / "documents.parquet"
+    st = os.stat(p)
+    os.utime(p, (st.st_atime + 5, st.st_mtime + 5))
+    CU.persisted_v1_release(spark, str(sf)).count()
+    key2 = [k for k in CU._V1_RELEASE_PATHS if k.startswith(str(sf))]
+    assert sorted(key2) != sorted(key1) or CU._V1_RELEASE_PATHS[
+        key2[0]
+    ] != path1
+
+
+def test_release_pipeline_v2_matches_python_rollup(spark):
+    """Recompute the v2 release table in Python from its two graded
+    inputs and require exact equality — partition counts, char
+    totals, both fingerprints, and the status rule."""
+    v1 = CU.persisted_v1_release(spark, SF_SMALL).collect()
+    rw = {
+        r.doc_id: r for r in T.line_dedup_rewrite(spark, SF_SMALL).collect()
+    }
+    got = {
+        (r.split, r.lang, r.source): r
+        for r in CU.corpus_release_pipeline_v2(spark, SF_SMALL).collect()
+    }
+    agg: dict[tuple, dict] = {}
+    for row in v1:
+        w = rw[row.doc_id]
+        a = agg.setdefault(
+            (row.split, row.lang, row.source),
+            {
+                "n_docs": 0,
+                "n_rewritten": 0,
+                "chars_v1": 0,
+                "chars_v2": 0,
+                "fp1": 0,
+                "fp2": 0,
+            },
+        )
+        a["n_docs"] += 1
+        a["n_rewritten"] += 1 if w.n_removed > 0 else 0
+        a["chars_v1"] += row.n_chars
+        a["chars_v2"] += w.cleaned_chars
+        a["fp1"] += row.hm
+        a["fp2"] += _hm_py(row.doc_id, w.cleaned_text)
+    assert set(got) == set(agg)
+    for k, a in agg.items():
+        r = got[k]
+        assert r.n_docs == a["n_docs"], (k, r)
+        assert r.n_rewritten == a["n_rewritten"], (k, r)
+        assert r.chars_v1 == a["chars_v1"], (k, r)
+        assert r.chars_v2 == a["chars_v2"], (k, r)
+        assert r.content_fp_v1 == a["fp1"] % CU.FP_MOD, (k, r)
+        assert r.content_fp_v2 == a["fp2"] % CU.FP_MOD, (k, r)
+        assert r.status == (
+            "rewritten" if r.content_fp_v1 != r.content_fp_v2 else "unchanged"
+        )

@@ -6,6 +6,7 @@ group in one task."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -122,3 +123,49 @@ def test_bottomk_rank_after_prune_equals_true_rank(spark):
         .select("g", "id", "rn")
     )
     assert _key(got.collect()) == _key(want.collect())
+
+
+def test_lazy_ranged_checkpoint_branch_consistency(spark):
+    """grouped_ranged_row_number with the lazy localCheckpoint must
+    still hand BOTH branches (rank window + size aggregate) the same
+    pid assignment: per-group rank sequences must be a dense 1..n with
+    the correct group totals (an offset/rank mismatch from divergent
+    pids would break density)."""
+    from etl_portfolio_project_spark.operators.ranking import (
+        grouped_ranged_row_number,
+    )
+
+    df = (
+        spark.range(0, 5000)
+        .selectExpr("id", "id % 7 AS g", "CAST(id * 37 % 4999 AS DOUBLE) v")
+    )
+    got = grouped_ranged_row_number(
+        df, ["g"], [F.col("v"), F.col("id")], out="rn", group_total="n"
+    )
+    rows = got.groupBy("g", "n").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.min("rn").alias("mn"),
+        F.max("rn").alias("mx"),
+        F.count_distinct("rn").alias("d"),
+    ).collect()
+    assert rows
+    for r in rows:
+        assert r.mn == 1 and r.mx == r.cnt == r.d == r.n
+
+
+@pytest.mark.parametrize("eager_consumers", [2])
+def test_lazy_ranged_checkpoint_repeated_actions(spark, eager_consumers):
+    """Two separate ACTIONS on one helper result must agree (the lazy
+    checkpoint materializes once; later actions reuse it)."""
+    from etl_portfolio_project_spark.operators.ranking import (
+        ranged_row_number,
+    )
+
+    df = spark.range(0, 2000).selectExpr(
+        "id", "CAST(pmod(id * 131, 1999) AS DOUBLE) v"
+    )
+    got = ranged_row_number(df, [F.col("v"), F.col("id")], out="rn")
+    first = {r.id: r.rn for r in got.collect()}
+    for _ in range(eager_consumers):
+        again = {r.id: r.rn for r in got.collect()}
+        assert again == first

@@ -109,3 +109,21 @@ def test_classify_verdict_rules():
         assert api.classify_verdict(
             no_oracle[0], {"err": "no_oracle", "spark_rows": 10}
         ) == "rows_only"
+
+
+def test_rows_only_specs_do_not_burn_age_tail_slots():
+    """VERDICT r13 #3: a rows-only-by-design spec (oracle=None) that
+    already holds its rows_only grade must not re-enter the grading
+    window via the age tail — it can never hash-match and drags the
+    driver's n_correct below the window size. It may only appear while
+    non-green (never graded / red)."""
+    green, _ = api._graded_verdicts()
+    window = api.grading_window()[: api._WINDOW]
+    offenders = [
+        n
+        for n in window
+        if api.REGISTRY[n].oracle is None and n in green
+    ]
+    assert offenders == [], (
+        f"green rows-only specs burning graded slots: {offenders}"
+    )

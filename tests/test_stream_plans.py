@@ -101,3 +101,56 @@ def test_stream_contract(stream_stats, name):
     assert (got["state_partitions"] > 0) == (ops > 0), (name, got)
     if rows_max is not None:
         assert got["state_rows"] <= rows_max, (name, got)
+
+
+def _sei_epoch_plan(spark) -> str:
+    from etl_portfolio_project_spark.operators.similarity import (
+        _sei_epoch_sql,
+    )
+
+    vecs = spark.range(4).selectExpr(
+        "id AS vec_id",
+        "array(CAST(id AS DOUBLE)) AS vec",
+        "1.0D AS norm",
+        "array(named_struct('tbl', 0, 'bucket', id)) AS tb",
+    )
+    vecs.createOrReplaceTempView("sei_vecs")
+    vecs.createOrReplaceTempView("sei_idx")
+    return (
+        spark.sql(_sei_epoch_sql())
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+
+
+def _sid_epoch_plan(spark) -> str:
+    from etl_portfolio_project_spark.operators.dedup import _sid_epoch_sql
+
+    sigs = spark.range(4).selectExpr(
+        "id AS doc_id",
+        "array(id) AS items",
+        "transform(sequence(0, 31), i -> id + i) AS sig",
+    )
+    sigs.createOrReplaceTempView("sid_sigs")
+    sigs.createOrReplaceTempView("sid_idx")
+    return (
+        spark.sql(_sid_epoch_sql())
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+
+
+@pytest.mark.parametrize("plan_fn", [_sei_epoch_plan, _sid_epoch_plan])
+def test_stream_epoch_joins_broadcast_the_batch_side(spark, plan_fn):
+    """r14 opt (guide §3): every per-epoch index join in the two
+    streaming-ingest operators must be a broadcast join with the
+    BATCH-derived side as the build side — the index grows without
+    bound and must never be shuffled or broadcast. The epoch SQL is
+    module-level exactly so this shape is pinned without running the
+    stream."""
+    plan = plan_fn(spark)
+    assert "SortMergeJoin" not in plan, plan
+    assert "ShuffledHashJoin" not in plan, plan
+    assert plan.count("BroadcastHashJoin") >= 4, plan

@@ -7,8 +7,10 @@ from pyspark.sql import functions as F
 
 from etl_portfolio_project_spark.operators import multimodal as M
 from etl_portfolio_project_spark.operators import relational as R
+from etl_portfolio_project_spark.operators import similarity as S
 from etl_portfolio_project_spark.pipelines import loan_pipeline
 from etl_portfolio_project_spark.plans import explain
+from etl_portfolio_project_spark.sources.registry import load_table
 from etl_portfolio_project_spark.streaming import events as E
 
 from .conftest import SF_SMALL
@@ -975,3 +977,37 @@ def test_stream_embedding_index_checkpoint_restart(spark, tmp_path):
     with open(str(res_dir / "manifest_3.json")) as f:
         gens = _json.load(f)
     assert gens == [str(idx_root / "gen_2_c")]
+
+
+def test_stream_embedding_index_arrival_order_invariants(spark):
+    vecs = {
+        r.vec_id: r
+        for r in S.stream_embedding_index_ingest(spark, SF_SMALL).collect()
+    }
+    src = {
+        r.vec_id: r.embedding
+        for r in load_table(spark, SF_SMALL, "embeddings").collect()
+    }
+    assert set(vecs) == set(src)  # every vector decided exactly once
+    for vid, r in vecs.items():
+        assert r.batch_id == vid % S.SE_NBATCH
+        emb = src[vid]
+        valid = (
+            emb is not None
+            and len(emb) == S.DIM
+            and all(x is not None for x in emb)
+        )
+        assert r.is_valid == valid, (vid, r)
+        if not valid:
+            assert r.n_candidates == 0 and not r.is_novel
+            assert r.nearest_id is None
+            continue
+        assert 0 <= r.n_sim <= r.n_candidates
+        assert r.is_novel == (r.n_sim == 0)
+        if r.batch_id == 0:
+            # the index is empty when batch 0 arrives
+            assert r.n_candidates == 0 and r.is_novel
+        if r.nearest_id is not None:
+            # neighbors only ever come from STRICTLY earlier batches
+            assert vecs[r.nearest_id].batch_id < r.batch_id
+            assert vecs[r.nearest_id].is_valid

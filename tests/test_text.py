@@ -1,14 +1,13 @@
-"""Property/differential tests for the r13 operators, independent of
-the DuckDB oracles: a pure-Python interval-union reference for the
-exact-substring rewrite, and a Python recomputation of the v2 release
-rollup from its two graded inputs (persisted v1 manifest + line-dedup
-rewrite)."""
+"""Property tests for the text and dedup rewrites, independent of the
+DuckDB oracles (which share SQL-dialect blind spots with the builders
+by construction): pure-Python references for the unigram-EM DP and the
+exact-substring deletion, and structural invariants for the line-dedup
+rewrite."""
 
 from __future__ import annotations
 
-import hashlib
+import math
 
-from etl_portfolio_project_spark.operators import curation as CU
 from etl_portfolio_project_spark.operators import dedup as D
 from etl_portfolio_project_spark.operators import text as T
 from etl_portfolio_project_spark.sources.registry import load_table
@@ -16,10 +15,113 @@ from etl_portfolio_project_spark.sources.registry import load_table
 from .conftest import SF_SMALL
 
 
-def _hm_py(doc_id, text) -> int:
-    """Python twin of curation._manifest_hm_of (md5-60 recipe)."""
-    s = f"{doc_id}:{'<NULL>' if text is None else text}"
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % CU.FP_MOD
+def test_line_dedup_rewrite_structural_invariants(spark):
+    docs = {
+        r.doc_id: r.text
+        for r in load_table(spark, SF_SMALL, "documents")
+        .select("doc_id", "text")
+        .collect()
+    }
+    out = {r.doc_id: r for r in T.line_dedup_rewrite(spark, SF_SMALL).collect()}
+    assert set(out) == set(docs)
+    k = T.LINE_SEG_TOKENS
+    for did, text in docs.items():
+        r = out[did]
+        if text is None:
+            # NULL-text docs pass through explicitly, never dropped
+            assert r.n_segs == 0 and r.n_removed == 0
+            assert r.cleaned_text is None and r.cleaned_chars is None
+            continue
+        toks = text.strip().lower().split()
+        toks = toks if toks else [""]
+        n_segs = math.ceil(len(toks) / k)
+        assert r.n_segs == n_segs, (did, r)
+        assert 0 <= r.n_removed <= r.n_segs
+        # the cleaned text is a subsequence of the original segments,
+        # in order, with removed segments deleted whole
+        segs = [
+            " ".join(toks[i * k : (i + 1) * k]) for i in range(n_segs)
+        ]
+        # reconstructable: kept tokens regrouped must match some
+        # subset of segs in order
+        joined = r.cleaned_text
+        probe = []
+        for s in segs:
+            if joined.startswith(s) and (
+                len(joined) == len(s) or joined[len(s)] == " "
+            ):
+                probe.append(s)
+                joined = joined[len(s) :].lstrip()
+        assert joined == "", (did, r.cleaned_text, segs)
+        assert len(probe) == r.n_segs - r.n_removed, (did, r)
+        assert r.cleaned_chars == len(r.cleaned_text)
+        assert (r.n_removed == r.n_segs) == (r.cleaned_text == "")
+
+
+def test_unigram_em_matches_python_reference(spark):
+    """Recompute the whole E->M round in plain Python — vocabulary,
+    DP segmentation (fewest pieces, then greatest count sum, then
+    smallest width), backtrack, weighted recount — and require the
+    operator's c_em to match exactly. Pins the generated Spark fold
+    AND (via oracle parity elsewhere) the recursive-CTE backtrack
+    that works around the DuckDB 1.0 list_reduce row-crossing bug."""
+    words = {
+        r.word: r.n_w
+        for r in T._bpe_words_spark(
+            load_table(spark, SF_SMALL, "documents")
+        ).collect()
+    }
+    out = {r.piece: r for r in T.unigram_lm_em_step(spark, SF_SMALL).collect()}
+    # python reference vocabulary: keep=true multi-char pieces come
+    # from the operator's own prune output (graded elsewhere); chars
+    # recomputed independently
+    prune = {
+        r.piece: r
+        for r in T.unigram_lm_piece_prune(spark, SF_SMALL).collect()
+    }
+    vocab: dict[str, int] = {}
+    for p, r in prune.items():
+        if r.keep and len(p) >= 2:
+            vocab[p] = r.n_occ
+    # independent char counts (every char of every word is a vocab
+    # key; the loop below inserts them all with their true counts)
+    chars: dict[str, int] = {}
+    for w, n in words.items():
+        for ch in w:
+            chars[ch] = chars.get(ch, 0) + n
+    for ch, c in chars.items():
+        vocab[ch] = c
+    assert set(out) == set(vocab)
+    for p, r in out.items():
+        assert r.c_seed == vocab[p], (p, r.c_seed, vocab[p])
+
+    def segment(word: str) -> list[str]:
+        dp = [(0, 0, 0)]
+        for i in range(1, len(word) + 1):
+            best = None
+            for kk in range(1, min(T.ULM_MAXP, i) + 1):
+                piece = word[i - kk : i]
+                if piece not in vocab:
+                    continue
+                m, neg, _ = dp[i - kk]
+                cand = (m + 1, neg - vocab[piece], kk)
+                if best is None or cand < best:
+                    best = cand
+            dp.append(best)
+        pieces, pos = [], len(word)
+        while pos > 0:
+            kk = dp[pos][2]
+            pieces.append(word[pos - kk : pos])
+            pos -= kk
+        return pieces
+
+    c_em: dict[str, int] = {}
+    for w, n in words.items():
+        for p in segment(w):
+            c_em[p] = c_em.get(p, 0) + n
+    for p, r in out.items():
+        assert r.c_em == c_em.get(p, 0), (p, r.c_em, c_em.get(p, 0))
+        assert r.used == (r.c_em > 0)
 
 
 def test_exact_substring_rewrite_matches_python_reference(spark):
@@ -142,84 +244,3 @@ def test_line_dedup_rewrite_shuffle_fallback_matches_broadcast(
         key=lambda r: r.doc_id,
     )
     assert fb == base
-
-
-def test_persisted_v1_release_memo_invalidates_on_source_change(
-    spark, tmp_path, monkeypatch
-):
-    """The ADVICE r12 fingerprint: regenerating testdata under sf_dir
-    mid-process must invalidate the persisted v1 artifact (a stale
-    reuse would silently diverge from the inline-recomputing oracle).
-    Simulated on a private copy of sf0.001 by bumping the source
-    parquet's mtime."""
-    import os
-    import shutil
-
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    for t in ("documents",):
-        shutil.copyfile(
-            f"{SF_SMALL}/{t}.parquet", sf / f"{t}.parquet"
-        )
-    CU.persisted_v1_release(spark, str(sf)).count()
-    key1 = [k for k in CU._V1_RELEASE_PATHS if k.startswith(str(sf))]
-    assert len(key1) == 1
-    path1 = CU._V1_RELEASE_PATHS[key1[0]]
-    # unchanged source → same artifact (memo hit)
-    CU.persisted_v1_release(spark, str(sf)).count()
-    assert CU._V1_RELEASE_PATHS[key1[0]] == path1
-    # bump the source mtime → new memo key, artifact rebuilt
-    p = sf / "documents.parquet"
-    st = os.stat(p)
-    os.utime(p, (st.st_atime + 5, st.st_mtime + 5))
-    CU.persisted_v1_release(spark, str(sf)).count()
-    key2 = [k for k in CU._V1_RELEASE_PATHS if k.startswith(str(sf))]
-    assert sorted(key2) != sorted(key1) or CU._V1_RELEASE_PATHS[
-        key2[0]
-    ] != path1
-
-
-def test_release_pipeline_v2_matches_python_rollup(spark):
-    """Recompute the v2 release table in Python from its two graded
-    inputs and require exact equality — partition counts, char
-    totals, both fingerprints, and the status rule."""
-    v1 = CU.persisted_v1_release(spark, SF_SMALL).collect()
-    rw = {
-        r.doc_id: r for r in T.line_dedup_rewrite(spark, SF_SMALL).collect()
-    }
-    got = {
-        (r.split, r.lang, r.source): r
-        for r in CU.corpus_release_pipeline_v2(spark, SF_SMALL).collect()
-    }
-    agg: dict[tuple, dict] = {}
-    for row in v1:
-        w = rw[row.doc_id]
-        a = agg.setdefault(
-            (row.split, row.lang, row.source),
-            {
-                "n_docs": 0,
-                "n_rewritten": 0,
-                "chars_v1": 0,
-                "chars_v2": 0,
-                "fp1": 0,
-                "fp2": 0,
-            },
-        )
-        a["n_docs"] += 1
-        a["n_rewritten"] += 1 if w.n_removed > 0 else 0
-        a["chars_v1"] += row.n_chars
-        a["chars_v2"] += w.cleaned_chars
-        a["fp1"] += row.hm
-        a["fp2"] += _hm_py(row.doc_id, w.cleaned_text)
-    assert set(got) == set(agg)
-    for k, a in agg.items():
-        r = got[k]
-        assert r.n_docs == a["n_docs"], (k, r)
-        assert r.n_rewritten == a["n_rewritten"], (k, r)
-        assert r.chars_v1 == a["chars_v1"], (k, r)
-        assert r.chars_v2 == a["chars_v2"], (k, r)
-        assert r.content_fp_v1 == a["fp1"] % CU.FP_MOD, (k, r)
-        assert r.content_fp_v2 == a["fp2"] % CU.FP_MOD, (k, r)
-        assert r.status == (
-            "rewritten" if r.content_fp_v1 != r.content_fp_v2 else "unchanged"
-        )

@@ -4,9 +4,9 @@ Captures normalized optimized plans and (optionally) isolated best-of-N
 noop-sink timings for named queries, without running the full bench.
 
 Usage:
-  python tools/plan_probe.py --plans-dir plans/r13 --suffix before q1 q2
+  python tools/plan_probe.py --plans-dir /tmp/plans --suffix before q1 q2
   python tools/plan_probe.py --time 3 q1 q2            # timings only
-  python tools/plan_probe.py --plans-dir plans/r13 --suffix after --time 3 q1
+  python tools/plan_probe.py --plans-dir /tmp/plans --suffix after --time 3 q1
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS   (default: the CPUs this process may run on).
