@@ -192,6 +192,7 @@ def main() -> None:
         "load_after": {**_load_receipt(), "jvm_cpu_sec": _jvm_cpu_sec()},
         "query_load_1m": suite["load_1m"],
         "codegen_compiles": suite["codegen_compiles"],
+        "heap_mb": suite["heap_mb"],
     }
     # Absolute perf anchor (r4 VERDICT #5): if tools/oracle_bench.py
     # has recorded DuckDB oracle wall times at this SF, publish the
@@ -240,10 +241,12 @@ def time_queries(spark, sf_dir: str, names: list[str]) -> dict:
     `sf_dir`, RUNS times, and return one record of per-query dicts:
     "seconds" (best run), "codegen_compiles" (Janino compiles during
     the LAST run: nonzero means the code cache thrashed or the query
-    generates different code per run), "errors" (a traceback tail for
-    each query that raised) and "load_1m" (the 1-minute loadavg right
-    after the query, so a single-query smear can be attributed to a
-    load spike without external monitoring).
+    generates different code per run), "heap_mb" (driver heap in use
+    after the query's caches are released and a full GC, so state a
+    query leaves behind shows as a step in this series), "errors" (a
+    traceback tail for each query that raised) and "load_1m" (the
+    1-minute loadavg right after the query, so a single-query smear
+    can be attributed to a load spike without external monitoring).
 
     Per-query fault isolation (round-1 lesson: one broken query zeroed
     the whole bench): every query gets try/except plus a watchdog that
@@ -253,8 +256,10 @@ def time_queries(spark, sf_dir: str, names: list[str]) -> dict:
 
     timeout_s = float(os.environ.get("SPARK_GRAFT_QUERY_TIMEOUT", "300"))
     rec: dict[str, dict] = {
-        "seconds": {}, "codegen_compiles": {}, "errors": {}, "load_1m": {}
+        "seconds": {}, "codegen_compiles": {}, "heap_mb": {}, "errors": {},
+        "load_1m": {},
     }
+    heap = spark._jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
 
     # Watchdog cancels ONLY the timed query's job group, and only if
     # that query is still the current generation — a Timer that fires
@@ -343,6 +348,9 @@ def time_queries(spark, sf_dir: str, names: list[str]) -> dict:
         # registry size/order (grading_window reorders every round —
         # that position shift was r5's "uniform +0.3 s drift").
         spark._jvm.System.gc()
+        rec["heap_mb"][name] = round(
+            heap.getHeapMemoryUsage().getUsed() / 2**20, 1
+        )
     return rec
 
 

@@ -13,10 +13,31 @@ claimed under the same key — at most ONE live cached generation per
 logical index, regardless of re-runs. Unpersisting never breaks
 correctness (lineage recompute), only cache residency, so a stale
 reference to a prior generation still evaluates.
+
+`release_all()` and `release_shared_all()` also run Python's cyclic
+garbage collector. Under py4j every Dataset handle a builder has
+called a method on sits in a reference cycle (`JavaObject._methods`
+-> `JavaMember.container` -> the same `JavaObject`), so a dropped
+DataFrame keeps its JVM Dataset alive, and with it the QueryExecution,
+the executed plan and its broadcast relations, until Python's rare
+full collection. Collecting in the isolation hook frees them between
+queries. py4j hands each release to a finalizer thread that wakes once
+a second, so the hook also sends the pending releases itself: when it
+returns, the JVM holds no handle to a dropped Dataset, and the next JVM
+GC reclaims it and lets ContextCleaner drop its broadcasts and shuffles
+(without that, perfbench's read one second later still saw ~10 MB of
+them on corpus_index).
+
+`drop_checkpoint(df)` frees the blocks of an eager `localCheckpoint`
+whose consumers are done (a stream epoch's batch-side table), since
+nothing else drops them before the session ends.
 """
 
 from __future__ import annotations
 
+import gc
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 _LIVE: dict[str, DataFrame] = {}
@@ -141,13 +162,16 @@ def shared_live_count() -> int:
 
 
 def release_shared_all() -> None:
-    """Unpersist and forget every shared-index entry."""
+    """Unpersist and forget every shared-index entry, then collect the
+    py4j reference cycles that keep dropped Datasets alive in the JVM
+    (module docstring)."""
     for key in list(_SHARED):
         old = _SHARED.pop(key)
         try:
             old.unpersist()
         except Exception:
             pass
+    _collect_dropped()
 
 
 def release(key: str) -> None:
@@ -165,9 +189,44 @@ def release_all() -> None:
     hook: each live cache entry is another plan tree Spark's
     CacheManager compares against during EVERY subsequent query's
     analysis, so a 141-query session that never releases pays a
-    growing per-query planning tax on top of the memory residency."""
+    growing per-query planning tax on top of the memory residency.
+
+    Then it collects Python's reference cycles: each py4j Dataset
+    handle a builder called a method on is its own cycle, so the
+    finished queries' plans and broadcasts would otherwise stay in the
+    driver heap until Python's next full collection. It returns once
+    the JVM has been told about every handle freed, so the next JVM GC
+    reclaims them (module docstring)."""
     for key in list(_LIVE):
         release(key)
+    _collect_dropped()
+
+
+def _collect_dropped() -> None:
+    """Collect Python's reference cycles, then send py4j's releases for
+    the handles that freed on this thread instead of waiting for py4j's
+    finalizer thread (module docstring)."""
+    gc.collect()
+    client = getattr(SparkContext._gateway, "_gateway_client", None)
+    # only pinned-thread py4j (PySpark's default) defers releases
+    pending = getattr(client, "finalizer_deque", None)
+    while pending:
+        try:
+            task = pending.pop()
+        except IndexError:  # the finalizer thread took the last one
+            break
+        if not isinstance(task, tuple):  # the finalizer's shutdown marker
+            pending.append(task)
+            break
+        owner, target_id = task
+        owner.garbage_collect_object(target_id, enqueue=False)
+
+
+def drop_checkpoint(df: DataFrame) -> None:
+    """Remove the blocks of `df`, the result of `localCheckpoint()`,
+    from the block manager now, blocking. Evaluating `df` afterwards
+    fails, so call it only once every consumer has run."""
+    df._jdf.queryExecution().logical().rdd().unpersist(True)
 
 
 def live_count() -> int:

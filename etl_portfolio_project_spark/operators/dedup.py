@@ -2055,6 +2055,10 @@ FROM sid_sigs
         # manifest_k's pre-epoch state and rewrites the same artifact.
         epoch_path = os.path.join(res_dir, f"epoch_{epoch_id}")
         per.write.mode("overwrite").parquet(epoch_path)
+        if gens:
+            # every consumer of the checkpoint ran in the write above;
+            # left to GC, the last epoch's block outlives the query
+            caches.drop_checkpoint(sigs)
         gens = gens + [epoch_path]
         if len(gens) >= SD_COMPACT:
             # bound generation-count growth: fold the live generations

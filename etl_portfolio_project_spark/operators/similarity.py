@@ -1445,7 +1445,8 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap (the assignment plumbing is identical; the sample IS
     k-means||'s init step).
 
-    TWO-PATH codebook carriage (measured, SCALING.md r5_late): up to
+    TWO-PATH codebook carriage (measured in "Late-round-5 operators
+    across the ladder", `git show ee62657:SCALING.md`): up to
     PQ_LITERAL_MAX entries the codebook embeds as plan literals
     (codegen-friendly, the ann_ivf_topk idiom); beyond it the SAME
     arithmetic runs with the codebook as DATA — one broadcast row
@@ -2737,7 +2738,8 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k window — the fan-out is |corpus| x |queries| LUT-lookup
     rows, which is ADC's true cost model (adds, not D-dim float
     mults), and at scale the window becomes TakeOrdered per query.
-    HISTORY (measured + isolated, SCALING.md r5_late): the harness
+    HISTORY (measured + isolated in "Late-round-5 operators across the
+    ladder", `git show ee62657:SCALING.md`): the harness
     originally derived BOTH the query set (|Q| = n/25) and the
     codebook (k = n/100) from the corpus — 112 s at the 10× probe,
     isolated to the corpus-scaled codebook. BOTH are now fixed-size
@@ -4178,6 +4180,10 @@ FROM sei_vecs
         per = per.unionByName(invalid)
         epoch_path = os.path.join(res_dir, f"epoch_{epoch_id}")
         per.write.mode("overwrite").parquet(epoch_path)
+        if gens:
+            # every consumer of the checkpoint ran in the write above;
+            # left to GC, the last epoch's block outlives the query
+            caches.drop_checkpoint(vecs)
         gens = gens + [epoch_path]
         if len(gens) >= SE_COMPACT:
             compact_path = os.path.join(idx_root, f"gen_{epoch_id}_c")

@@ -147,6 +147,40 @@ def test_detail_records_second_run_codegen_compiles(
     assert set(detail["codegen_compiles"]) == set(detail["queries"])
 
 
+def test_detail_records_heap_after_each_query(spark, tmp_path, monkeypatch):
+    """BENCH_DETAIL.json carries, per query, the driver heap in use
+    after that query's release and full GC, so state a query leaves
+    live shows up as a step at that query."""
+    pinned = []
+
+    def pin_64mb(s, _sf):
+        pinned.append(s._jvm.java.nio.ByteBuffer.allocate(64 * 2**20))
+        return s.range(8)
+
+    monkeypatch.setattr(
+        api,
+        "REGISTRY",
+        {
+            "a_plain": SimpleNamespace(builder=lambda s, _sf: s.range(8)),
+            "b_pins_64mb": SimpleNamespace(builder=pin_64mb),
+        },
+    )
+    monkeypatch.setattr(bench, "CANARY_QUERIES", [])
+    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_SMALL)
+    monkeypatch.delenv("SPARK_GRAFT_CONF_JSON", raising=False)
+    try:
+        bench.main()
+    finally:
+        pinned.clear()
+    heap = json.loads((tmp_path / "BENCH_DETAIL.json").read_text())["heap_mb"]
+    assert set(heap) == {"a_plain", "b_pins_64mb"}
+    # both runs of b_pins_64mb pinned a buffer: 128 MB more live heap
+    assert heap["b_pins_64mb"] - heap["a_plain"] > 120
+    max_mb = spark._jvm.Runtime.getRuntime().maxMemory() / 2**20
+    assert 0 < heap["a_plain"] < max_mb
+
+
 def test_ladder_records_every_rung_and_missing_tables_as_errors(
     spark, tmp_path, monkeypatch
 ):

@@ -8,6 +8,10 @@ logical key, so a 121-query bench session (2 runs each) stays bounded.
 
 from __future__ import annotations
 
+import gc
+import weakref
+
+import pytest
 from pyspark.sql import functions as F
 
 from etl_portfolio_project_spark import caches, tmpdirs
@@ -177,6 +181,53 @@ def test_release_all_empties_tracked_caches(spark):
     assert caches.live_count() > 0
     caches.release_all()
     assert caches.live_count() == 0
+
+
+def test_release_all_frees_a_dropped_dataframe(spark):
+    """A DataFrame a builder has called a method on sits in a py4j
+    reference cycle, so dropping it frees neither the Python handle nor
+    the JVM Dataset (with its plan and broadcasts) until Python's
+    cyclic GC runs. release_all() runs it and sends py4j's releases,
+    so when it returns one JVM GC reclaims the Dataset."""
+    gc.disable()  # the automatic collector must not do the work here
+    try:
+        df = spark.range(10).selectExpr("id * 3 AS v")
+        df.count()
+        py_ref = weakref.ref(df._jdf)
+        jvm_ref = spark._jvm.java.lang.ref.WeakReference(df._jdf)
+        del df
+        assert py_ref() is not None  # held by its own cycle
+        caches.release_all()
+        assert py_ref() is None
+        spark._jvm.System.gc()
+        # refersTo(null) reads the reference without handing Python a
+        # new handle to the Dataset
+        assert jvm_ref.refersTo(None)
+    finally:
+        gc.enable()
+
+
+def _stored_rdds(spark) -> set[int]:
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {info.id() for info in infos}
+
+
+@pytest.mark.parametrize(
+    "builder",
+    [similarity.stream_embedding_index_ingest, dedup.stream_incremental_dedup],
+)
+def test_stream_runs_leave_no_checkpoint_blocks(spark, builder):
+    """Every epoch after the first localCheckpoints its batch-side
+    table. The block must be dropped when the epoch ends: left to GC,
+    the last epoch's block outlived the query, release_all(), Python
+    GC and JVM GC, one more per run."""
+    before = _stored_rdds(spark)
+    left = []
+    for _ in range(2):
+        builder(spark, SF_SMALL).count()
+        caches.release_all()
+        left.append(_stored_rdds(spark) - before)
+    assert left == [set(), set()]
 
 
 def test_cc_long_diameter_graph_hits_checkpoint_branch(spark):
