@@ -6,12 +6,15 @@ threshold near-dup pairs in two forms: label-blocked (exact within
 blocks — the harness baseline) and LSH-bucketed (bounded candidate
 space — the 100 TB dedup path).
 
-Numeric portability: cosine is computed with an EXPLICIT left-to-right
-fold — `F.aggregate(zip_with(a,b,*), 0.0, +)` in Spark ≡ an unrolled
-left-associative `e1[1]*e2[1] + ... + e1[64]*e2[64]` chain in DuckDB —
-so doubles are bit-identical across engines (library cosine functions
-do not specify accumulation order). float32 elements are cast to
-double first (exact).
+Numeric portability: every vector sum (dot products, norms, squared
+distances, hyperplane projections) is an EXPLICIT left-to-right fold
+from 0.0, so doubles are bit-identical across engines (library cosine
+functions do not specify accumulation order). There is one fold per
+dialect: `_fold_spark` (`aggregate(zip_with(...))`) and `_fold_duck`
+(the unrolled left-associative `(0.0 + t1 + ... + tn)` chain), both
+over a per-element term (`_MUL`, `_SQDIFF`). float32 elements are cast
+to double first (exact). A new vector operator calls them; it never
+writes its own fold.
 
 Scale design:
 - Brute-force: the query set is broadcast; candidates stream through a
@@ -95,14 +98,16 @@ def _dvec(col: str | Column) -> Column:
     return c.cast("array<double>")
 
 
-def _dot_spark_sql(a: str, b: str) -> str:
-    """Left-to-right dot-product fold as ONE Spark SQL string:
-    `aggregate(zip_with(a, b, *), 0.0, +)`.
+#: per-element fold terms, format strings over the pair ({x}, {y});
+#: each serves both dialects' folds
+_MUL = "{x} * {y}"
+_SQDIFF = "({x} - {y}) * ({x} - {y})"
 
-    The fold starts at 0.0 and adds element products left-to-right —
-    the SAME accumulation order as the DuckDB oracle's unrolled
-    left-associative `0.0 + a[1]*b[1] + ... + a[64]*b[64]` chain, so
-    doubles stay bit-identical.
+
+def _fold_spark(a: str, b: str, term: str) -> str:
+    """Left-to-right fold of `term` over the element pairs of the array
+    expressions `a` and `b`, as ONE Spark SQL string. Callers that need
+    a sub-vector pass `slice(...)` themselves.
 
     MEASURED tradeoff (sf0.1, 400k label-blocked pairs, local[32]):
     the fully-unrolled 64-term expression — chosen first on the
@@ -115,38 +120,49 @@ def _dot_spark_sql(a: str, b: str) -> str:
     parsed SQL string also avoids per-term py4j round-trips at plan
     build (~2000 for a 64-dim Column chain, seconds of driver time)."""
     return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D,"
-        " (acc, v) -> acc + v)"
+        f"aggregate(zip_with({a}, {b}, (x, y) -> {term.format(x='x', y='y')}),"
+        " 0.0D, (acc, v) -> acc + v)"
     )
 
 
-def _norm_spark_sql(a: str) -> str:
-    return f"sqrt({_dot_spark_sql(a, a)})"
-
-
-def norm_expr(a: str) -> Column:
-    return F.expr(_norm_spark_sql(a))
-
-
-def cosine_expr(a: str, b: str, norm_a: str, norm_b: str) -> Column:
-    return F.expr(f"{_dot_spark_sql(a, b)} / ({norm_a} * {norm_b})")
-
-
-def dot_sql(a: str, b: str) -> str:
-    """Unrolled left-associative dot product over DIM elements."""
-    terms = [
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-        for i in range(1, DIM + 1)
-    ]
+def _fold_duck(xs: list[str], ys: list[str], term: str) -> str:
+    """DuckDB twin of `_fold_spark`: `term` over the element pairs of
+    `xs` and `ys`, unrolled as `(0.0 + t1 + ... + tn)` (DuckDB's parser
+    is left-associative, so this is the same left fold)."""
+    terms = [term.format(x=x, y=y) for x, y in zip(xs, ys)]
     return "(0.0 + " + " + ".join(terms) + ")"
 
 
-def norm_sql(a: str) -> str:
-    terms = [
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({a}[{i}] AS DOUBLE)"
-        for i in range(1, DIM + 1)
-    ]
-    return "sqrt(0.0 + " + " + ".join(terms) + ")"
+def _duck_cols(a: str, off: int = 1, n: int = DIM) -> list[str]:
+    """Elements a[off] .. a[off + n - 1] (1-based) of a DuckDB list,
+    as DOUBLE."""
+    return [f"CAST({a}[{i}] AS DOUBLE)" for i in range(off, off + n)]
+
+
+def _duck_lits(values: list[float]) -> list[str]:
+    """Double literals for `_fold_duck`, QUOTED: DuckDB parses a bare
+    16-digit literal as DECIMAL whose int128→double conversion
+    DOUBLE-ROUNDS (mantissa > 2^53, then a divide) — measured 1-ulp off
+    Python/Java's correctly-rounded strtod. CAST('…' AS DOUBLE) goes
+    through strtod and matches Spark's literal parse exactly."""
+    return [f"CAST('{v!r}' AS DOUBLE)" for v in values]
+
+
+def norm_expr(a: str) -> Column:
+    return F.expr(f"sqrt({_fold_spark(a, a, _MUL)})")
+
+
+def cosine_expr(a: str, b: str, norm_a: str, norm_b: str) -> Column:
+    return F.expr(f"{_fold_spark(a, b, _MUL)} / ({norm_a} * {norm_b})")
+
+
+def dot_sql(a: str, b: str, n: int = DIM) -> str:
+    """DuckDB dot product of the first n elements of `a` and `b`."""
+    return _fold_duck(_duck_cols(a, 1, n), _duck_cols(b, 1, n), _MUL)
+
+
+def norm_sql(a: str, n: int = DIM) -> str:
+    return "sqrt" + dot_sql(a, a, n)
 
 
 #: Boundary-pruned exact top-k (r8, VERDICT r7 item 1): the rescorers
@@ -229,11 +245,19 @@ def boundary_pruned_topk(
     NULLs last, so NULL scores could only ever rank above k when fewer
     than k non-NULL candidates exist (exactly the keep-all case)."""
     survivors = boundary_survivors(scored, scored_sample, score_col, k)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col(score_col).desc(), F.col("vec_id")
-    )
+    return _topk_per_query(survivors, score_col, k)
+
+
+def _topk_per_query(
+    scored: DataFrame, score_col: str, k: int = TOP_K, ascending: bool = False
+) -> DataFrame:
+    """Per-query top-k of `scored` (query_id, vec_id, score): rank =
+    row_number over (score DESC — ASC for distances —, vec_id), kept
+    while rank <= k; output (query_id, vec_id, score, rank)."""
+    score = F.col(score_col) if ascending else F.col(score_col).desc()
+    w = Window.partitionBy("query_id").orderBy(score, F.col("vec_id"))
     return (
-        survivors.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "vec_id", score_col, "rank")
     )
@@ -244,9 +268,9 @@ def _bf_scored(spark: SparkSession, sf_dir: str, pred: str | None) -> DataFrame:
     restricts the CANDIDATE side before scoring (pass-1 sample).
 
     Valid-vector gate (r8 self-review): an OVER-LENGTH vector is a
-    64-prefix TWIN in the oracle (dot_sql truncates to DIM terms —
-    a real cosine) but a NULL cosine in Spark (zip_with pads the
-    shorter query side) — one such row ranking ≤ k would red the
+    64-prefix TWIN in the oracle (`_fold_duck` unrolls exactly DIM
+    terms — a real cosine) but a NULL cosine in Spark (zip_with pads
+    the shorter query side) — one such row ranking ≤ k would red the
     compare; both sides gate."""
     e = load_table(spark, sf_dir, "embeddings").where(
         F.expr(valid_vec_pred_spark())
@@ -509,14 +533,14 @@ def _table_bucket_spark_sql(
     vec: str, table: int, planes: list | None = None
 ) -> str:
     """Sign-bit bucket id of `vec` in LSH table `table`, as one Spark
-    SQL string (same single-round-trip rationale as _dot_spark_sql;
-    the hyperplane coefficients are embedded as double literals, the
-    Spark-SQL analogue of a broadcast of the tiny plane matrix)."""
+    SQL string (one parsed string, one py4j round trip; the hyperplane
+    coefficients are embedded as double literals, the Spark-SQL
+    analogue of a broadcast of the tiny plane matrix)."""
     planes = LSH_PLANES if planes is None else planes
     bits = []
     for i, plane in enumerate(planes[table]):
         lits = ", ".join(f"{p!r}D" for p in plane)
-        proj = _dot_spark_sql(vec, f"array({lits})")
+        proj = _fold_spark(vec, f"array({lits})", _MUL)
         bits.append(
             f"CASE WHEN {proj} >= 0 THEN CAST({2**i} AS BIGINT)"
             f" ELSE CAST(0 AS BIGINT) END"
@@ -597,15 +621,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = candidates.join(base, "vec_id").join(F.broadcast(qv), "query_id")
     cos = cosine_expr("qvec", "vec", "qnorm", "norm")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        joined.withColumn("cosine", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _topk_per_query(joined.withColumn("cosine", cos), "cosine")
 
 
 # --- IVF (inverted-file) ANN ---------------------------------------------
@@ -673,7 +689,7 @@ def _ivf_quantized_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (-cos, cid) structs — same pattern as langid's argmax
         def _cos_to_lit(row) -> str:
             lits = ", ".join(f"{v!r}D" for v in row.vec)
-            dot = _dot_spark_sql("vec", f"array({lits})")
+            dot = _fold_spark("vec", f"array({lits})", _MUL)
             return f"({dot} / (norm * {row.norm!r}D))"
 
         entries = ", ".join(
@@ -698,7 +714,7 @@ def _ivf_quantized_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("cb")
         )
-        dot = _dot_spark_sql("vec", "c.cvec")
+        dot = _fold_spark("vec", "c.cvec", _MUL)
         near = F.expr(
             "slice(array_sort(transform(cb, c -> named_struct("
             f"'neg_cos', -({dot} / (norm * c.cnrm)), 'cid', c.cid))), "
@@ -752,13 +768,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (assigned["vec_id"] != probes["query_id"]),
     ).drop(probes["list_id"])
     cos = cosine_expr("qvec", "vec", "qnorm", "norm")
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        joined.withColumn("cosine", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _topk_per_query(joined.withColumn("cosine", cos), "cosine")
 
 
 ANN_IVF_TOPK_SQL = f"""
@@ -808,16 +818,8 @@ SELECT query_id, vec_id, cosine, rank FROM (
 def _table_bucket_sql(vec: str, table: int, planes: list | None = None) -> str:
     planes = LSH_PLANES if planes is None else planes
     terms = []
-    for i in range(len(planes[table])):
-        plane = planes[table][i]
-        # quoted literals: see _clf_dot_duck — DuckDB double-rounds
-        # bare 16-digit decimal literals; a projection within an ulp
-        # of zero could otherwise flip a sign bit vs Spark
-        prods = [
-            f"CAST({vec}[{j + 1}] AS DOUBLE) * CAST('{plane[j]!r}' AS DOUBLE)"
-            for j in range(DIM)
-        ]
-        proj = "(0.0 + " + " + ".join(prods) + ")"
+    for i, plane in enumerate(planes[table]):
+        proj = _fold_duck(_duck_cols(vec), _duck_lits(plane), _MUL)
         terms.append(
             f"CASE WHEN {proj} >= 0 THEN CAST({2**i} AS BIGINT)"
             f" ELSE CAST(0 AS BIGINT) END"
@@ -877,13 +879,8 @@ def _table_bucket_msb_sql(vec: str, table: int, planes: list) -> str:
     partition rows identically."""
     n = len(planes[table])
     terms = []
-    for i in range(n):
-        plane = planes[table][i]
-        prods = [
-            f"CAST({vec}[{j + 1}] AS DOUBLE) * CAST('{plane[j]!r}' AS DOUBLE)"
-            for j in range(DIM)
-        ]
-        proj = "(0.0 + " + " + ".join(prods) + ")"
+    for i, plane in enumerate(planes[table]):
+        proj = _fold_duck(_duck_cols(vec), _duck_lits(plane), _MUL)
         terms.append(
             f"CASE WHEN {proj} >= 0 THEN CAST({2 ** (n - 1 - i)} AS BIGINT)"
             f" ELSE CAST(0 AS BIGINT) END"
@@ -1048,7 +1045,7 @@ def embedding_linear_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     for c in range(N_CLASSES):
         lits = ", ".join(f"{w!r}D" for w in CLF_WEIGHTS[c])
         score_cols.append(
-            F.expr(_dot_spark_sql("vec", f"array({lits})")).alias(f"score_{c}")
+            F.expr(_fold_spark("vec", f"array({lits})", _MUL)).alias(f"score_{c}")
         )
     scored = base.select("vec_id", *score_cols)
     pred = F.expr(
@@ -1062,27 +1059,17 @@ def embedding_linear_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.withColumn("predicted_class", pred.cast("int"))
 
 
-def _clf_dot_duck(vec: str, c: int) -> str:
-    # weight literals must be QUOTED strings: DuckDB parses a bare
-    # 16-digit literal as DECIMAL whose int128→double conversion
-    # DOUBLE-ROUNDS (mantissa > 2^53, then a divide) — measured 1-ulp
-    # off Python/Java's correctly-rounded strtod. CAST('…' AS DOUBLE)
-    # goes through strtod and matches Spark's literal parse exactly.
-    terms = [
-        f"CAST({vec}[{j + 1}] AS DOUBLE)"
-        f" * CAST('{CLF_WEIGHTS[c][j]!r}' AS DOUBLE)"
-        for j in range(DIM)
-    ]
-    return "(0.0 + " + " + ".join(terms) + ")"
-
-
+_clf_dots = [
+    _fold_duck(_duck_cols("embedding"), _duck_lits(CLF_WEIGHTS[c]), _MUL)
+    for c in range(N_CLASSES)
+]
 _score_sel = ", ".join(
-    f"{_clf_dot_duck('embedding', c)} AS score_{c}" for c in range(N_CLASSES)
+    f"{_clf_dots[c]} AS score_{c}" for c in range(N_CLASSES)
 )
 _pred_whens = " ".join(
     "WHEN "
     + " AND ".join(
-        f"{_clf_dot_duck('embedding', c)} >= {_clf_dot_duck('embedding', d)}"
+        f"{_clf_dots[c]} >= {_clf_dots[d]}"
         for d in range(N_CLASSES)
         if d != c
     )
@@ -1153,6 +1140,8 @@ def _quant_duck_terms() -> tuple[str, str, str, str]:
     els = [f"CAST(embedding[{j}] AS DOUBLE)" for j in range(1, DIM + 1)]
     amax = "greatest(0.0, " + ", ".join(f"abs({e})" for e in els) + ")"
     q = [f"floor({e} / scale + 0.5)" for e in els]
+    # not a `_fold_duck`: one list of integer-valued doubles (|q| ≤ 127),
+    # whose sum is exact in any order
     q_sum = "CAST((0.0 + " + " + ".join(q) + ") AS BIGINT)"
     q_abs_max = (
         "CAST(greatest(0.0, " + ", ".join(f"abs({t})" for t in q)
@@ -1250,7 +1239,10 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     enriched = rep.join(F.broadcast(mem), "cluster_id")
     cos = cosine_expr(
-        "rvec", "vec", _norm_spark_sql("rvec"), _norm_spark_sql("vec")
+        "rvec",
+        "vec",
+        f"sqrt({_fold_spark('rvec', 'rvec', _MUL)})",
+        f"sqrt({_fold_spark('vec', 'vec', _MUL)})",
     )
     kept = enriched.where(
         (F.col("doc_id") == F.col("cluster_id")) | (cos >= NEARDUP_TAU)
@@ -1407,27 +1399,6 @@ PQ_ID_BOUND = PQ_MOD * PQ_CAP
 PQ_LITERAL_MAX = 64  # codebook entries embedded as plan literals up to here
 
 
-def _sqdist_spark_sql(a: str, b: str) -> str:
-    """Left-to-right squared-L2 fold (same portability contract as
-    `_dot_spark_sql`): aggregate(zip_with(a,b,(x,y)->(x-y)*(x-y)),
-    0.0, +) ≡ DuckDB's unrolled 0.0 + (a1-b1)² + ... chain."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-        "0.0D, (acc, v) -> acc + v)"
-    )
-
-
-def _sqdist_sub_sql(a: str, b: str, off: int, n: int) -> str:
-    """DuckDB mirror over a 1-based slice [off, off+n) — BOTH sides
-    take the same subspace slice."""
-    terms = [
-        f"(CAST({a}[{off + i}] AS DOUBLE) - CAST({b}[{off + i}] AS DOUBLE))"
-        f" * (CAST({a}[{off + i}] AS DOUBLE) - CAST({b}[{off + i}] AS DOUBLE))"
-        for i in range(n)
-    ]
-    return "(0.0 + " + " + ".join(terms) + ")"
-
-
 def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantize every embedding: split the 64-dim vector into
     PQ_M=4 16-dim subspaces, assign each sub-vector to its nearest
@@ -1473,13 +1444,14 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
             off = m * PQ_SUB + 1  # 1-based slice start
             entries = ", ".join(
                 "named_struct('d', "
-                + _sqdist_spark_sql(
+                + _fold_spark(
                     f"slice(vec, {off}, {PQ_SUB})",
                     "array("
                     + ", ".join(
                         f"{v!r}D" for v in r.vec[off - 1 : off - 1 + PQ_SUB]
                     )
                     + ")",
+                    _SQDIFF,
                 )
                 + f", 'cid', CAST({r.vec_id} AS BIGINT))"
                 for r in cents
@@ -1508,8 +1480,10 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     bests = []
     for m in range(PQ_M):
         off = m * PQ_SUB + 1
-        d = _sqdist_spark_sql(
-            f"slice(vec, {off}, {PQ_SUB})", f"slice(c.cvec, {off}, {PQ_SUB})"
+        d = _fold_spark(
+            f"slice(vec, {off}, {PQ_SUB})",
+            f"slice(c.cvec, {off}, {PQ_SUB})",
+            _SQDIFF,
         )
         bests.append(
             f"array_min(transform(cb, c -> named_struct('d', {d}, "
@@ -1532,7 +1506,11 @@ def _build_pq_sql() -> str:
     sub_assignments = []
     for m in range(PQ_M):
         off = m * PQ_SUB + 1
-        d = _sqdist_sub_sql("b.embedding", "c.embedding", off, PQ_SUB)
+        d = _fold_duck(
+            _duck_cols("b.embedding", off, PQ_SUB),
+            _duck_cols("c.embedding", off, PQ_SUB),
+            _SQDIFF,
+        )
         sub_assignments.append(f"""
   sub{m} AS (
     SELECT vec_id, cid AS code, d FROM (
@@ -1603,9 +1581,10 @@ def _pq_query_lut(spark: SparkSession, sf_dir: str) -> DataFrame:
             off = m * PQ_SUB + 1
             lut_cols.append(
                 F.expr(
-                    _sqdist_spark_sql(
+                    _fold_spark(
                         f"slice(qvec, {off}, {PQ_SUB})",
                         f"slice(cvec, {off}, {PQ_SUB})",
+                        _SQDIFF,
                     )
                 ).alias(f"d{m + 1}")
             )
@@ -2002,18 +1981,13 @@ HYBRID_RRF_SEARCH_SQL = _build_hybrid_rrf_sql()
 # ---------------------------------------------------------------------------
 
 
-# (_sqdist_spark_sql lives ONCE in the PQ section above — a second
-# textually-identical definition here used to shadow it for all later
-# callers, an edit-drift hazard flagged by the r5 advice sweep.)
-
-
-def _sqdist_duck_sql(a: str, b: str) -> str:
-    terms = [
-        f"(CAST({a}[{i}] AS DOUBLE) - {b}[{i}])"
-        f" * (CAST({a}[{i}] AS DOUBLE) - {b}[{i}])"
-        for i in range(1, DIM + 1)
-    ]
-    return "(0.0 + " + " + ".join(terms) + ")"
+#: squared distance of `b.embedding` to centroid `c.cvec` (a DOUBLE
+#: list already, so its elements are not cast)
+_KM_D2_SQL = _fold_duck(
+    _duck_cols("b.embedding"),
+    [f"c.cvec[{i}]" for i in range(1, DIM + 1)],
+    _SQDIFF,
+)
 
 
 #: inertia quantization: q = floor(d2·1e6 + 0.5) — an ORDER-FREE exact
@@ -2064,7 +2038,7 @@ def kmeans_assignment_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).select("vec_id", "label", _dvec("embedding").alias("vec"))
     scored = base.crossJoin(F.broadcast(cent)).withColumn(
-        "d2", F.expr(_sqdist_spark_sql("vec", "cvec"))
+        "d2", F.expr(_fold_spark("vec", "cvec", _SQDIFF))
     )
     # winner via min(struct(d2, clabel, …)) groupBy, NOT a vec_id
     # window: the broadcast nest keeps a vector's k rows co-located,
@@ -2129,7 +2103,7 @@ cent AS (
 ),
 scored AS (
   SELECT b.vec_id, b.label, c.clabel,
-         {_sqdist_duck_sql('b.embedding', 'c.cvec')} AS d2
+         {_KM_D2_SQL} AS d2
   FROM ok b CROSS JOIN cent c
 ),
 best AS (
@@ -2218,13 +2192,12 @@ def kmeans_lloyd_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n·k rows and paid a corpus-wide vec_id exchange per iteration;
     # the fold visits centroids in clabel order, so strict `<` keeps
     # the earliest clabel on ties ≡ min(struct(d2, clabel)) ≡ the
-    # oracle's row_number ORDER BY (d2, clabel). d2 is the SAME
-    # zip_with/aggregate left fold as before, evaluated once per
-    # centroid via transform.
+    # oracle's row_number ORDER BY (d2, clabel). d2 is one
+    # `_fold_spark` per centroid, evaluated via transform.
     best_sql = (
         "aggregate("
         "transform(cents, c -> named_struct("
-        f"'d2', {_sqdist_spark_sql('vec', 'c.cvec')}, "
+        f"'d2', {_fold_spark('vec', 'c.cvec', _SQDIFF)}, "
         "'clabel', c.clabel)), "
         "CAST(NULL AS struct<d2: double, clabel: bigint>), "
         "(acc, x) -> CASE WHEN acc IS NULL OR x.d2 < acc.d2 "
@@ -2303,7 +2276,7 @@ def _build_kmeans_loop_sql() -> str:
 )""",
         "a0 AS (SELECT vec_id, CAST(label AS BIGINT) AS cur FROM ok)",
     ]
-    d2 = _sqdist_duck_sql("b.embedding", "c.cvec")
+    d2 = _KM_D2_SQL
     for it in range(1, KM_ITERS + 1):
         p = it - 1
         ctes.append(
@@ -2613,7 +2586,7 @@ def embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", _dvec("embedding").alias("vec"))
         .withColumn("norm", norm_expr("vec"))
         .withColumn("tvec", F.expr(f"slice(vec, 1, {MRL_DIM})"))
-        .withColumn("tnorm", F.expr(_norm_spark_sql(f"slice(vec, 1, {MRL_DIM})")))
+        .withColumn("tnorm", norm_expr(f"slice(vec, 1, {MRL_DIM})"))
     )
     q = base.where(F.expr(query_subset_pred())).select(
         F.col("vec_id").alias("query_id"),
@@ -2658,27 +2631,11 @@ def embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _trunc_dot_sql(a: str, b: str) -> str:
-    terms = [
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-        for i in range(1, MRL_DIM + 1)
-    ]
-    return "(0.0 + " + " + ".join(terms) + ")"
-
-
-def _trunc_norm_sql(a: str) -> str:
-    terms = [
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({a}[{i}] AS DOUBLE)"
-        for i in range(1, MRL_DIM + 1)
-    ]
-    return "sqrt(0.0 + " + " + ".join(terms) + ")"
-
-
 EMBEDDING_MATRYOSHKA_RECALL_SQL = f"""
 WITH base AS (
   SELECT vec_id, embedding,
          {norm_sql('embedding')} AS nrm,
-         {_trunc_norm_sql('embedding')} AS tnrm
+         {norm_sql('embedding', MRL_DIM)} AS tnrm
   FROM embeddings
 ),
 q AS (
@@ -2689,7 +2646,7 @@ q AS (
 scored AS (
   SELECT q.query_id, b.vec_id,
          {dot_sql('q.qe', 'b.embedding')} / (q.qnorm * b.nrm) AS cos_full,
-         {_trunc_dot_sql('q.qe', 'b.embedding')} / (q.qtnorm * b.tnrm)
+         {dot_sql('q.qe', 'b.embedding', MRL_DIM)} / (q.qtnorm * b.tnrm)
            AS cos_trunc
   FROM base b JOIN q ON b.vec_id <> q.query_id
 ),
@@ -2769,24 +2726,21 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("query_id") == F.col(f"q{m}"))
             & (F.col(f"code_{m}") == F.col(f"c{m}")),
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist"), F.col("vec_id")
+    scored = adc.where(F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        "vec_id",
+        F.expr("((d1 + d2) + d3) + d4").alias("adc_dist"),
     )
-    return (
-        adc.where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.expr("((d1 + d2) + d3) + d4").alias("adc_dist"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-    )
+    return _topk_per_query(scored, "adc_dist", ascending=True)
 
 
 def _build_pq_adc_sql() -> str:
     d_terms = ", ".join(
-        _sqdist_sub_sql("q.qe", "c.ce", m * PQ_SUB + 1, PQ_SUB)
+        _fold_duck(
+            _duck_cols("q.qe", m * PQ_SUB + 1, PQ_SUB),
+            _duck_cols("c.ce", m * PQ_SUB + 1, PQ_SUB),
+            _SQDIFF,
+        )
         + f" AS d{m + 1}"
         for m in range(PQ_M)
     )
@@ -2892,23 +2846,21 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("query_id") == F.col(f"q{m}"))
             & (F.col(f"code_{m}") == F.col(f"c{m}")),
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist"), F.col("vec_id")
+    scored = adc.select(
+        "query_id",
+        "vec_id",
+        F.expr("((d1 + d2) + d3) + d4").alias("adc_dist"),
     )
-    return (
-        adc.select(
-            "query_id",
-            "vec_id",
-            F.expr("((d1 + d2) + d3) + d4").alias("adc_dist"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-    )
+    return _topk_per_query(scored, "adc_dist", ascending=True)
 
 
 def _build_ivfpq_sql() -> str:
     d_terms = ", ".join(
-        _sqdist_sub_sql("q.qe", "c.ce", m * PQ_SUB + 1, PQ_SUB)
+        _fold_duck(
+            _duck_cols("q.qe", m * PQ_SUB + 1, PQ_SUB),
+            _duck_cols("c.ce", m * PQ_SUB + 1, PQ_SUB),
+            _SQDIFF,
+        )
         + f" AS d{m + 1}"
         for m in range(PQ_M)
     )
@@ -2994,22 +2946,33 @@ ANN_IVFPQ_TOPK_SQL = _build_ivfpq_sql()
 MAXSIM_M = PQ_M  # sub-vectors per document/query (4 × 16 dims)
 
 
-def _sub_dot_spark(a: str, ao: int, b: str, bo: int, n: int) -> str:
-    """Left-to-right fold of the n-term dot product between a[ao..]
-    and b[bo..] (1-based offsets) — same accumulation order as the
-    oracle's unrolled left-associative chain."""
-    return (
-        f"aggregate(zip_with(slice({a}, {ao}, {n}), slice({b}, {bo}, {n}), "
-        "(x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
-    )
-
-
-def _sub_dot_duck(a: str, ao: int, b: str, bo: int, n: int) -> str:
-    terms = [
-        f"CAST({a}[{ao + j}] AS DOUBLE) * CAST({b}[{bo + j}] AS DOUBLE)"
-        for j in range(n)
+def _maxsim_subs(a: str) -> list[str]:
+    """The MAXSIM_M sub-vectors of the Spark array column `a`."""
+    return [
+        f"slice({a}, {m * PQ_SUB + 1}, {PQ_SUB})" for m in range(MAXSIM_M)
     ]
-    return "(0.0 + " + " + ".join(terms) + ")"
+
+
+def _maxsim_norms(prefix: str) -> list[Column]:
+    """Sub-vector norms of `vec`, aliased `{prefix}1` .. `{prefix}M`."""
+    return [
+        F.expr(f"sqrt({_fold_spark(v, v, _MUL)})").alias(f"{prefix}{m + 1}")
+        for m, v in enumerate(_maxsim_subs("vec"))
+    ]
+
+
+def _maxsim_score_sql() -> str:
+    """One generated Spark SQL scoring expression over (qvec, qn*) ×
+    (vec, n*): sum_m greatest_k(subcos(m, k))."""
+    qs, vs = _maxsim_subs("qvec"), _maxsim_subs("vec")
+    per_m = []
+    for m in range(MAXSIM_M):
+        cosines = [
+            f"({_fold_spark(qs[m], vs[k], _MUL)} / (qn{m + 1} * n{k + 1}))"
+            for k in range(MAXSIM_M)
+        ]
+        per_m.append("greatest(" + ", ".join(cosines) + ")")
+    return "(" + " + ".join(per_m) + ")"
 
 
 def _maxsim_scored(
@@ -3019,15 +2982,9 @@ def _maxsim_scored(
     restricts the CANDIDATE side before the M² scoring expression
     (pass-1 sample of `boundary_pruned_topk`)."""
     e = load_table(spark, sf_dir, "embeddings")
-    sub = PQ_SUB
     base_cols = [F.col("vec_id"), _dvec("embedding").alias("vec")]
     base = balanced(e).select(*base_cols)
-    norm_cols = [
-        F.expr(
-            f"sqrt({_sub_dot_spark('vec', m * sub + 1, 'vec', m * sub + 1, sub)})"
-        ).alias(f"n{m + 1}")
-        for m in range(MAXSIM_M)
-    ]
+    norm_cols = _maxsim_norms("n")
     base = base.select("vec_id", "vec", *norm_cols)
     # the ≤ QUERY_CAP-row broadcast side rides the raw scan: a
     # balanced() spread of 80 rows is a pure extra exchange + stage at
@@ -3045,19 +3002,9 @@ def _maxsim_scored(
             ],
         )
     )
-    # one generated scoring expression: sum_m greatest_k(subcos(m, k))
-    per_m = []
-    for m in range(MAXSIM_M):
-        cosines = [
-            f"({_sub_dot_spark('qvec', m * sub + 1, 'vec', k * sub + 1, sub)}"
-            f" / (qn{m + 1} * n{k + 1}))"
-            for k in range(MAXSIM_M)
-        ]
-        per_m.append("greatest(" + ", ".join(cosines) + ")")
-    score_sql = "(" + " + ".join(per_m) + ")"
     cand = base.where(F.expr(pred)) if pred else base
     joined = cand.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-    return joined.withColumn("maxsim", F.expr(score_sql)).select(
+    return joined.withColumn("maxsim", F.expr(_maxsim_score_sql())).select(
         "query_id", "vec_id", "maxsim"
     )
 
@@ -3090,16 +3037,18 @@ def multivector_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_maxsim_sql() -> str:
-    sub = PQ_SUB
+    es, qs, bs = (
+        [_duck_cols(a, m * PQ_SUB + 1, PQ_SUB) for m in range(MAXSIM_M)]
+        for a in ("embedding", "q.qe", "b.embedding")
+    )
     norm_cols = ",\n         ".join(
-        f"sqrt({_sub_dot_duck('embedding', m * sub + 1, 'embedding', m * sub + 1, sub)})"
-        f" AS n{m + 1}"
+        f"sqrt({_fold_duck(es[m], es[m], _MUL)}) AS n{m + 1}"
         for m in range(MAXSIM_M)
     )
     per_m = []
     for m in range(MAXSIM_M):
         cosines = [
-            f"({_sub_dot_duck('q.qe', m * sub + 1, 'b.embedding', k * sub + 1, sub)}"
+            f"({_fold_duck(qs[m], bs[k], _MUL)}"
             f" / (q.qn{m + 1} * b.n{k + 1}))"
             for k in range(MAXSIM_M)
         ]
@@ -3488,23 +3437,13 @@ def _maxsim_rescore_candidates(
     the routing used by `ann_maxsim_rescored_topk`; the scaling probe
     counts this frame's rows, so the wall-tracks-candidates evidence
     can't drift from the shipped operator."""
-    sub = PQ_SUB
     quantized = _ivf_quantized(spark, sf_dir)
     valid = valid_vec_pred_spark("vec")
-
-    def msnorms(prefix: str) -> list[Column]:
-        return [
-            F.expr(
-                f"sqrt({_sub_dot_spark('vec', m * sub + 1, 'vec', m * sub + 1, sub)})"
-            ).alias(f"{prefix}{m + 1}")
-            for m in range(MAXSIM_M)
-        ]
-
     assigned = quantized.where(F.expr(valid)).select(
         "vec_id",
         "vec",
         F.col("near")[0]["cid"].alias("list_id"),
-        *msnorms("n"),
+        *_maxsim_norms("n"),
     )
     probes = (
         quantized.where(F.expr(query_subset_pred()))
@@ -3512,12 +3451,7 @@ def _maxsim_rescore_candidates(
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("vec").alias("qvec"),
-            *[
-                F.expr(
-                    f"sqrt({_sub_dot_spark('vec', m * sub + 1, 'vec', m * sub + 1, sub)})"
-                ).alias(f"qn{m + 1}")
-                for m in range(MAXSIM_M)
-            ],
+            *_maxsim_norms("qn"),
             F.explode(
                 F.expr("transform(near, s -> s.cid)")
             ).alias("list_id"),
@@ -3553,38 +3487,24 @@ def ann_maxsim_rescored_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     |Q| partitions of list-sized input — never an unpartitioned
     corpus sort)."""
     joined = _maxsim_rescore_candidates(spark, sf_dir)
-    sub = PQ_SUB
-    per_m = []
-    for m in range(MAXSIM_M):
-        cosines = [
-            f"({_sub_dot_spark('qvec', m * sub + 1, 'vec', k * sub + 1, sub)}"
-            f" / (qn{m + 1} * n{k + 1}))"
-            for k in range(MAXSIM_M)
-        ]
-        per_m.append("greatest(" + ", ".join(cosines) + ")")
-    score_sql = "(" + " + ".join(per_m) + ")"
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("maxsim").desc(), F.col("vec_id")
-    )
-    return (
-        joined.withColumn("maxsim", F.expr(score_sql))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", "maxsim", "rank")
+    return _topk_per_query(
+        joined.withColumn("maxsim", F.expr(_maxsim_score_sql())), "maxsim"
     )
 
 
 def _build_maxsim_rescored_sql() -> str:
-    sub = PQ_SUB
+    es, qs, bs = (
+        [_duck_cols(a, m * PQ_SUB + 1, PQ_SUB) for m in range(MAXSIM_M)]
+        for a in ("embedding", "q.embedding", "b.embedding")
+    )
     norm_cols = ",\n         ".join(
-        f"sqrt({_sub_dot_duck('embedding', m * sub + 1, 'embedding', m * sub + 1, sub)})"
-        f" AS n{m + 1}"
+        f"sqrt({_fold_duck(es[m], es[m], _MUL)}) AS n{m + 1}"
         for m in range(MAXSIM_M)
     )
     per_m = []
     for m in range(MAXSIM_M):
         cosines = [
-            f"({_sub_dot_duck('q.embedding', m * sub + 1, 'b.embedding', k * sub + 1, sub)}"
+            f"({_fold_duck(qs[m], bs[k], _MUL)}"
             f" / (q.n{m + 1} * b.n{k + 1}))"
             for k in range(MAXSIM_M)
         ]
@@ -4043,7 +3963,7 @@ cand AS (
 ),
 scored AS (
   SELECT /*+ BROADCAST(ca) */ ca.did, ca.cid,
-         {_dot_spark_sql("ca.avec", "b.vec")} / (ca.anorm * b.norm)
+         {_fold_spark("ca.avec", "b.vec", _MUL)} / (ca.anorm * b.norm)
            AS cosine
   FROM (
     SELECT /*+ BROADCAST(a) */ cand.did, cand.cid,

@@ -14,7 +14,9 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 Plan files land as <plans-dir>/<query>_<suffix>.txt: the optimized
 logical plan, normalized (`normalize_plan`) so that two captures of the
 same code diff empty and captures of two commits diff only where the
-plans differ. The header carries the physical plan's Exchange count.
+plans differ. The header carries the physical plan's Exchange count and
+the sha256 of the query's DuckDB oracle SQL, so one `diff -r` of two
+captures checks plan identity and oracle identity together.
 Timings print as one JSON line per query. Plans are captured from the
 SAME DataFrame object that gets timed, in a fresh-claims session
 (caches released first) so the cold plan is what's recorded (matches
@@ -25,6 +27,7 @@ shapes).
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import re
@@ -49,6 +52,12 @@ def normalize_plan(plan: str) -> str:
     for pattern, repl in _PLAN_NOISE:
         plan = pattern.sub(repl, plan)
     return plan
+
+
+def _sha256(oracle: str | None) -> str:
+    if oracle is None:
+        return "none (rows-only check)"
+    return hashlib.sha256(oracle.encode()).hexdigest()
 
 
 def main() -> None:
@@ -107,6 +116,7 @@ def main() -> None:
                 "cost is paid at claim time inside the builder, "
                 "outside this plan.\n"
                 f"-- physical plan: Exchange={n_ex}, PythonNodes={n_py}\n"
+                f"-- oracle sha256: {_sha256(spec.oracle)}\n"
             )
             with open(path, "w") as f:
                 f.write(header + normalize_plan(qe.optimizedPlan().toString()))
