@@ -9,6 +9,9 @@ distributed pass:
     + closed-form running total per loan      -- T2, no window needed
     + pure column expressions for T3–T5
 
+Per-loan terms (duration, EMI, last elapsed month) are computed once
+per loan below the explode; only the per-month terms run per month.
+
 Scale design: the whole pipeline is NARROW — the explode is a Generate
 and the running total is computed in closed form (see the T2 comment
 below), so the schedule needs ZERO shuffles: at 100 TB it streams
@@ -28,9 +31,9 @@ Fidelity traps handled (golden-output critical):
   not "fixed" (/root/reference/main.py:158-163).
 - NaN poisoning: for loans with no extension row, `collected` is
   NaN ≡ NULL in elapsed months; pandas' running float becomes NaN
-  forever after. A plain Spark window SUM would *skip* NULLs, so we
-  explicitly NULL the running total from the first NULL onward
-  (max-flag window) to match (SURVEY.md §2.11).
+  forever after. A plain Spark window SUM would *skip* NULLs, so the
+  closed-form total is NULL whenever `emi_collected` is NULL and at
+  least one month has elapsed, 0.0 before that (SURVEY.md §2.11).
 - Second DPD bucket label scheme differs from loan_final's
   (/root/reference/main.py:167-176) — separate CASE, not shared.
 - `round` is Python banker's rounding (/root/reference/main.py:182-185).
@@ -100,19 +103,50 @@ def monthly_schedule(df: DataFrame, as_of: dt.date) -> DataFrame:
     )
     emi = F.when(dur > 0, total_payable / dur).otherwise(F.lit(0.0))  # main.py:156
 
-    base = df.select(
+    # Running total (T2) in CLOSED FORM — no window, no shuffle. The
+    # reference adds the full cumulative `emi_collected` once per
+    # elapsed month (main.py:158-163), so after month m the total is
+    # emi_collected × elapsed(m) with elapsed(m) = #{j ≤ m :
+    # add_months(disb,j) ≤ as_of}. Due dates are strictly increasing
+    # in j, so elapsed(m) = least(m, E) where E is the last elapsed
+    # month index: E = md if add_months(disb, md) ≤ as_of else md-1
+    # (md = calendar month diff to as_of; E clamped ≥ 0). Integer
+    # arithmetic → engine-exact (a double window SUM would not be:
+    # accumulation order differs between engines in the last ulp).
+    as_of_lit = F.lit(as_of)
+    md_asof = (
+        (F.lit(as_of.year) - F.year(disb)) * F.lit(12)
+        + (F.lit(as_of.month) - F.month(disb))
+    ).cast("int")
+    last_elapsed = F.greatest(
+        F.lit(0),
+        F.when(F.add_months(disb, md_asof) <= as_of_lit, md_asof).otherwise(
+            md_asof - F.lit(1)
+        ),
+    )
+
+    # Per-loan terms go in a select BELOW the explode: Catalyst puts
+    # every select item next to `explode()` in a Project above the
+    # Generate and never moves it back, so there they would run once
+    # per generated month instead of once per loan.
+    per_loan = df.select(
         "loan_id",
         disb.alias("__disb"),
         F.col("emi_collected").alias("__ec"),
         emi.alias("emi_amount"),
+        last_elapsed.alias("__last_elapsed"),
+        dur.alias("__dur"),
+    )
+    n = F.col("__dur")
+    base = per_loan.select(
+        "*",
         F.explode(
-            F.when(dur >= 1, F.sequence(F.lit(1), dur)).otherwise(
+            F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
                 F.array().cast("array<int>")
             )
         ).alias("month"),
     )
 
-    as_of_lit = F.lit(as_of)
     due_m = F.add_months(F.col("__disb"), F.col("month"))  # main.py:160
     demand = F.col("emi_amount") * F.col("month")  # main.py:161
     collected = F.when(due_m <= as_of_lit, F.col("__ec")).otherwise(F.lit(0.0))
@@ -124,30 +158,10 @@ def monthly_schedule(df: DataFrame, as_of: dt.date) -> DataFrame:
             "collected": collected,
         }
     )
-    # Running total (T2) in CLOSED FORM — no window, no shuffle. The
-    # reference adds the full cumulative `emi_collected` once per
-    # elapsed month (main.py:158-163), so after month m the total is
-    # emi_collected × elapsed(m) with elapsed(m) = #{j ≤ m :
-    # add_months(disb,j) ≤ as_of}. Due dates are strictly increasing
-    # in j, so elapsed(m) = least(m, E) where E is the last elapsed
-    # month index: E = md if add_months(disb, md) ≤ as_of else md-1
-    # (md = calendar month diff to as_of; E clamped ≥ 0). Integer
-    # arithmetic → engine-exact (a double window SUM would not be:
-    # accumulation order differs between engines in the last ulp).
+    elapsed = F.least(F.col("month"), F.col("__last_elapsed")).cast("long")
     # NaN-poisoning: pandas' float accumulator goes NaN forever once a
     # NaN (≡ NULL, left-join miss) is added — i.e. whenever
     # emi_collected IS NULL and at least one month elapsed.
-    md_asof = (
-        (F.lit(as_of.year) - F.year(F.col("__disb"))) * F.lit(12)
-        + (F.lit(as_of.month) - F.month(F.col("__disb")))
-    ).cast("int")
-    last_elapsed = F.greatest(
-        F.lit(0),
-        F.when(
-            F.add_months(F.col("__disb"), md_asof) <= as_of_lit, md_asof
-        ).otherwise(md_asof - F.lit(1)),
-    )
-    elapsed = F.least(F.col("month"), last_elapsed).cast("long")
     total_collected = (
         F.when(elapsed == 0, F.lit(0.0))
         .when(F.col("__ec").isNull(), F.lit(None).cast("double"))

@@ -20,8 +20,14 @@ Scale notes:
   broadcast for the known-small harness dims.
 - J2 (loans ⟕ extensions) is key-key on `loan_id`; with both sides
   large this is a shuffle join on a high-cardinality key → no skew.
-- Everything after the joins is narrow (projections, explode) except
-  the schedule window's partition-by-loan_id shuffle.
+- Everything after the joins is narrow (projections, explode): the
+  schedule expansion is zero-shuffle.
+- The parquet schedule sink writes `total_demand_till_month` and
+  `arrear` without a dictionary. Both are emi × month terms, nearly
+  unique per row, so a dictionary only costs: parquet-mr fills it and
+  falls back to plain for the first, and keeps a larger-than-plain one
+  for the second. `dpd_days` keeps its dictionary (dropping it too
+  measured slower and larger).
 """
 
 from __future__ import annotations
@@ -76,6 +82,11 @@ def loan_monthly_schedule(
     return monthly_schedule(balanced(joined_loans(spark, sf_dir)), as_of)
 
 
+#: near-unique schedule money columns written without a parquet
+#: dictionary (see the module docstring)
+_PLAIN_SCHEDULE_COLUMNS = ("total_demand_till_month", "arrear")
+
+
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
@@ -95,9 +106,15 @@ def run_pipeline(
         final_path = f"{out_dir}/loan_final"
         sched_path = f"{out_dir}/loan_monthly_schedule"
         final_df.write.mode("overwrite").format(file_format).save(final_path)
-        monthly_schedule(final_df, as_of).write.mode("overwrite").format(
-            file_format
-        ).save(sched_path)
+        sched_writer = monthly_schedule(final_df, as_of).write
+        if file_format == "parquet":
+            sched_writer = sched_writer.options(
+                **{
+                    f"parquet.enable.dictionary#{c}": "false"
+                    for c in _PLAIN_SCHEDULE_COLUMNS
+                }
+            )
+        sched_writer.mode("overwrite").format(file_format).save(sched_path)
         return {"loan_final": final_path, "loan_monthly_schedule": sched_path}
     finally:
         final_df.unpersist()

@@ -842,6 +842,32 @@ def test_hot_paths_stay_in_codegen(spark):
         f"Python workers on the hot path:\n{plan}"
     )
 
+
+def test_schedule_per_loan_terms_below_explode(spark):
+    """The schedule's per-loan terms (duration, EMI, last elapsed month)
+    are computed below the Generate, so the explode passes none of the
+    raw loan columns they are derived from to each generated month."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from etl_portfolio_project_spark.operators.schedule import monthly_schedule
+    from etl_portfolio_project_spark.sources import views
+
+    loans = views.loans(spark, SF_SMALL).withColumn(
+        "emi_collected", F.lit(None).cast("double")
+    )
+    plan = explain.physical_plan(monthly_schedule(loans, views.AS_OF))
+    ids = re.findall(r"^\((\d+)\) Generate\b", plan, re.M)
+    assert len(ids) == 1, plan
+    inputs = re.search(
+        r"^Input \[\d+\]: \[(.*)\]$", explain.node_detail(plan, int(ids[0])), re.M
+    ).group(1)
+    names = set(re.findall(r"(\w+)#", inputs))
+    raw = {"due_date", "interest_rate", "disbursement_amount"}
+    assert not names & raw, f"Generate input {sorted(names)}:\n{plan}"
+
+
 def test_runtime_bloom_filter_injects(spark):
     """Spark's native runtime-filter path: with the size thresholds
     met, the optimizer injects bloom_filter_agg on the creation side

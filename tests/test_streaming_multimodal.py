@@ -144,6 +144,45 @@ def test_pipeline_sinks_roundtrip(spark, tmp_path):
     assert spark.read.parquet(paths2["loan_final"]).count() == 1500
 
 
+def test_schedule_sink_encoding(spark, tmp_path):
+    """The schedule sink writes its near-unique money columns plain (no
+    dictionary page) while the low-cardinality columns keep theirs, and
+    the sink still equals the loan_monthly_schedule oracle."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from etl_portfolio_project_spark import api
+    from tools.verify_local import compare, duck_con
+
+    sched = loan_pipeline.run_pipeline(spark, SF_SMALL, str(tmp_path))[
+        "loan_monthly_schedule"
+    ]
+    files = sorted(glob.glob(f"{sched}/*.parquet"))
+    assert files
+    has_dict: dict[str, set[bool]] = {}
+    for path in files:
+        meta = pq.read_metadata(path)
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            for c in range(rg.num_columns):
+                chunk = rg.column(c)
+                has_dict.setdefault(chunk.path_in_schema, set()).add(
+                    chunk.has_dictionary_page
+                )
+    for col in ("total_demand_till_month", "arrear"):
+        assert has_dict[col] == {False}, (col, has_dict)
+    for col in ("loan_id", "emi_due_date", "dpd_days", "dpd_bucket"):
+        assert has_dict[col] == {True}, (col, has_dict)
+
+    got = spark.read.parquet(sched).toPandas()
+    want = duck_con(SF_SMALL).execute(
+        api.REGISTRY["loan_monthly_schedule"].oracle
+    ).df()
+    problems = compare("loan_monthly_schedule", got, want)
+    assert not problems, problems
+
+
 # --- plan-shape assertions (SURVEY.md §4 discipline) ----------------------
 
 
@@ -164,10 +203,9 @@ def test_dim_join_broadcasts(spark):
     explain.assert_broadcast_join(df)
 
 
-def test_schedule_single_shuffle(spark):
-    """The schedule pipeline needs exactly one exchange (the window's
-    partition-by-loan_id) beyond the join's broadcast — no shuffle for
-    the explode."""
+def test_schedule_no_shuffle(spark):
+    """The schedule expansion is narrow: explode plus the closed-form
+    running total, so no exchange at all."""
     from etl_portfolio_project_spark.sources import views
     from etl_portfolio_project_spark.operators.schedule import monthly_schedule
 
@@ -175,7 +213,7 @@ def test_schedule_single_shuffle(spark):
         "emi_collected", F.lit(None).cast("double")
     )
     df = monthly_schedule(loans, views.AS_OF)
-    assert explain.count_shuffles(df) <= 1, explain.physical_plan(df)
+    assert explain.count_shuffles(df) == 0, explain.physical_plan(df)
 
 
 def test_stateful_operator_across_multiple_microbatches(spark, tmp_path):
