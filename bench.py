@@ -32,71 +32,6 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 
-#: perf-canary subset — FROZEN; do not add/remove names (cross-round
-#: comparability is the whole point). Chosen r9: stable timings,
-#: one per operator class, no streams/caches/session indexes.
-CANARY_QUERIES = [
-    "filter_pushdown",
-    "dedup_exact",
-    "top_words",
-    "monthly_revenue",
-    "gopher_quality_flags",
-    "embedding_dim_profile",
-    "sessionize_events",
-    "tpch_q3_shipping_priority",
-    "agg_pricing_summary",
-    "loan_final",
-]
-
-#: heavy-canary subset — FROZEN from r11 (+1 r12); the cheap canary
-#: above is insensitive to load that smears only long multi-stage DAGs
-#: (r11 observation: a 2.0× session carried an in-band cheap canary
-#: while incremental_release_diff ran 2.7× its own best). These are
-#: the suite's stable heavy tail; their SUITE timings are reused (no
-#: extra runs), so heavy_canary_total decomposes a wall move into
-#: ambient-load-on-heavies vs real change the same way canary_total
-#: does for the cheap classes. r12 adds multivector_maxsim_topk
-#: (VERDICT r11 #3): its 10.57 s driver outlier was invisible to both
-#: canaries because none covered the generated-expression scoring
-#: class; as a member its own cross-session band is tracked directly.
-#: r13 adds stream_embedding_index_ingest (VERDICT r12 #1): at 9.5 s
-#: driver / 6.0 s builder it became the suite's most expensive query
-#: while sitting in NEITHER canary — the exact blind-spot class that
-#: hid multivector_maxsim_topk in r11.
-HEAVY_CANARY_QUERIES = [
-    "corpus_release_pipeline",
-    "dedup_keep_best",
-    "bitext_margin_mining",
-    "stream_incremental_dedup",
-    "multivector_maxsim_topk",
-    "stream_embedding_index_ingest",
-]
-
-
-def _load_receipt() -> dict:
-    """Machine-load snapshot (VERDICT r12 #3): /proc/loadavg plus this
-    process's cumulative CPU seconds, so a later reader can decompose
-    a wall-clock smear into ambient co-tenant load vs real change
-    mechanically instead of via hand-written prose in PERF_ANCHOR.md
-    (load_1m far above our own CPU-rate between snapshots ⇒ external
-    co-tenant load)."""
-    rec: dict = {"unix_ts": int(time.time())}
-    try:
-        with open("/proc/loadavg") as f:
-            parts = f.read().split()
-        rec["load_1m"] = float(parts[0])
-        rec["load_5m"] = float(parts[1])
-        rec["load_15m"] = float(parts[2])
-    except (OSError, ValueError, IndexError):
-        pass
-    try:
-        t = os.times()
-        rec["proc_cpu_sec"] = round(t.user + t.system, 2)
-    except OSError:
-        pass
-    return rec
-
-
 def codegen_compiles(spark) -> int:
     """Janino compiles so far in this JVM, i.e. generated-code cache
     misses (in local mode the executors share the driver's JVM)."""
@@ -112,7 +47,6 @@ def main() -> None:
     from etl_portfolio_project_spark import api
     from etl_portfolio_project_spark.session import get_spark
 
-    load_before = _load_receipt()
     spark = get_spark(app_name="bench")
 
     def _jvm_cpu_sec() -> float | None:
@@ -148,18 +82,6 @@ def main() -> None:
     # alphabetically-first query doesn't absorb cold-start cost
     spark.read.parquet(f"{sf_dir}/orders.parquet").count()
 
-    # Perf canary (VERDICT r8 item 5): a FIXED 10-query subset timed
-    # in the fresh session BEFORE the full suite, recorded separately.
-    # Canary code never changes round-to-round (stable queries across
-    # scan/join/agg/window/text/embedding classes, no streams, no
-    # session caches), so a canary-vs-canary move between rounds is
-    # ambient session/machine drift by construction, while a suite
-    # move WITHOUT a canary move is a real regression — the
-    # decomposition PERF_ANCHOR previously reconstructed by hand.
-    canary = time_queries(
-        spark, sf_dir, [n for n in CANARY_QUERIES if n in api.REGISTRY]
-    )["seconds"]
-
     suite = time_queries(spark, sf_dir, sorted(api.REGISTRY))
     timings = suite["seconds"]
     errors = suite["errors"]
@@ -176,21 +98,9 @@ def main() -> None:
         # matches the compact line's run_ts (provenance)
         "run_unix_ts": run_ts,
         "runner": os.environ.get("SPARK_GRAFT_RUNNER", "unspecified"),
-        # fresh-session fixed-subset drift reference (r9): compare to
-        # the previous round's canary before reading anything into a
-        # suite-total move
-        "canary": canary,
-        "canary_total": round(sum(canary.values()), 3),
-        "heavy_canary_total": round(
-            sum(timings.get(n, 0.0) for n in HEAVY_CANARY_QUERIES), 3
-        ),
-        # mechanized ambient-load receipt (VERDICT r12 #3): loadavg +
-        # cumulative CPU before/after the run, and a per-query load_1m
-        # sample — (load_1m - bench's own CPU rate) >> 0 reads as
-        # co-tenant load, decomposable without prose
-        "load_before": load_before,
-        "load_after": {**_load_receipt(), "jvm_cpu_sec": _jvm_cpu_sec()},
-        "query_load_1m": suite["load_1m"],
+        # CPU seconds of the JVM (driver + local executors) over the
+        # whole run
+        "jvm_cpu_sec": _jvm_cpu_sec(),
         "codegen_compiles": suite["codegen_compiles"],
         "heap_mb": suite["heap_mb"],
     }
@@ -243,10 +153,8 @@ def time_queries(spark, sf_dir: str, names: list[str]) -> dict:
     the LAST run: nonzero means the code cache thrashed or the query
     generates different code per run), "heap_mb" (driver heap in use
     after the query's caches are released and a full GC, so state a
-    query leaves behind shows as a step in this series), "errors" (a
-    traceback tail for each query that raised) and "load_1m" (the
-    1-minute loadavg right after the query, so a single-query smear
-    can be attributed to a load spike without external monitoring).
+    query leaves behind shows as a step in this series) and "errors"
+    (a traceback tail for each query that raised).
 
     Per-query fault isolation (round-1 lesson: one broken query zeroed
     the whole bench): every query gets try/except plus a watchdog that
@@ -257,7 +165,6 @@ def time_queries(spark, sf_dir: str, names: list[str]) -> dict:
     timeout_s = float(os.environ.get("SPARK_GRAFT_QUERY_TIMEOUT", "300"))
     rec: dict[str, dict] = {
         "seconds": {}, "codegen_compiles": {}, "heap_mb": {}, "errors": {},
-        "load_1m": {},
     }
     heap = spark._jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
 
@@ -324,11 +231,6 @@ def time_queries(spark, sf_dir: str, names: list[str]) -> dict:
             rec["seconds"][name] = round(best, 3)
         else:
             rec["errors"][name] = err or "unknown"
-        try:
-            with open("/proc/loadavg") as f:
-                rec["load_1m"][name] = float(f.read().split()[0])
-        except (OSError, ValueError, IndexError):
-            pass
         # Isolate queries from each other: drop this query's claimed
         # caches before the next one starts (outside the timed window).
         # NOTE: run 2's re-claim already unpersisted run 1's generation

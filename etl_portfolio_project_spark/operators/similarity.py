@@ -3829,7 +3829,6 @@ FROM n_exact LEFT JOIN n_hits ON n_hits.query_id = n_exact.query_id
 # ---------------------------------------------------------------------------
 
 SE_NBATCH = 4  # ingestion micro-batches (vec_id % SE_NBATCH, file per batch)
-SE_COMPACT = 3  # compact the index when this many generations are live
 
 
 def stream_embedding_index_ingest(
@@ -3848,16 +3847,14 @@ def stream_embedding_index_ingest(
     vector's candidates are exactly its bucket-mates from STRICTLY
     EARLIER batches.
 
-    Index layout and restart/replay safety mirror the dedup stream's
-    proven machinery: ONE write per epoch (the epoch artifact is
-    simultaneously the probe-decision log and the next index
-    generation — vec/norm/bucket columns read back pruned), the
-    generation list is disk-derived per epoch (`manifest_k.json`
-    written atomically at the end of epoch k-1, never driver memory),
-    superseded compacted generations survive until the checkpoint
-    commits past them, and every SE_COMPACT live generations fold
-    into one compacted dir. A checkpointed restart resumes against
-    the exact pre-epoch index — proven by
+    Index layout and restart/replay safety are the shared
+    generation-index loop's (`streaming.events.run_generation_index`,
+    also behind `stream_incremental_dedup`): ONE write per epoch (the
+    epoch artifact is simultaneously the probe-decision log and the
+    next index generation — vec/norm/bucket columns read back pruned),
+    a disk-derived generation list (atomic per-epoch manifests, never
+    driver memory) and periodic compaction. A checkpointed restart
+    resumes against the exact pre-epoch index — proven by
     `test_stream_embedding_index_checkpoint_restart`.
 
     Invalid vectors (NULL / ragged / NULL-component) are routed
@@ -3896,28 +3893,14 @@ def stream_embedding_index_ingest(
 
 
 def _sei_write_batches(sf_dir: str, in_dir: str, batches) -> None:
-    """vec_id % SE_NBATCH input splits with strictly increasing
-    mtimes = arrival order (the `_sid_write_batches` recipe, embedding
-    table). Callable incrementally for the restart test."""
-    import os
+    """The vec_id % SE_NBATCH input splits, in arrival order — the
+    shared `streaming.events.write_arrival_batches` over the embedding
+    table. Callable incrementally for the restart test."""
+    from ..streaming.events import write_arrival_batches
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    existing = [
-        os.stat(os.path.join(in_dir, f)).st_mtime
-        for f in os.listdir(in_dir)
-        if f.endswith("_vecs.parquet")
-    ]
-    base = max(existing) if existing else None
-    tbl = pq.read_table(f"{sf_dir}/embeddings.parquet")
-    ids = tbl["vec_id"].to_numpy()
-    for j, k in enumerate(batches):
-        path = os.path.join(in_dir, f"{k}_vecs.parquet")
-        pq.write_table(tbl.filter(pa.array(ids % SE_NBATCH == k)), path)
-        if base is None:
-            base = os.stat(path).st_mtime
-        os.utime(path, (base + 2 * (j + 1), base + 2 * (j + 1)))
+    write_arrival_batches(
+        sf_dir, in_dir, "embeddings", "vec_id", SE_NBATCH, batches
+    )
 
 
 def _sei_tb_array_sql() -> str:
@@ -3998,91 +3981,28 @@ def _sei_run_stream(
     idx_root: str,
     checkpoint_dir: str | None = None,
 ) -> None:
-    """Run the embedding-ingest stream over `in_dir` to completion;
-    with `checkpoint_dir`, a second call RESUMES and must recover the
-    index membership from the on-disk manifests."""
-    import json
-    import os
+    """Run the embedding-ingest stream over `in_dir` to completion on
+    the shared generation-index loop
+    (`streaming.events.run_generation_index`): the batch relation is
+    the valid vectors with their norms and buckets, every valid row
+    enters the index, and invalid vectors join each epoch's output as
+    decision rows only. With `checkpoint_dir`, a second call RESUMES
+    and must recover the index membership from the on-disk
+    manifests."""
+    from ..streaming.events import run_generation_index
 
-    first = sorted(
-        f for f in os.listdir(in_dir) if f.endswith("_vecs.parquet")
-    )[0]
-    schema = spark.read.parquet(os.path.join(in_dir, first)).schema
-    src = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("path", in_dir)
-        .option("pathGlobFilter", "*_vecs.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load()
-    )
+    ok = F.expr(valid_vec_pred_spark())
 
-    def manifest_path(epoch_id: int) -> str:
-        return os.path.join(res_dir, f"manifest_{epoch_id}.json")
-
-    def load_gens(epoch_id: int) -> list[str]:
-        mp = manifest_path(epoch_id)
-        if os.path.exists(mp):
-            with open(mp) as f:
-                return json.load(f)
-        if epoch_id == 0:
-            return []
-        raise RuntimeError(
-            f"epoch {epoch_id} has no manifest — predecessor epoch "
-            "incomplete (gap in the decision log)"
-        )
-
-    def save_gens(epoch_id: int, gens: list[str]) -> None:
-        mp = manifest_path(epoch_id)
-        tmp = mp + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(gens, f)
-        os.replace(tmp, mp)
-
-    epoch_sql = _sei_epoch_sql()
-    first_sql = f"""
-SELECT vec_id, CAST(vec_id % {SE_NBATCH} AS INT) AS batch_id,
-       CAST(0 AS BIGINT) AS n_candidates, CAST(0 AS BIGINT) AS n_sim,
-       CAST(NULL AS BIGINT) AS nearest_id,
-       CAST(NULL AS DOUBLE) AS nearest_cos,
-       true AS is_novel, true AS is_valid,
-       vec, norm, tb
-FROM sei_vecs
-"""
-    idx_cols = ["vec_id", "vec", "norm", "tb"]
-
-    def read_gen(s: SparkSession, path: str) -> DataFrame:
-        g = s.read.parquet(path)
-        if "is_valid" in g.columns and "n_candidates" in g.columns:
-            g = g.where(F.col("is_valid")).select(*idx_cols)
-        return g
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        s = batch_df.sparkSession
-        gens = load_gens(epoch_id)
-        ok = F.expr(valid_vec_pred_spark())
-        vecs = (
+    def vecs(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.where(ok)
             .select("vec_id", _dvec("embedding").alias("vec"))
             .withColumn("norm", norm_expr("vec"))
             .withColumn("tb", F.expr(_sei_tb_array_sql()))
         )
-        if gens:
-            # 3 plan references (bucket explode, verify join, the
-            # full-batch left-join spine): hash the hyperplane/norm
-            # chain once
-            vecs = vecs.localCheckpoint(eager=True)
-        vecs.createOrReplaceTempView("sei_vecs")
-        if gens:
-            parts = [read_gen(s, g) for g in gens]
-            idx = parts[0]
-            for p in parts[1:]:
-                idx = idx.unionByName(p)
-            idx.createOrReplaceTempView("sei_idx")
-            per = s.sql(epoch_sql)
-        else:
-            per = s.sql(first_sql)
-        invalid = batch_df.where(~ok).select(
+
+    def invalid(batch_df: DataFrame) -> DataFrame:
+        return batch_df.where(~ok).select(
             "vec_id",
             F.expr(f"CAST(vec_id % {SE_NBATCH} AS INT)").alias("batch_id"),
             F.lit(0).cast("long").alias("n_candidates"),
@@ -4097,43 +4017,27 @@ FROM sei_vecs
                 "array<struct<tbl: int, bucket: bigint>>"
             ).alias("tb"),
         )
-        per = per.unionByName(invalid)
-        epoch_path = os.path.join(res_dir, f"epoch_{epoch_id}")
-        per.write.mode("overwrite").parquet(epoch_path)
-        if gens:
-            # every consumer of the checkpoint ran in the write above;
-            # left to GC, the last epoch's block outlives the query
-            caches.drop_checkpoint(vecs)
-        gens = gens + [epoch_path]
-        if len(gens) >= SE_COMPACT:
-            compact_path = os.path.join(idx_root, f"gen_{epoch_id}_c")
-            cparts = [read_gen(s, g) for g in gens]
-            cu = cparts[0]
-            for p in cparts[1:]:
-                cu = cu.unionByName(p)
-            cu.write.mode("overwrite").parquet(compact_path)
-            gens = [compact_path]
-        save_gens(epoch_id + 1, gens)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(4, int(prev_parts)))
+    first_sql = f"""
+SELECT vec_id, CAST(vec_id % {SE_NBATCH} AS INT) AS batch_id,
+       CAST(0 AS BIGINT) AS n_candidates, CAST(0 AS BIGINT) AS n_sim,
+       CAST(NULL AS BIGINT) AS nearest_id,
+       CAST(NULL AS DOUBLE) AS nearest_cos,
+       true AS is_novel, true AS is_valid,
+       vec, norm, tb
+FROM sei_vecs
+"""
+    run_generation_index(
+        spark, "stream_embedding_index_ingest", in_dir, res_dir, idx_root,
+        checkpoint_dir,
+        batch_rows=vecs,
+        views=("sei_vecs", "sei_idx"),
+        first_sql=first_sql,
+        epoch_sql=_sei_epoch_sql(),
+        kept=F.col("is_valid"),
+        idx_cols=["vec_id", "vec", "norm", "tb"],
+        extra_rows=invalid,
     )
-    try:
-        from ..streaming.events import LAST_RUN_STATS, record_stream_stats
-
-        LAST_RUN_STATS.pop("stream_embedding_index_ingest", None)
-        writer = src.writeStream.foreachBatch(process)
-        if checkpoint_dir is not None:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        q = writer.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            record_stream_stats("stream_embedding_index_ingest", q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def _build_stream_embedding_index_sql() -> str:

@@ -142,6 +142,7 @@ def stream_python_datasource_ingest(
     from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
     from .. import tmpdirs
+    from ..streaming.events import run_bounded
 
     class _SynthStreamReader(SimpleDataSourceStreamReader):
         def initialOffset(self):
@@ -183,34 +184,23 @@ def stream_python_datasource_ingest(
     spark.dataSource.register(_SynthStream)
     out = tmpdirs.claim("stream_pyds_out", "stream_pyds_out_")
     ckpt = tmpdirs.claim("stream_pyds_ckpt", "stream_pyds_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndm = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
+    writer = (
+        spark.readStream.format("synthstream")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(processingTime="0 seconds")
     )
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        from ..streaming.events import LAST_RUN_STATS, record_stream_stats
-
-        LAST_RUN_STATS.pop("stream_python_datasource_ingest", None)
-        q = (
-            spark.readStream.format("synthstream")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-        record_stream_stats("stream_python_datasource_ingest", q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndm
-        )
+    run_bounded(
+        spark,
+        "stream_python_datasource_ingest",
+        writer,
+        {
+            "spark.sql.shuffle.partitions": "1",
+            "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+        },
+    )
     return (
         spark.read.parquet(out)
         .groupBy("epoch")

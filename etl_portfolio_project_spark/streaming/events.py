@@ -23,11 +23,14 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
-from .. import tmpdirs
+from .. import caches, tmpdirs
 from ..operators.relational import dsum
 
 #: (sf_dir, glob) → (schema, ts_type). The probe is a driver-side
@@ -147,9 +150,9 @@ def record_stream_stats(name: str, q) -> None:
     """Fold a completed StreamingQuery's progress into LAST_RUN_STATS.
 
     Repeat calls under one name ACCUMULATE batches (multi-phase
-    builders like checkpoint-restart run two queries) — builders reset
-    by `LAST_RUN_STATS.pop(name, None)` first. State shape is taken
-    from the final progress entry (totals are cumulative)."""
+    builders like checkpoint-restart run two queries) — `run_bounded`
+    resets the entry first unless told to accumulate. State shape is
+    taken from the final progress entry (totals are cumulative)."""
     import json as _json
 
     try:
@@ -187,8 +190,61 @@ def record_stream_stats(name: str, q) -> None:
         )
 
 
+def run_bounded(
+    spark: SparkSession,
+    name: str,
+    writer: DataStreamWriter,
+    conf: dict[str, str] | None = None,
+    *,
+    accumulate: bool = False,
+) -> None:
+    """Run a bounded stream to completion: start `writer` (a configured
+    `DataStreamWriter`), drain everything available, and stop the
+    query — also when the drain raises, so a failed stream never stays
+    active.
+
+    `conf` is applied to the session before the start (state-store
+    partitions are fixed at query start from
+    `spark.sql.shuffle.partitions`) and restored in the same `finally`;
+    a key that was unset is unset again. The run's progress goes to
+    `LAST_RUN_STATS[name]`, which is reset first unless `accumulate`
+    (a restart of the same checkpoint continuing one run)."""
+    conf = conf or {}
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    if not accumulate:
+        LAST_RUN_STATS.pop(name, None)
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            record_stream_stats(name, q)
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 class NoEpochOutputError(FileNotFoundError):
     """A foreachBatch sink root holds no `epoch_<id>` directory."""
+
+
+def write_epoch_output(df: DataFrame, root: str, epoch_id: int) -> str:
+    """Write one foreachBatch epoch's output to `root/epoch_<id>` and
+    return that path. Each epoch OVERWRITES its own directory, so a
+    crash-replay of a committed-but-unacknowledged epoch rewrites the
+    same data instead of appending a duplicate — a bare
+    mode("append") would be at-least-once, not idempotent."""
+    import os
+
+    path = os.path.join(root, f"epoch_{epoch_id}")
+    df.write.mode("overwrite").parquet(path)
+    return path
 
 
 def read_epoch_outputs(spark: SparkSession, root: str) -> DataFrame:
@@ -206,6 +262,185 @@ def read_epoch_outputs(spark: SparkSession, root: str) -> DataFrame:
     if not paths:
         raise NoEpochOutputError(f"no epoch_<id> output under {root}")
     return spark.read.parquet(*paths)
+
+
+# --- generation-index streams ----------------------------------------------
+
+#: compact an index when this many generations are live
+INDEX_COMPACT = 3
+
+
+def write_arrival_batches(
+    sf_dir: str, in_dir: str, table: str, key: str, nbatch: int, batches
+) -> None:
+    """Write the `key % nbatch == k` split of `table` for each k in
+    `batches` into `in_dir`, one file per split, with strictly
+    increasing mtimes = arrival order (the file source orders by
+    mtime). pyarrow keeps the physical schema exact. Callable
+    incrementally (the restart tests write batches in two phases):
+    later calls stamp mtimes above anything already in `in_dir`."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    existing = [
+        os.stat(os.path.join(in_dir, f)).st_mtime for f in os.listdir(in_dir)
+    ]
+    base = max(existing, default=None)
+    tbl = pq.read_table(f"{sf_dir}/{table}.parquet")
+    ids = tbl[key].to_numpy()
+    for j, k in enumerate(batches):
+        path = os.path.join(in_dir, f"{k}_{table}.parquet")
+        pq.write_table(tbl.filter(pa.array(ids % nbatch == k)), path)
+        if base is None:
+            base = os.stat(path).st_mtime
+        os.utime(path, (base + 2 * (j + 1), base + 2 * (j + 1)))
+
+
+def run_generation_index(
+    spark: SparkSession,
+    name: str,
+    in_dir: str,
+    res_dir: str,
+    idx_root: str,
+    checkpoint_dir: str | None,
+    *,
+    batch_rows: Callable[[DataFrame], DataFrame],
+    views: tuple[str, str],
+    first_sql: str,
+    epoch_sql: str,
+    kept: Column,
+    idx_cols: list[str],
+    extra_rows: Callable[[DataFrame], DataFrame] | None = None,
+) -> None:
+    """Run a generation-index stream over `in_dir` to completion: one
+    file per micro-batch in mtime order (`write_arrival_batches`),
+    each batch probed against an on-disk index that grows by one
+    generation per epoch.
+
+    Per epoch, `batch_rows(batch_df)` is registered as temp view
+    `views[0]` and the union of the live index generations as
+    `views[1]`; the first epoch (no index yet) runs `first_sql`, every
+    later one `epoch_sql`. `extra_rows(batch_df)`, when given, is
+    unioned into the epoch's output (rows that bypass the probe). Each
+    epoch performs exactly ONE write, `res_dir/epoch_<id>`: the
+    artifact is both the decision log and the next index generation,
+    read back as its `kept` rows pruned to `idx_cols` (parquet pushes
+    the predicate and the projection), so per-epoch index I/O is
+    O(batch), never a full-index rewrite. Every INDEX_COMPACT live
+    generations fold into one compacted directory under `idx_root`
+    that holds only `idx_cols`; the decision log is never rewritten.
+
+    RESTART/REPLAY SAFETY: every write is a per-epoch overwrite path,
+    and the generation list itself is disk-derived — epoch k reads its
+    index membership from `res_dir/manifest_k.json` (written
+    atomically at the end of epoch k-1), never from driver memory. A
+    checkpointed restart (a second call with the same
+    `checkpoint_dir`) therefore resumes with the exact pre-epoch index,
+    and a replay of epoch k recomputes from manifest_k's state and
+    overwrites the same artifact byte-for-byte. A missing manifest
+    after epoch 0 is a gap in the decision log and fails the epoch.
+    Superseded compacted generations are NOT deleted mid-run: a replay
+    of the compacting epoch must still be able to read them
+    (production defers that GC until the stream checkpoint commits
+    past the epoch).
+
+    The temp views live in the micro-batch's CLONED session catalog
+    (foreachBatch isolation) and are discarded with the query."""
+    import json
+    import os
+    from functools import reduce
+
+    first = sorted(os.listdir(in_dir))[0]
+    schema = spark.read.parquet(os.path.join(in_dir, first)).schema
+    src = (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("path", in_dir)
+        .option("maxFilesPerTrigger", "1")
+        .load()
+    )
+
+    def manifest_path(epoch_id: int) -> str:
+        return os.path.join(res_dir, f"manifest_{epoch_id}.json")
+
+    def load_gens(epoch_id: int) -> list[str]:
+        mp = manifest_path(epoch_id)
+        if os.path.exists(mp):
+            with open(mp) as f:
+                return json.load(f)
+        if epoch_id == 0:
+            return []
+        raise RuntimeError(
+            f"epoch {epoch_id} has no manifest — predecessor epoch "
+            "incomplete (gap in the decision log)"
+        )
+
+    def save_gens(epoch_id: int, gens: list[str]) -> None:
+        mp = manifest_path(epoch_id)
+        tmp = mp + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(gens, f)
+        os.replace(tmp, mp)  # atomic: a crash never leaves a torn manifest
+
+    def read_index(s: SparkSession, gens: list[str]) -> DataFrame:
+        parts = []
+        for path in gens:
+            g = s.read.parquet(path)
+            # an epoch artifact also carries the decision log; a
+            # compacted generation holds the index columns only
+            if g.columns != idx_cols:
+                g = g.where(kept).select(*idx_cols)
+            parts.append(g)
+        return reduce(DataFrame.unionByName, parts)
+
+    def process(batch_df: DataFrame, epoch_id: int) -> None:
+        # foreachBatch bodies run in the DRIVER process (module
+        # references are safe; nothing here is pickled to workers)
+        s = batch_df.sparkSession
+        gens = load_gens(epoch_id)
+        rows = batch_rows(batch_df)
+        if gens:
+            # the epoch SQL reads the batch three times (band/bucket
+            # rows, the verify join, the full-batch left-join spine):
+            # compute it once. The first epoch has no index to join,
+            # so its single consumer needs no checkpoint barrier.
+            rows = rows.localCheckpoint(eager=True)
+        rows.createOrReplaceTempView(views[0])
+        if gens:
+            read_index(s, gens).createOrReplaceTempView(views[1])
+            per = s.sql(epoch_sql)
+        else:
+            per = s.sql(first_sql)
+        if extra_rows is not None:
+            per = per.unionByName(extra_rows(batch_df))
+        epoch_path = write_epoch_output(per, res_dir, epoch_id)
+        if gens:
+            # every consumer of the checkpoint ran in the write above;
+            # left to GC, the last epoch's block outlives the query
+            caches.drop_checkpoint(rows)
+        gens = gens + [epoch_path]
+        if len(gens) >= INDEX_COMPACT:
+            # contents identical to the generations it replaces (the
+            # bit-exact oracles prove it: INDEX_COMPACT < the harness
+            # batch count, so compaction fires mid-run)
+            compact_path = os.path.join(idx_root, f"gen_{epoch_id}_c")
+            read_index(s, gens).write.mode("overwrite").parquet(compact_path)
+            gens = [compact_path]
+        save_gens(epoch_id + 1, gens)
+
+    writer = src.writeStream.foreachBatch(process)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    # per-epoch shuffles move one batch's rows: tiny shuffles are
+    # task-overhead bound, and 4 partitions beat 8 beat 32 at sf0.1
+    # (3.67 s vs 3.81 s warm on the dedup stream)
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    run_bounded(
+        spark, name, writer,
+        {"spark.sql.shuffle.partitions": str(min(4, parts))},
+    )
 
 
 def _run_to_table(
@@ -231,83 +466,53 @@ def _run_to_table(
     import os
 
     spark = result.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(partitions, int(prev)))
-    )
-    # Skip trailing no-data micro-batches: they re-commit every state
-    # partition with zero input (measured 0.7 s on the stream-stream
-    # join at sf0.1 — ~30% of its wall). Correct for these bounded
-    # parity runs because every watermark advancement the results
-    # depend on is driven by DATA batches (the outer-join tail uses
-    # sentinel files precisely so eviction happens in a data batch);
-    # production streams with open-ended tails should leave this on.
-    prev_ndm = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    # bounded parity runs complete in ≤ 4 batches — retaining the
-    # default 100 checkpoint generations only adds snapshot/cleanup
-    # work per commit (r8 A/B: ~3% of the 5-stream family wall; the
-    # remaining floor is per-micro-batch commit machinery + the
-    # actual aggregation, measured via durationMs: addBatch ≈ 75%,
-    # queryPlanning ≈ 10%, offset/WAL commits ≈ 8%)
-    prev_retain = spark.conf.get(
-        "spark.sql.streaming.minBatchesToRetain", "100"
-    )
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    LAST_RUN_STATS.pop(name, None)
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    conf = {
+        "spark.sql.shuffle.partitions": str(min(partitions, parts)),
+        # Skip trailing no-data micro-batches: they re-commit every
+        # state partition with zero input (measured 0.7 s on the
+        # stream-stream join at sf0.1 — ~30% of its wall). Correct for
+        # these bounded parity runs because every watermark advancement
+        # the results depend on is driven by DATA batches (the
+        # outer-join tail uses sentinel files precisely so eviction
+        # happens in a data batch); production streams with open-ended
+        # tails should leave this on.
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+        # bounded parity runs complete in ≤ 4 batches — retaining the
+        # default 100 checkpoint generations only adds snapshot/cleanup
+        # work per commit (r8 A/B: ~3% of the 5-stream family wall; the
+        # remaining floor is per-micro-batch commit machinery + the
+        # actual aggregation, measured via durationMs: addBatch ≈ 75%,
+        # queryPlanning ≈ 10%, offset/WAL commits ≈ 8%)
+        "spark.sql.streaming.minBatchesToRetain": "2",
+    }
     out = tmpdirs.claim(f"stream_res_{name}", f"stream_res_{name}_")
-    try:
-        if mode == "append":
-            # append-mode streams write STRAIGHT to a parquet file sink
-            # (the production shape): one materialization, no
-            # driver-heap staging. The memory-sink + rewrite path below
-            # collected every result row onto the driver and then wrote
-            # it out again — measured ~15-20% of the stream-stream join
-            # pair's wall time at sf0.1 (r4 VERDICT #3).
-            data_dir = os.path.join(out, "data")
-            q = (
-                result.writeStream.outputMode(mode)
-                .format("parquet")
-                .option("path", data_dir)
-                .option("checkpointLocation", os.path.join(out, "ckpt"))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                record_stream_stats(name, q)
-            spark.read.parquet(data_dir).createOrReplaceTempView(name)
-            return
-        # complete/update modes need the memory sink (the file sink is
-        # append-only). The memory sink pins its whole result on the
-        # JVM heap for the session's lifetime; across a 100+-query
-        # session those tables accumulate into an OOM on default-sized
-        # drivers (observed at sf0.1 on a 1g vanilla session). Swap the
-        # sink table for a disk-backed temp parquet — exact round-trip,
-        # bounded memory; tmpdirs.claim retires the previous run's copy
-        # so re-runs don't grow /tmp without bound.
-        q = (
-            result.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .start()
+    writer = result.writeStream.outputMode(mode)
+    if mode == "append":
+        # append-mode streams write STRAIGHT to a parquet file sink
+        # (the production shape): one materialization, no driver-heap
+        # staging. The memory-sink + rewrite path below collected every
+        # result row onto the driver and then wrote it out again —
+        # measured ~15-20% of the stream-stream join pair's wall time
+        # at sf0.1 (r4 VERDICT #3).
+        data_dir = os.path.join(out, "data")
+        writer = (
+            writer.format("parquet")
+            .option("path", data_dir)
+            .option("checkpointLocation", os.path.join(out, "ckpt"))
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            record_stream_stats(name, q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndm
-        )
-        spark.conf.set(
-            "spark.sql.streaming.minBatchesToRetain", prev_retain
-        )
+        run_bounded(spark, name, writer, conf)
+        spark.read.parquet(data_dir).createOrReplaceTempView(name)
+        return
+    # complete/update modes need the memory sink (the file sink is
+    # append-only). The memory sink pins its whole result on the JVM
+    # heap for the session's lifetime; across a 100+-query session
+    # those tables accumulate into an OOM on default-sized drivers
+    # (observed at sf0.1 on a 1g vanilla session). Swap the sink table
+    # for a disk-backed temp parquet — exact round-trip, bounded
+    # memory; tmpdirs.claim retires the previous run's copy so re-runs
+    # don't grow /tmp without bound.
+    run_bounded(spark, name, writer.format("memory").queryName(name), conf)
     spark.table(name).write.mode("overwrite").parquet(out)
     spark.catalog.dropTempView(name)
     spark.read.parquet(out).createOrReplaceTempView(name)
@@ -765,33 +970,18 @@ def stream_tumbling_append_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_to_parquet_sink(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> str:
-    """foreachBatch → parquet: the exactly-once file-sink pattern.
-    Each epoch OVERWRITES its own subdirectory (keyed by epoch_id), so
-    a crash-replay of a committed-but-unacknowledged epoch rewrites
-    the same data instead of appending a duplicate — a bare
-    mode("append") here would be at-least-once, not idempotent.
+    """foreachBatch → parquet: the exactly-once file-sink pattern,
+    one idempotent overwrite per epoch (`write_epoch_output`).
     Returns the output ROOT; read it with `read_epoch_outputs`."""
-    import os as _os
-
     out = out_dir or tmpdirs.claim("stream_sink", "stream_sink_")
-    e = read_events_stream(spark, sf_dir)
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            _os.path.join(out, f"epoch_{epoch_id}")
+    writer = (
+        read_events_stream(spark, sf_dir)
+        .writeStream.foreachBatch(
+            lambda batch_df, epoch_id: write_epoch_output(batch_df, out, epoch_id)
         )
-
-    LAST_RUN_STATS.pop("stream_to_parquet_sink", None)
-    q = (
-        e.writeStream.foreachBatch(write_epoch)
         .option("checkpointLocation", f"{out}/_checkpoint")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        record_stream_stats("stream_to_parquet_sink", q)
+    run_bounded(spark, "stream_to_parquet_sink", writer)
     return out
 
 
@@ -856,13 +1046,9 @@ def run_latest_user_event_merge(
         if old is not None:
             shutil.rmtree(old, ignore_errors=True)
 
-    LAST_RUN_STATS.pop("stream_latest_user_event", None)
-    q = e.writeStream.foreachBatch(merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        record_stream_stats("stream_latest_user_event", q)
+    run_bounded(
+        spark, "stream_latest_user_event", e.writeStream.foreachBatch(merge)
+    )
     if gen["path"] is None:
         final = spark.createDataFrame(
             [],
@@ -955,34 +1141,30 @@ def stream_checkpoint_restart_ingest(
     tbl = pq.read_table(f"{sf_dir}/events.parquet")
     even = pc.equal(pc.bit_wise_and(tbl["event_id"], 1), 0)
 
-    def run_phase() -> None:
-        e = read_events_stream(spark, in_dir, glob="*_events.parquet")
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            # per-epoch overwrite = idempotent under epoch replay
-            # (an append would double rows if a crash replayed a
-            # committed-but-unacknowledged epoch — the exact recovery
-            # scenario this query exists to prove)
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(out, f"epoch_{epoch_id}")
+    def run_phase(accumulate: bool) -> None:
+        # per-epoch overwrite = idempotent under epoch replay (an
+        # append would double rows if a crash replayed a
+        # committed-but-unacknowledged epoch — the exact recovery
+        # scenario this query exists to prove)
+        writer = (
+            read_events_stream(spark, in_dir, glob="*_events.parquet")
+            .writeStream.foreachBatch(
+                lambda batch_df, epoch_id: write_epoch_output(
+                    batch_df, out, epoch_id
+                )
             )
-
-        q = (
-            e.writeStream.foreachBatch(sink)
             .option("checkpointLocation", ck)
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            record_stream_stats("stream_checkpoint_restart_ingest", q)
+        run_bounded(
+            spark, "stream_checkpoint_restart_ingest", writer,
+            accumulate=accumulate,
+        )
 
-    LAST_RUN_STATS.pop("stream_checkpoint_restart_ingest", None)
     pq.write_table(tbl.filter(even), f"{in_dir}/a_events.parquet")
-    run_phase()
+    run_phase(accumulate=False)
     pq.write_table(tbl.filter(pc.invert(even)), f"{in_dir}/b_events.parquet")
-    run_phase()  # same checkpoint → resumes, ingests ONLY file b
+    # same checkpoint → resumes, ingests ONLY file b
+    run_phase(accumulate=True)
 
     return (
         read_epoch_outputs(spark, out)

@@ -52,7 +52,7 @@ def test_streaming_marker_matches_actual_streaming_builders():
 
     pat = re.compile(
         r"readStream|writeStream|foreachBatch|_run_to_table"
-        r"|run_bounded|read_events_stream"
+        r"|run_bounded|run_generation_index|read_events_stream"
     )
 
     def stripped_src(fn) -> str:
@@ -81,7 +81,8 @@ def test_streaming_marker_matches_actual_streaming_builders():
         if not src:
             continue
         # one-hop expansion: builders may delegate the streaming run
-        # to a same-module helper (e.g. _sid_run_stream)
+        # to a same-module helper (e.g. _sid_run_stream, which calls
+        # streaming.events.run_generation_index)
         mod = importlib.import_module(spec.module) if spec.module else None
         for called in set(re.findall(r"\b(_?[a-z][a-z0-9_]*)\s*\(", src)):
             helper = getattr(mod, called, None)
@@ -97,19 +98,6 @@ def test_streaming_marker_matches_actual_streaming_builders():
     assert set(api.STREAMING_QUERIES) == {
         n for n in api.REGISTRY if n.startswith("stream_")
     }
-
-
-def test_canary_lists_are_registered_queries():
-    """Both canary lists must stay subsets of the live registry
-    (ADVICE r11): heavy_canary_total sums `timings.get(n, 0.0)`, so a
-    renamed/removed query would silently contribute 0.0 and deflate
-    the decomposition baseline the perf gate reads — the same drift
-    class the streaming-marker test above pins."""
-    assert set(bench.CANARY_QUERIES) <= set(api.REGISTRY)
-    assert set(bench.HEAVY_CANARY_QUERIES) <= set(api.REGISTRY)
-    # and they must stay disjoint tiers — a query in both would be
-    # double-decomposed
-    assert not set(bench.CANARY_QUERIES) & set(bench.HEAVY_CANARY_QUERIES)
 
 
 def test_detail_records_second_run_codegen_compiles(
@@ -135,7 +123,6 @@ def test_detail_records_second_run_codegen_compiles(
             ),
         },
     )
-    monkeypatch.setattr(bench, "CANARY_QUERIES", [])
     monkeypatch.setattr(bench, "_REPO", str(tmp_path))
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_SMALL)
     monkeypatch.delenv("SPARK_GRAFT_CONF_JSON", raising=False)
@@ -165,7 +152,6 @@ def test_detail_records_heap_after_each_query(spark, tmp_path, monkeypatch):
             "b_pins_64mb": SimpleNamespace(builder=pin_64mb),
         },
     )
-    monkeypatch.setattr(bench, "CANARY_QUERIES", [])
     monkeypatch.setattr(bench, "_REPO", str(tmp_path))
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_SMALL)
     monkeypatch.delenv("SPARK_GRAFT_CONF_JSON", raising=False)

@@ -70,17 +70,37 @@ def test_changed_toplevel_names_and_expansion(tmp_path, monkeypatch):
 
     # fixpoint: SQL_X's source references helper → it is changed too;
     # untouched references nothing changed → stays out
-    import importlib
+    assert rc.expand_within_module("mod.py", names) == {
+        "CONST_A", "helper", "SQL_X"
+    }
 
-    emit_mod = importlib.import_module("rotation_check")
-    # replicate the expansion logic via the private helper inside
-    # emit_regrade is not exposed; test the building blocks instead:
     # module_importers on the real repo must find streaming.stateful
     # as an importer of streaming.events (the r4 blind spot)
     monkeypatch.setattr(rc, "_REPO", _REPO)
     importers = rc.module_importers("etl_portfolio_project_spark.streaming.events")
     assert "etl_portfolio_project_spark.streaming.stateful" in importers
-    assert emit_mod is rc
+
+
+def test_regrade_follows_the_importing_chain():
+    """`schedule.monthly_schedule` is called by
+    `loan_pipeline.loan_monthly_schedule`, which api's registered
+    builder calls: a change two imports away from the registry must
+    still regrade the query that runs it. `loan_final` runs no
+    schedule code and stays out; a change to
+    `loan_pipeline.joined_loans`, which both loan builders call,
+    regrades both."""
+
+    def reach(module: str, names: set[str]) -> set[str]:
+        changed = rc.changed_by_module(
+            f"etl_portfolio_project_spark.{module}", names
+        )
+        return rc.queries_reaching(changed, rc.oracle_constants())
+
+    sched = reach("operators.schedule", {"monthly_schedule"})
+    assert "loan_monthly_schedule" in sched
+    assert "loan_final" not in sched
+    joined = reach("pipelines.loan_pipeline", {"joined_loans"})
+    assert {"loan_final", "loan_monthly_schedule"} <= joined
 
 
 def test_unparseable_file_falls_back_to_module(tmp_path, monkeypatch):

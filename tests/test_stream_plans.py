@@ -154,3 +154,44 @@ def test_stream_epoch_joins_broadcast_the_batch_side(spark, plan_fn):
     assert "SortMergeJoin" not in plan, plan
     assert "ShuffledHashJoin" not in plan, plan
     assert plan.count("BroadcastHashJoin") >= 4, plan
+
+
+def test_run_bounded_failed_drain_stops_restores_and_records(
+    spark, tmp_path
+):
+    """A foreachBatch body that raises on epoch 1: the error reaches
+    the caller, no query stays active, every scoped conf is back at
+    its prior value, and the epochs that ran are still recorded."""
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    EV.write_arrival_batches(
+        SF_SMALL, str(in_dir), "documents", "doc_id", 2, [0, 1]
+    )
+    schema = spark.read.parquet(str(in_dir)).schema
+
+    def fail_on_epoch_1(batch_df, epoch_id):
+        if epoch_id == 1:
+            raise RuntimeError("epoch 1 fails")
+        batch_df.count()
+
+    writer = (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("path", str(in_dir))
+        .option("maxFilesPerTrigger", "1")
+        .load()
+        .writeStream.foreachBatch(fail_on_epoch_1)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+    )
+    conf = {
+        "spark.sql.shuffle.partitions": "3",
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+        "spark.sql.streaming.minBatchesToRetain": "2",
+    }
+    before = {k: spark.conf.get(k, None) for k in conf}
+    EV.LAST_RUN_STATS["bounded_failure"] = {"batches": 99}
+    with pytest.raises(Exception, match="epoch 1 fails"):
+        EV.run_bounded(spark, "bounded_failure", writer, conf)
+    assert spark.streams.active == []
+    assert {k: spark.conf.get(k, None) for k in conf} == before
+    assert EV.LAST_RUN_STATS.pop("bounded_failure")["batches"] == 1

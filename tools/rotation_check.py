@@ -12,8 +12,9 @@ round. This tool:
 
 2. (--emit-regrade) maps the git diff since the last grading commit
    (the newest commit touching CORRECTNESS_r*.json, or --since REF)
-   to operator modules, then to registered queries via
-   QuerySpec.module, and writes the must-regrade list to REGRADE.json
+   to changed top-level names, follows them through every module that
+   imports a changed one (transitively), then to registered queries
+   via QuerySpec.module, and writes the must-regrade list to REGRADE.json
    at the repo root. api.grading_window() inserts those names right
    after the never-graded/red set — so a changed code path can no
    longer keep a stale green (r4 VERDICT #4). Run this before the
@@ -128,9 +129,12 @@ def changed_toplevel_names(base: str, path: str) -> set[str] | None:
 
 def module_importers(changed_module: str) -> set[str]:
     """Package modules whose source imports from `changed_module`
-    (one-hop; enough for the helper-module pattern in this repo)."""
+    directly (`from .x.mod import ...`, `from .x import mod`)."""
     short = changed_module.rsplit(".", 1)[-1]
-    pat = rf"from\s+\.+[\w.]*\b{short}\b\s+import|from\s+\.+\s+import\s+.*\b{short}\b"
+    pat = (
+        rf"from\s+\.+[\w.]*\b{short}\b\s+import"
+        rf"|from\s+\.+[\w.]*\s+import\s+(?:\([^)]*|[^\n]*)\b{short}\b"
+    )
     import re as _re
 
     out: set[str] = set()
@@ -145,7 +149,144 @@ def module_importers(changed_module: str) -> set[str]:
                 continue
             if _re.search(pat, src):
                 out.add(file_to_module(rel.replace(os.sep, "/")))
+    out.discard(changed_module)
     return out
+
+
+def module_to_file(module: str) -> str:
+    return module.replace(".", "/") + ".py"
+
+
+def _toplevel_sources(path: str) -> dict[str, str] | None:
+    """Top-level def/class/assignment name → its source text."""
+    import ast
+
+    try:
+        src = open(os.path.join(_REPO, path)).read()
+        tree = ast.parse(src)
+    except (OSError, SyntaxError):
+        return None
+    lines = src.splitlines(keepends=True)
+    spans: dict[str, str] = {}
+    for node in tree.body:
+        body = "".join(
+            lines[node.lineno - 1: getattr(node, "end_lineno", node.lineno)]
+        )
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            spans[node.name] = body
+        elif isinstance(node, ast.Assign):
+            for t in node.targets:
+                if isinstance(t, ast.Name):
+                    spans[t.id] = body
+    return spans
+
+
+def _name_pattern(names: set[str]):
+    import re as _re
+
+    return _re.compile(
+        r"\b(" + "|".join(map(_re.escape, sorted(names))) + r")\b"
+    )
+
+
+def referencing_names(path: str, names: set[str]) -> set[str]:
+    """Top-level names in `path` whose source mentions one of `names`."""
+    spans = _toplevel_sources(path) or {}
+    pat = _name_pattern(names)
+    return {nm for nm, body in spans.items() if pat.search(body)}
+
+
+def expand_within_module(path: str, names: set[str]) -> set[str]:
+    """Fixpoint: a module-level def/constant whose SOURCE references
+    a changed name is itself changed (helpers and generated *_SQL
+    constants propagate to their consumers)."""
+    spans = _toplevel_sources(path)
+    if spans is None:
+        return names
+    out = set(names)
+    while True:
+        pat = _name_pattern(out)
+        grew = {
+            nm for nm, body in spans.items()
+            if nm not in out and pat.search(body)
+        }
+        if not grew:
+            return out
+        out |= grew
+
+
+def changed_by_module(module: str, names: set[str]) -> dict[str, set[str]]:
+    """module → changed top-level names, starting from `names` changed
+    in `module` and following the importing chain transitively: in each
+    module that imports a changed module, the top-level names that
+    reference one of its changed names are changed, expanded within
+    that module (so `schedule.monthly_schedule` reaches
+    `loan_pipeline.loan_monthly_schedule` and from there
+    `api.q_loan_monthly_schedule`)."""
+    out = {module: expand_within_module(module_to_file(module), names)}
+    todo = [module]
+    while todo:
+        mod = todo.pop()
+        for dep in module_importers(mod):
+            path = module_to_file(dep)
+            seeds = referencing_names(path, out[mod])
+            if not seeds:
+                continue
+            grown = expand_within_module(path, seeds | out.get(dep, set()))
+            if grown != out.get(dep):
+                out[dep] = grown
+                todo.append(dep)
+    return out
+
+
+def _builder_src(spec) -> str:
+    import inspect
+
+    try:
+        return inspect.getsource(spec.raw or spec.builder)
+    except (OSError, TypeError):
+        return ""
+
+
+def queries_reaching(
+    changed: dict[str, set[str]], oracle_const: dict[str, str]
+) -> set[str]:
+    """Registered queries whose builder or oracle constant is a changed
+    name of the builder's module, or whose builder source references
+    one."""
+    from etl_portfolio_project_spark import api
+
+    out: set[str] = set()
+    for n, s in api.REGISTRY.items():
+        names = changed.get(s.module)
+        if not names:
+            continue
+        if (
+            getattr(s.raw, "__name__", "") in names
+            or oracle_const.get(n) in names
+            or _name_pattern(names).search(_builder_src(s))
+        ):
+            out.add(n)
+    return out
+
+
+def oracle_constants() -> dict[str, str]:
+    """Query name → oracle-SQL constant, parsed from api.py's
+    registration tuples ("q_name", MOD.fn, MOD.SOME_SQL, ...), so a
+    changed SQL builder regrades its query even though the builder fn
+    didn't move."""
+    import re as _re
+
+    api_src = open(os.path.join(_REPO, _PKG, "api.py")).read()
+    return {
+        m.group(1): m.group(2)
+        for m in _re.finditer(
+            r'\(\s*"([a-z0-9_]+)",\s*[A-Za-z_][\w.]*,\s*'
+            r'(?:[A-Za-z_][\w]*\.)?([A-Z][A-Z_0-9]*SQL)',
+            api_src,
+        )
+    }
 
 
 def _strip_docstrings(node) -> None:
@@ -227,9 +368,6 @@ def material_names(base: str, path: str, names: set[str]) -> set[str]:
 
 
 def emit_regrade(base: str | None) -> int:
-    import inspect
-    import re as _re
-
     from etl_portfolio_project_spark import api
 
     base = base or last_grading_commit()
@@ -239,64 +377,7 @@ def emit_regrade(base: str | None) -> int:
         f for f in files
         if f not in infra and not f.endswith("__init__.py")
     ]
-
-    def _builder_src(spec) -> str:
-        try:
-            return inspect.getsource(spec.raw or spec.builder)
-        except (OSError, TypeError):
-            return ""
-
-    def _expand_within_module(path: str, names: set[str]) -> set[str]:
-        """Fixpoint: a module-level def/constant whose SOURCE references
-        a changed name is itself changed (helpers and generated *_SQL
-        constants propagate to their consumers)."""
-        import ast
-
-        try:
-            tree = ast.parse(open(os.path.join(_REPO, path)).read())
-            src_lines = open(os.path.join(_REPO, path)).readlines()
-        except (OSError, SyntaxError):
-            return names
-        spans: dict[str, str] = {}
-        for node in tree.body:
-            body = "".join(
-                src_lines[node.lineno - 1: getattr(
-                    node, "end_lineno", node.lineno)]
-            )
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                                 ast.ClassDef)):
-                spans[node.name] = body
-            elif isinstance(node, ast.Assign):
-                for t in node.targets:
-                    if isinstance(t, ast.Name):
-                        spans[t.id] = body
-        out = set(names)
-        while True:
-            pat = _re.compile(
-                r"\b(" + "|".join(map(_re.escape, sorted(out))) + r")\b"
-            )
-            grew = {
-                nm for nm, body in spans.items()
-                if nm not in out and pat.search(body)
-            }
-            if not grew:
-                return out
-            out |= grew
-
-    # name → oracle-SQL constant, parsed from api.py's registration
-    # tuples ("q_name", MOD.fn, MOD.SOME_SQL, ...) so a changed SQL
-    # builder regrades its query even though the builder fn didn't move
-    api_src = open(
-        os.path.join(_REPO, _PKG, "api.py")
-    ).read()
-    oracle_const: dict[str, str] = {
-        m.group(1): m.group(2)
-        for m in _re.finditer(
-            r'\(\s*"([a-z0-9_]+)",\s*[A-Za-z_][\w.]*,\s*'
-            r'(?:[A-Za-z_][\w]*\.)?([A-Z][A-Z_0-9]*SQL)',
-            api_src,
-        )
-    }
+    oracle_const = oracle_constants()
 
     queries: set[str] = set()
     material: set[str] = set()
@@ -316,55 +397,20 @@ def emit_regrade(base: str | None) -> int:
         if not names:
             continue
         mat_seed = material_names(base, f, names)
-        names = _expand_within_module(f, names)
-        mat_exp = (
-            _expand_within_module(f, mat_seed) if mat_seed else set()
-        )
-        name_pat = _re.compile(
-            r"\b(" + "|".join(map(_re.escape, sorted(names))) + r")\b"
-        )
-        mat_pat = (
-            _re.compile(
-                r"\b(" + "|".join(map(_re.escape, sorted(mat_exp))) + r")\b"
+        queries |= queries_reaching(changed_by_module(mod, names), oracle_const)
+        if mat_seed:
+            material |= queries_reaching(
+                changed_by_module(mod, mat_seed), oracle_const
             )
-            if mat_exp
-            else None
-        )
-        # direct: queries of the changed module whose builder is itself
-        # changed or references a changed top-level name
-        for n, s in api.REGISTRY.items():
-            if s.module != mod:
-                continue
-            fn_name = getattr(s.raw, "__name__", "")
-            src = _builder_src(s)
-            if (
-                fn_name in names
-                or oracle_const.get(n) in names
-                or name_pat.search(src)
-            ):
-                queries.add(n)
-                if fn_name in mat_seed or oracle_const.get(n) in mat_seed:
-                    # the builder/oracle ITSELF was edited (not just a
-                    # helper it references) — highest regrade priority
-                    direct.add(n)
-                if mat_pat and (
-                    fn_name in mat_exp
-                    or oracle_const.get(n) in mat_exp
-                    or mat_pat.search(src)
-                ):
-                    material.add(n)
-        # cross-module: modules importing the changed one — their
-        # builders regrade when they reference a changed name (e.g.
-        # streaming.stateful using events._run_to_table)
-        for dep in module_importers(mod):
-            for n, s in api.REGISTRY.items():
-                if s.module != dep or n in queries:
-                    continue
-                src = _builder_src(s)
-                if name_pat.search(src):
-                    queries.add(n)
-                    if mat_pat and mat_pat.search(src):
-                        material.add(n)
+        # direct: the builder/oracle ITSELF was edited (not just a
+        # helper it references) — highest regrade priority
+        direct |= {
+            n for n, s in api.REGISTRY.items()
+            if s.module == mod and (
+                getattr(s.raw, "__name__", "") in mat_seed
+                or oracle_const.get(n) in mat_seed
+            )
+        }
 
     # Priority tiers when the window overflows: (1) builders/oracles
     # EDITED IN PLACE with a material (docstring-stripped) AST change,
