@@ -9,12 +9,13 @@ of stdout — VERDICT r2: a ~4 KB line lost its front and parsed as
 null, so the line carries totals + the 10 slowest queries only):
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {<10 slowest>: sec}, "n_queries": N, "n_errors": N,
-   "sf": <float>}
+   "sf": <float>, "cpus": <int>}
 The FULL per-query map (and error tracebacks) goes to
 BENCH_DETAIL.json next to this file.
 
-Each query is fully executed via a noop-format write (count() would
-let Catalyst prune the projections we want to measure).
+Each query runs through `tools.runner.run_registry` with the noop-sink
+action (count() would let Catalyst prune the projections we want to
+measure). `cpus` is the session's default parallelism.
 """
 
 from __future__ import annotations
@@ -23,20 +24,11 @@ import json
 import os
 import re
 import sys
-import threading
 import time
-import traceback
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
-
-
-def codegen_compiles(spark) -> int:
-    """Janino compiles so far in this JVM, i.e. generated-code cache
-    misses (in local mode the executors share the driver's JVM)."""
-    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def main() -> None:
@@ -46,8 +38,10 @@ def main() -> None:
 
     from etl_portfolio_project_spark import api
     from etl_portfolio_project_spark.session import get_spark
+    from tools.runner import noop_sink, run_registry
 
     spark = get_spark(app_name="bench")
+    cpus = spark.sparkContext.defaultParallelism
 
     def _jvm_cpu_sec() -> float | None:
         # the bench's real CPU burn lives in the JVM child, which
@@ -82,7 +76,9 @@ def main() -> None:
     # alphabetically-first query doesn't absorb cold-start cost
     spark.read.parquet(f"{sf_dir}/orders.parquet").count()
 
-    suite = time_queries(spark, sf_dir, sorted(api.REGISTRY))
+    suite = timing_record(
+        run_registry(spark, sf_dir, sorted(api.REGISTRY), noop_sink, RUNS)
+    )
     timings = suite["seconds"]
     errors = suite["errors"]
 
@@ -94,6 +90,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "cpus": cpus,
         "errors": errors,
         # matches the compact line's run_ts (provenance)
         "run_unix_ts": run_ts,
@@ -134,126 +131,34 @@ def main() -> None:
         pass
     with open(os.path.join(_REPO, "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
-    print(json.dumps(compact_line(timings, errors, total, sf, run_ts)))
+    print(json.dumps(compact_line(timings, errors, total, sf, run_ts, cpus)))
 
 
 #: Best of RUNS full build+execute cycles per query. Run 1 pays the
 #: one-time Janino codegen of each stage; the min reflects steady-state
 #: throughput (what matters at scale, where codegen is amortized over
-#: hours) and is robust to transient co-process load. Each cycle
-#: rebuilds the DataFrame, so nothing is reused between runs — AQE
-#: re-plans and all shuffles/streams re-execute.
+#: hours) and is robust to transient co-process load.
 RUNS = 2
 
 
-def time_queries(spark, sf_dir: str, names: list[str]) -> dict:
-    """Build and fully execute each registered query in `names` over
-    `sf_dir`, RUNS times, and return one record of per-query dicts:
-    "seconds" (best run), "codegen_compiles" (Janino compiles during
-    the LAST run: nonzero means the code cache thrashed or the query
-    generates different code per run), "heap_mb" (driver heap in use
-    after the query's caches are released and a full GC, so state a
-    query leaves behind shows as a step in this series) and "errors"
-    (a traceback tail for each query that raised).
-
-    Per-query fault isolation (round-1 lesson: one broken query zeroed
-    the whole bench): every query gets try/except plus a watchdog that
-    cancels its Spark jobs/streams after SPARK_GRAFT_QUERY_TIMEOUT
-    seconds, so a hung stream can't stall the caller."""
-    from etl_portfolio_project_spark import api, caches
-
-    timeout_s = float(os.environ.get("SPARK_GRAFT_QUERY_TIMEOUT", "300"))
-    rec: dict[str, dict] = {
-        "seconds": {}, "codegen_compiles": {}, "heap_mb": {}, "errors": {},
+def timing_record(results) -> dict:
+    """The per-query maps of a timed `run_registry` pass, as bench.py
+    and the SF ladder publish them: "seconds" (best run) and
+    "codegen_compiles" (last run) of each query that ran, "heap_mb" of
+    every query, and "errors" (status and traceback tail of each query
+    that did not run)."""
+    runs = dict(results)
+    ok = {n: r for n, r in runs.items() if r.status == "ok"}
+    return {
+        "seconds": {n: r.seconds for n, r in ok.items()},
+        "codegen_compiles": {n: r.codegen_compiles for n, r in ok.items()},
+        "heap_mb": {n: r.heap_mb for n, r in runs.items()},
+        "errors": {
+            n: "\n".join([r.status, *r.problems])
+            for n, r in runs.items()
+            if r.status != "ok"
+        },
     }
-    heap = spark._jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
-
-    # Watchdog cancels ONLY the timed query's job group, and only if
-    # that query is still the current generation — a Timer that fires
-    # just as the query completes must not cancel the NEXT query's
-    # jobs (ADVICE r2: the old cancelAllJobs raced exactly that way).
-    # Streams are stopped too (their jobs run on stream threads,
-    # outside the job group), guarded by the same generation check.
-    gen_box = {"gen": 0}
-
-    def _make_cancel(my_gen: int, group: str):
-        def _cancel() -> None:
-            if gen_box["gen"] != my_gen:
-                return  # query already finished; don't touch successor
-            try:
-                for q in spark.streams.active:
-                    q.stop()
-            except Exception:
-                pass
-            try:
-                spark.sparkContext.cancelJobGroup(group)
-            except Exception:
-                pass
-
-        return _cancel
-
-    for name in names:
-        spec = api.REGISTRY[name]
-        best = float("inf")
-        err: str | None = None
-        for run_i in range(RUNS):
-            gen_box["gen"] += 1
-            group = f"bench-{name}-{run_i}"
-            spark.sparkContext.setJobGroup(group, name, True)
-            watchdog = threading.Timer(
-                timeout_s, _make_cancel(gen_box["gen"], group)
-            )
-            watchdog.start()
-            # time the builder too: streaming builders execute the
-            # whole readStream→sink job inside the builder call
-            c0 = codegen_compiles(spark)
-            t0 = time.perf_counter()
-            try:
-                df = spec.builder(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-                if run_i == RUNS - 1:
-                    rec["codegen_compiles"][name] = (
-                        codegen_compiles(spark) - c0
-                    )
-            except Exception:
-                err = traceback.format_exc(limit=3)[-500:]
-                break
-            finally:
-                gen_box["gen"] += 1  # invalidate any in-flight Timer
-                watchdog.cancel()
-                # PySpark's SparkContext has no clearJobGroup(); reset
-                # the thread-local property directly
-                spark.sparkContext.setLocalProperty(
-                    "spark.jobGroup.id", None
-                )
-        if best < float("inf"):
-            rec["seconds"][name] = round(best, 3)
-        else:
-            rec["errors"][name] = err or "unknown"
-        # Isolate queries from each other: drop this query's claimed
-        # caches before the next one starts (outside the timed window).
-        # NOTE: run 2's re-claim already unpersisted run 1's generation
-        # (one live generation per key), so there is no cross-run data
-        # reuse to protect — this only clears the LAST run's leftovers.
-        # Left live, every cached plan tree taxes the analysis of all
-        # later queries via CacheManager plan matching and accumulates
-        # executor memory.
-        caches.release_all()
-        # Session-age hygiene (r5 verdict #4, root-caused in r6): JVM
-        # garbage accumulated across a long bench session taxes the
-        # large-collect queries — measured src_join_projection 1.29 s
-        # fresh → 1.59 s after 50 assorted queries → 1.25 s after a
-        # full GC. The headline is the SUM of timed regions, so a GC
-        # here (outside the timed window) costs wall only, and makes
-        # per-query numbers comparable across rounds regardless of
-        # registry size/order (grading_window reorders every round —
-        # that position shift was r5's "uniform +0.3 s drift").
-        spark._jvm.System.gc()
-        rec["heap_mb"][name] = round(
-            heap.getHeapMemoryUsage().getUsed() / 2**20, 1
-        )
-    return rec
 
 
 def compact_line(
@@ -262,6 +167,7 @@ def compact_line(
     total: float,
     sf: float,
     run_ts: int = 0,
+    cpus: int | None = None,
 ) -> dict:
     """Driver-facing summary: totals + the 10 slowest queries. MUST
     stay well under ~2 KB serialized — the driver keeps only a bounded
@@ -292,6 +198,7 @@ def compact_line(
         "batch_sec": round(total - stream_sec, 3),
         "stream_sec": stream_sec,
         "sf": sf,
+        "cpus": cpus,
         "run_ts": run_ts,  # matches BENCH_DETAIL run_unix_ts → provenance
     }
 

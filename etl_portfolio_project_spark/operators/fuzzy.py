@@ -70,7 +70,7 @@ def with_region_cleaned(
 ) -> DataFrame:
     if not use_rapidfuzz:
         return df.withColumn(out, clean_region_expr(F.col(col)))
-    return df.withColumn(out, _rapidfuzz_udf()(F.col(col)))
+    return df.withColumn(out, _wratio_udf()(F.col(col)))
 
 
 def clean_region_via_distinct(
@@ -274,10 +274,6 @@ def _wratio_udf(candidates: Sequence[str] = VALID_CITIES):
         return s.map(one)
 
     return _clean
-
-
-# backwards-compatible alias (pre-round-4 name)
-_rapidfuzz_udf = _wratio_udf
 
 
 def clean_region_wratio_via_distinct(

@@ -33,19 +33,6 @@ from pyspark.sql import functions as F
 FINAL_BUCKETS = [(30, "1–30 DPD"), (60, "31–60 DPD"), (90, "61–90 DPD")]
 FINAL_BUCKET_OVER = "90+ DPD"
 
-METRIC_COLUMNS = [
-    "emi_amount",
-    "total_demand",
-    "arrear",
-    "target_amount",
-    "amount_to_be_returned",
-    "months_due",
-    "dpd_days",
-    "dpd_bucket",
-    "total_to_be_collected",
-]
-
-
 def month_diff(later: Column, earlier: Column) -> Column:
     """Calendar month difference, day-of-month ignored (M1)."""
     return (

@@ -38,14 +38,6 @@ from ..sources.registry import load_table
 
 FORMATS = ["png", "jpeg", "wav"]
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("media_format", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -244,13 +236,6 @@ FROM documents,
 # PIL/libjpeg.)
 # ---------------------------------------------------------------------------
 
-WAV_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
 WAV_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -394,13 +379,6 @@ GROUP BY doc_id
 # row padding were mishandled, so the codec is differentially proven,
 # not just exercised.
 # ---------------------------------------------------------------------------
-
-BMP_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
 
 BMP_FEATURES_SCHEMA = T.StructType(
     [
@@ -917,13 +895,6 @@ WHERE bit_count(xor(h1.a_hi, h2.a_hi)) + bit_count(xor(h1.a_lo, h2.a_lo))
 # --- REAL compressed-image codec: PNG (stdlib zlib + numpy) ---------------
 
 PNG_H = 12  # fixed image height; width varies per doc (16..23)
-
-PNG_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
 
 PNG_FEATURES_SCHEMA = T.StructType(
     [

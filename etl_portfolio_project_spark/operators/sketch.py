@@ -225,10 +225,6 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CMS_PAIRS_DUCKDB = ", ".join(
-    f"({i}, {_cms_hash_sql_duckdb(i)})" for i in range(CMS_DEPTH)
-)
-
 CMS_HEAVY_HITTERS_SQL = f"""
 WITH hashed AS (
   SELECT user_id, hb.i AS i, hb.bucket AS bucket

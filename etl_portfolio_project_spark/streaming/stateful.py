@@ -225,13 +225,3 @@ def stream_user_extrema_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") == 1)
         .select("user_id", "n_events", "min_value", "max_value")
     )
-
-
-STREAM_USER_EXTREMA_TWS_SQL = """
-SELECT user_id,
-       count(*) AS n_events,
-       min(value) AS min_value,
-       max(value) AS max_value
-FROM events
-GROUP BY user_id
-"""

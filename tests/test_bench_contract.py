@@ -137,7 +137,8 @@ def test_detail_records_second_run_codegen_compiles(
 def test_detail_records_heap_after_each_query(spark, tmp_path, monkeypatch):
     """BENCH_DETAIL.json carries, per query, the driver heap in use
     after that query's release and full GC, so state a query leaves
-    live shows up as a step at that query."""
+    live shows up as a step at that query. It also records the
+    session's parallelism (`cpus`)."""
     pinned = []
 
     def pin_64mb(s, _sf):
@@ -159,7 +160,9 @@ def test_detail_records_heap_after_each_query(spark, tmp_path, monkeypatch):
         bench.main()
     finally:
         pinned.clear()
-    heap = json.loads((tmp_path / "BENCH_DETAIL.json").read_text())["heap_mb"]
+    detail = json.loads((tmp_path / "BENCH_DETAIL.json").read_text())
+    assert detail["cpus"] == spark.sparkContext.defaultParallelism
+    heap = detail["heap_mb"]
     assert set(heap) == {"a_plain", "b_pins_64mb"}
     # both runs of b_pins_64mb pinned a buffer: 128 MB more live heap
     assert heap["b_pins_64mb"] - heap["a_plain"] > 120

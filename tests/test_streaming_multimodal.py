@@ -694,8 +694,8 @@ def test_stream_inc_dedup_checkpoint_restart(spark, tmp_path):
     index reset) — doc C is a near-dup of phase-1's A and must be
     dropped WITH candidates; a reset index would keep it with zero
     candidates. Epoch 2 also triggers compaction ACROSS the restart
-    boundary (SD_COMPACT=3), so the manifest chain through a compacted
-    generation is exercised too."""
+    boundary (events.INDEX_COMPACT=3), so the manifest chain through a
+    compacted generation is exercised too."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -949,7 +949,7 @@ def test_stream_embedding_index_checkpoint_restart(spark, tmp_path):
     batches against the manifest-recovered PRE-restart index — vector
     C (batch 2) is near-identical to phase-1's A and must report it
     similar; a reset index would call C novel. Epoch 2 also compacts
-    across the restart boundary (SE_COMPACT=3)."""
+    across the restart boundary (events.INDEX_COMPACT=3)."""
     import json as _json
 
     import pyarrow as pa

@@ -18,7 +18,9 @@ Known-equivalent pairs that are NOT flagged:
 
 from __future__ import annotations
 
+import functools
 import os
+import re
 import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -39,9 +41,46 @@ _MAP = {
 }
 
 
+def schema_check(con, name, spec, df) -> list[str]:
+    """Runner action: `column: reason` for each column of the Spark
+    result whose type differs from the DuckDB oracle's."""
+    rel = con.sql(spec.oracle)
+    odt = dict(zip(rel.columns, [str(t) for t in rel.types]))
+    out = []
+    for f in df.schema:
+        c, st = f.name, f.dataType.simpleString()
+        ot = odt.get(c, "<missing>")
+        base = ot.split("(")[0]
+        om = _MAP.get(base, ot.lower())
+        if st.startswith("decimal("):
+            # graded DECIMAL(p>18) is the r5/r6 driver-red class
+            # (HUGEINT-backed conversion drift) — ban outright;
+            # oracle-side twin: tests/test_oracle_parity.py::
+            # test_oracle_no_wide_decimal
+            prec = int(st.split("(")[1].split(",")[0])
+            if prec > 18:
+                out.append(
+                    f"{c}: graded {st}: precision>18 banned — "
+                    "fold into BIGINT (outer % 1000000007)"
+                )
+                continue
+        if st.startswith("decimal") and base == "DECIMAL":
+            # equivalent only at matching precision/scale
+            if st.replace("decimal", "").replace(" ", "") == ot[
+                len("DECIMAL"):
+            ].replace(" ", ""):
+                continue
+        if st == "timestamp_ntz" and om == "timestamp":
+            continue
+        if st != om:
+            out.append(f"{c}: spark={st} duckdb={ot}")
+    return out
+
+
 def main() -> int:
-    from etl_portfolio_project_spark import api, caches
+    from etl_portfolio_project_spark import api
     from etl_portfolio_project_spark.session import get_spark
+    from tools.runner import run_registry
     from tools.verify_local import duck_con
 
     args = sys.argv[1:]
@@ -52,56 +91,24 @@ def main() -> int:
         # a typo must not produce a vacuous "0 mismatches" pass
         print(f"unknown queries {sorted(unknown)} or bad sf_dir {sf_dir}")
         return 2
-    spark = get_spark(cpus="8")
-    con = duck_con(sf_dir)
-    mismatches = []
-    for name, spec in sorted(api.REGISTRY.items()):
-        if only and name not in only:
-            continue
-        if spec.oracle is None:
-            continue
-        try:
-            sdt = {
-                f.name: f.dataType.simpleString()
-                for f in spec.builder(spark, sf_dir).schema
-            }
-            rel = con.sql(spec.oracle)
-            odt = dict(zip(rel.columns, [str(t) for t in rel.types]))
-        except Exception as e:  # surface, don't mask, builder errors
-            mismatches.append((name, "ERR", str(e)[:120]))
-            continue
-        finally:
-            caches.release_all()
-        for c, st in sdt.items():
-            ot = odt.get(c, "<missing>")
-            base = ot.split("(")[0]
-            om = _MAP.get(base, ot.lower())
-            if st.startswith("decimal("):
-                # graded DECIMAL(p>18) is the r5/r6 driver-red class
-                # (HUGEINT-backed conversion drift) — ban outright;
-                # oracle-side twin: tests/test_oracle_parity.py::
-                # test_oracle_no_wide_decimal
-                prec = int(st.split("(")[1].split(",")[0])
-                if prec > 18:
-                    mismatches.append(
-                        (name, c, f"graded {st}: precision>18 banned — "
-                         "fold into BIGINT (outer % 1000000007)")
-                    )
-                    continue
-            if st.startswith("decimal") and base == "DECIMAL":
-                # equivalent only at matching precision/scale
-                if st.replace("decimal", "").replace(" ", "") == ot[
-                    len("DECIMAL"):
-                ].replace(" ", ""):
-                    continue
-            if st == "timestamp_ntz" and om == "timestamp":
-                continue
-            if st != om:
-                mismatches.append((name, c, f"spark={st} duckdb={ot}"))
-    for r in mismatches:
-        print(f"[mismatch] {r[0]}.{r[1]}: {r[2]}")
-    print(f"{len(mismatches)} dtype mismatches")
-    return 1 if mismatches else 0
+    spark = get_spark()
+    check = functools.partial(schema_check, duck_con(sf_dir))
+    names = [
+        n for n, spec in sorted(api.REGISTRY.items())
+        if spec.oracle is not None and (not only or n in only)
+    ]
+    n_found = 0
+    for name, rec in run_registry(spark, sf_dir, names, check):
+        found = rec.problems
+        if rec.status in ("error", "timeout"):  # surface, don't mask
+            # the traceback tail's last `module.ExceptionType: message`
+            exc = re.findall(r"^\S+: .*$", "".join(found), re.M) or [""]
+            found = [f"ERR: {rec.status}: {exc[-1][:120]}"]
+        for p in found:
+            print(f"[mismatch] {name}.{p}")
+        n_found += len(found)
+    print(f"{n_found} dtype mismatches")
+    return 1 if n_found else 0
 
 
 if __name__ == "__main__":

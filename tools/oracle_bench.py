@@ -25,9 +25,8 @@ import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-sys.path.insert(0, os.path.join(_REPO, "tools"))
 
-from verify_local import duck_con  # noqa: E402  (same dir)
+from tools.verify_local import duck_con  # noqa: E402
 
 
 def main() -> int:

@@ -17,11 +17,10 @@ same code diff empty and captures of two commits diff only where the
 plans differ. The header carries the physical plan's Exchange count and
 the sha256 of the query's DuckDB oracle SQL, so one `diff -r` of two
 captures checks plan identity and oracle identity together.
-Timings print as one JSON line per query. Plans are captured from the
-SAME DataFrame object that gets timed, in a fresh-claims session
-(caches released first) so the cold plan is what's recorded (matches
-test_plans.py's convention of releasing the shared tier before pinning
-shapes).
+Timings print as one JSON line per query. Both passes run through
+`tools.runner.run_registry`, which releases the claimed caches before
+each query, so the captured plan is the cold, fresh-claims plan
+(test_plans.py's convention too); the timed runs rebuild the query.
 """
 
 from __future__ import annotations
@@ -32,7 +31,6 @@ import json
 import os
 import re
 import sys
-import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
@@ -76,68 +74,65 @@ def main() -> None:
 
     from etl_portfolio_project_spark import api, caches
     from etl_portfolio_project_spark.session import get_spark
+    from tools.runner import noop_sink, run_registry
 
     spark = get_spark(app_name="plan_probe")
     spark.read.parquet(f"{sf_dir}/orders.parquet").count()  # warm
 
-    if args.plans_dir:
-        os.makedirs(os.path.join(_REPO, args.plans_dir), exist_ok=True)
+    for name in sorted(set(args.names) - set(api.REGISTRY)):
+        print(f"!! unknown query: {name}", file=sys.stderr)
+    names = [n for n in args.names if n in api.REGISTRY]
 
-    out: dict[str, float] = {}
-    for name in args.names:
-        spec = api.REGISTRY.get(name)
-        if spec is None:
-            print(f"!! unknown query: {name}", file=sys.stderr)
-            continue
+    def capture_plan(name, spec, df) -> None:
+        qe = df._jdf.queryExecution()
+        physical = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
+        n_ex = physical.count("Exchange")
+        n_py = physical.count("EvalPython") + physical.count("MapInPandas") \
+            + physical.count("MapInArrow") + physical.count("FlatMapGroupsInPandas")
+        path = os.path.join(_REPO, args.plans_dir, f"{name}_{args.suffix}.txt")
+        header = (
+            "-- plan_probe capture: fresh-claims build "
+            "(caches.release_all() before builder). Claimed "
+            "relations appear as InMemoryRelation; their build "
+            "cost is paid at claim time inside the builder, "
+            "outside this plan.\n"
+            f"-- physical plan: Exchange={n_ex}, PythonNodes={n_py}\n"
+            f"-- oracle sha256: {_sha256(spec.oracle)}\n"
+        )
+        with open(path, "w") as f:
+            f.write(header + normalize_plan(qe.optimizedPlan().toString()))
+        print(f"{name}: plan -> {path} (Exchange={n_ex}, PythonNodes={n_py})")
+
+    def run(action, runs: int = 1) -> dict[str, float]:
+        """Best seconds of each query in `names` that ran `action`.
+        Under --shared-cold every build starts without the shared
+        index tier: it is released before the first and after each run."""
+        def cold(name, spec, df):
+            try:
+                return action(name, spec, df)
+            finally:
+                caches.release_shared_all()
+
         if args.shared_cold:
             caches.release_shared_all()
-        spark.sparkContext.setJobDescription(f"probe: {name}")
-        caches.release_all()  # fresh-claims build: cold plan shape
-        df = spec.builder(spark, sf_dir)
-        if args.plans_dir:
-            qe = df._jdf.queryExecution()
-            physical = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
-            n_ex = physical.count("Exchange")
-            n_py = physical.count("EvalPython") + physical.count("MapInPandas") \
-                + physical.count("MapInArrow") + physical.count("FlatMapGroupsInPandas")
-            path = os.path.join(
-                _REPO, args.plans_dir, f"{name}_{args.suffix}.txt"
-            )
-            # ADVICE r13: builders run eager claim jobs at BUILD time,
-            # so claimed relations print as InMemoryRelation subtrees
-            # here (their build cost is charged when the builder runs,
-            # not inside this captured plan) — same convention
-            # test_plans.py pins (fresh claims, cold shared tier only
-            # under --shared-cold).
-            header = (
-                "-- plan_probe capture: fresh-claims build "
-                "(caches.release_all() before builder). Claimed "
-                "relations appear as InMemoryRelation; their build "
-                "cost is paid at claim time inside the builder, "
-                "outside this plan.\n"
-                f"-- physical plan: Exchange={n_ex}, PythonNodes={n_py}\n"
-                f"-- oracle sha256: {_sha256(spec.oracle)}\n"
-            )
-            with open(path, "w") as f:
-                f.write(header + normalize_plan(qe.optimizedPlan().toString()))
-            print(f"{name}: plan -> {path} "
-                  f"(Exchange={n_ex}, PythonNodes={n_py})")
-        best = float("inf")
-        for _ in range(max(args.time, 0)):
-            caches.release_all()
-            if args.shared_cold:
-                caches.release_shared_all()
-            t0 = time.perf_counter()
-            d2 = spec.builder(spark, sf_dir)
-            d2.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        if args.time:
-            out[name] = round(best, 3)
+        out = {}
+        each = cold if args.shared_cold else action
+        for name, rec in run_registry(spark, sf_dir, names, each, runs):
+            if rec.status == "ok":
+                out[name] = rec.seconds
+            else:
+                print(f"!! {name}: {rec.status}", *rec.problems,
+                      sep="\n", file=sys.stderr)
+        return out
+
+    if args.plans_dir:
+        os.makedirs(os.path.join(_REPO, args.plans_dir), exist_ok=True)
+        run(capture_plan)
+    if args.time:
+        out = run(noop_sink, args.time)
+        for name, sec in out.items():
             print(json.dumps({"query": name, "best_of": args.time,
-                              "sec": out[name]}))
-        caches.release_all()
-        spark._jvm.System.gc()
-    if out:
+                              "sec": sec}))
         print(json.dumps({"total": round(sum(out.values()), 3),
                           "queries": out}))
 

@@ -1,5 +1,6 @@
-"""SF ladder: every registered query, timed by the bench's own loop
-(`bench.time_queries`) at sf0.01, sf0.1, "sf1e" and "viral".
+"""SF ladder: every registered query, timed as bench.py times it
+(`tools.runner.run_registry` with the noop sink, best of `bench.RUNS`)
+at sf0.01, sf0.1, "sf1e" and "viral".
 
 The harness ships no sf1 testdata, so the ladder SYNTHESIZES one
 ("sf1e") from the sf0.1 generator's own empirical statistics:
@@ -210,17 +211,17 @@ def run_ladder(spark, rungs: list[tuple[str, str]]) -> dict:
     SCALING_RAW.json and print the sf0.1 → sf1e growth table."""
     import bench
     from etl_portfolio_project_spark import api
+    from tools.runner import noop_sink, run_registry
 
     raw: dict = {"cpus": spark.sparkContext.defaultParallelism, "rungs": {}}
     for label, sf_dir in rungs:
         print(f"--- {label} ({sf_dir})")
         t0 = time.perf_counter()
-        rec = bench.time_queries(spark, sf_dir, sorted(api.REGISTRY))
+        rec = bench.timing_record(run_registry(
+            spark, sf_dir, sorted(api.REGISTRY), noop_sink, bench.RUNS
+        ))
         raw["rungs"][label] = {
-            "wall_s": round(time.perf_counter() - t0, 1),
-            "seconds": rec["seconds"],
-            "codegen_compiles": rec["codegen_compiles"],
-            "errors": rec["errors"],
+            "wall_s": round(time.perf_counter() - t0, 1), **rec
         }
         print(f"{len(rec['seconds'])} ran, {len(rec['errors'])} errors")
     with open(os.path.join(_REPO, "SCALING_RAW.json"), "w") as f:

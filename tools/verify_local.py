@@ -239,33 +239,35 @@ def main() -> int:
     else:
         from etl_portfolio_project_spark.session import get_spark
 
-        spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    con = duck_con(sf_dir)
-    qs, oracles = api.queries(), api.oracle_sql()
-    failed = []
-    from etl_portfolio_project_spark import caches
+        spark = get_spark()
+    from tools.runner import run_registry
 
-    for name, builder in qs.items():
-        if only and name not in only:
-            continue
-        sdf = builder(spark, sf_dir).toPandas()
-        # same isolation as bench.py: a live claimed cache is a plan
-        # tree the CacheManager compares against every later query
-        caches.release_all()
-        if name not in oracles:
-            print(f"[rows-only] {name}: {len(sdf)} rows")
-            continue
-        odf = con.execute(oracles[name]).df()
+    con = duck_con(sf_dir)
+    rows: dict[str, int] = {}
+
+    def check(name, spec, df) -> list[str]:
+        sdf = df.toPandas()
+        rows[name] = len(sdf)
+        if spec.oracle is None:
+            return []
+        odf = con.execute(spec.oracle).df()
         problems = compare(name, sdf, odf)
         if driver_canon:
             problems += driver_canon_compare(name, sdf, odf)
-        if problems:
+        return problems
+
+    failed = []
+    names = [n for n in api.REGISTRY if not only or n in only]
+    for name, rec in run_registry(spark, sf_dir, names, check):
+        if rec.status != "ok":
             failed.append(name)
-            print(f"[FAIL] {name} ({len(sdf)} rows)")
-            for p in problems:
+            print(f"[{rec.status.upper()}] {name} ({rows.get(name, '?')} rows)")
+            for p in rec.problems:
                 print("   ", p)
+        elif api.REGISTRY[name].oracle is None:
+            print(f"[rows-only] {name}: {rows[name]} rows")
         else:
-            print(f"[ok]   {name}: {len(sdf)} rows match oracle exactly")
+            print(f"[ok]   {name}: {rows[name]} rows match oracle exactly")
     print()
     if failed:
         print("FAILED:", failed)
