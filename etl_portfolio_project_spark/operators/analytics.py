@@ -14,7 +14,15 @@ from pyspark.sql import functions as F
 
 from ..sources.registry import balanced, load_table
 from .relational import dec, dec_disc_price, dec_disc_price_sql, dsum, dsum_sql
-from .text import langid_expr, langid_sql, portable_hash60_sql, tokens_expr
+from .text import (
+    LANG_MARKERS,
+    bind_once_sql,
+    langid_sql,
+    portable_hash60,
+    portable_hash60_spark_sql,
+    portable_hash60_sql,
+    tokens_sql,
+)
 
 
 def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -356,8 +364,6 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartitioning, and trivially auditable — all properties
     `sample()`'s per-partition RNG lacks. Pure narrow filter; at
     100 TB it runs inside the scan's codegen stage."""
-    from .text import portable_hash60
-
     d = load_table(spark, sf_dir, "documents")
     rate = F.lit(MIXTURE_DEFAULT_RATE)
     for src, r in MIXTURE_RATES.items():
@@ -613,7 +619,6 @@ def corpus_preparation(spark: SparkSession, sf_dir: str) -> DataFrame:
     is evaluated once, and the whole pipeline has exactly one shuffle
     (hash partition by fp); fp groups are tiny so no skew risk."""
     from ..sources.registry import balanced
-    from .text import LANG_MARKERS, bind_once_sql
 
     # balanced(): the regex-profiling projection dwarfs a slim-row
     # shuffle on the single-file harness table (the plan-budget
@@ -638,7 +643,7 @@ def corpus_preparation(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"WHEN m.c2 >= m.c3 THEN '{langs[2]}' ELSE '{langs[3]}' END"
     )
     one = bind_once_sql(
-        "split(trim(text), '\\\\s+')",
+        tokens_sql("text"),
         "tk",
         bind_once_sql(
             f"struct(size(tk) AS nt, {counts})",
@@ -1084,10 +1089,9 @@ FROM m
 SEARCH_TERMS = ["spark", "stream", "query", "fast"]
 SEARCH_TOP_K = 20
 
-#: ONE lowered-tokenization definition shared by every search scorer
-#: (keyword tf + BM25) and its oracle — rankings depend on identical
-#: token boundaries, so the expression must not fork per operator
-LOWER_TOKS_SPARK = "split(trim(lower(text)), '\\\\s+')"
+#: ONE lowered-tokenization oracle shared by every search scorer
+#: (keyword tf + BM25); the Spark side is text.tokens_sql — rankings
+#: depend on identical token boundaries, so neither may fork per operator
 LOWER_TOKS_DUCK = "regexp_split_to_array(trim(lower(text)), '\\s+')"
 
 
@@ -1104,7 +1108,7 @@ def keyword_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = [t.lower() for t in SEARCH_TERMS]
     toks = d.select(
         "doc_id",
-        F.explode(F.expr(LOWER_TOKS_SPARK)).alias("word"),
+        F.explode(F.expr(tokens_sql("lower(text)"))).alias("word"),
     ).where(F.col("word").isin(terms))
     return (
         toks.groupBy("doc_id")
@@ -1185,7 +1189,7 @@ def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = balanced(load_table(spark, sf_dir, "documents"))
     terms = [t.lower() for t in SEARCH_TERMS]
     base = d.select(
-        "doc_id", F.expr(LOWER_TOKS_SPARK).alias("toks")
+        "doc_id", F.expr(tokens_sql("lower(text)")).alias("toks")
     )
     from .. import caches
 
@@ -1327,7 +1331,6 @@ def source_capped_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the boundary — the kept set is provably identical."""
     from .. import caches
     from .ranking import grouped_bottomk_survivors
-    from .text import portable_hash60
 
     d = load_table(spark, sf_dir, "documents")
     # claim ONCE: the helper scans its input twice (bucket-minima agg
@@ -1648,7 +1651,6 @@ def corpus_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", "n_s", quota.alias("quota")
     )
     from .. import caches
-    from .text import portable_hash60
 
     h = portable_hash60(F.col("doc_id").cast("string"))
     wsrc = Window.partitionBy("source").orderBy(
@@ -1730,11 +1732,10 @@ def source_quality_percentile_filter(
     rank ≡ row_number), with the n=1 group pinned to 0.0 exactly as
     percent_rank defines it."""
     from .ranking import grouped_ranged_row_number
-    from .text import bind_once_sql
 
     d = balanced(load_table(spark, sf_dir, "documents"))
     uniq = bind_once_sql(
-        "split(trim(text), '\\\\s+')",
+        tokens_sql("text"),
         "t",
         "CAST(size(array_distinct(t)) AS DOUBLE)"
         " / CAST(size(t) AS DOUBLE)",
@@ -2128,8 +2129,8 @@ def events_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = e.withColumn(
         "ak",
         F.expr(
-            "event_id + CAST(conv(substring(md5(CAST(event_id AS STRING)), "
-            f"1, 15), 16, 10) AS BIGINT) % {2 * _LATENESS_JITTER + 1} "
+            f"event_id + {portable_hash60_spark_sql('CAST(event_id AS STRING)')}"
+            f" % {2 * _LATENESS_JITTER + 1} "
             f"- {_LATENESS_JITTER}"
         ),
     ).withColumn("chunk", F.expr(f"ak div {_LATENESS_CHUNK}"))

@@ -36,8 +36,15 @@ from pyspark.sql import functions as F
 
 from ..sources.registry import balanced, load_table
 from .dedup import DEDUP_SOURCE_BLOCK, _WINNOW_GRAMS_SPARK, _WINNOW_MINS_SPARK
-from .dedup import WINNOW_K, WINNOW_W, MH_P, _WINNOW_TOKS_SPARK, winnow_g_fp_ctes_sql
-from .text import portable_hash60, portable_hash60_sql
+from .dedup import WINNOW_K, WINNOW_W, winnow_g_fp_ctes_sql
+from .text import (
+    _windows_spark_sql,
+    bind_once_sql,
+    portable_hash60,
+    portable_hash60_spark_sql,
+    portable_hash60_sql,
+    tokens_sql,
+)
 
 # --- deterministic train/val/test split -----------------------------------
 
@@ -228,7 +235,7 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     excerpts = block.where(F.col("doc_id") % EXCERPT_MOD == 0).select(
         (F.col("doc_id") + EXCERPT_ID_OFFSET).alias("doc_id"),
         F.expr(
-            f"concat_ws(' ', slice({_WINNOW_TOKS_SPARK}, "
+            f"concat_ws(' ', slice({tokens_sql('lower(text)')}, "
             f"{_EXCERPT_START}, {_EXCERPT_LEN}))"
         ).alias("text"),
     )
@@ -245,7 +252,7 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = caches.claim_if_large(
         "doc_containment_fp",
         block.unionByName(excerpts)
-        .select("doc_id", F.expr(_WINNOW_TOKS_SPARK).alias("toks"))
+        .select("doc_id", F.expr(tokens_sql("lower(text)")).alias("toks"))
         .where(F.size("toks") >= WINNOW_K + WINNOW_W - 1)
         .select("doc_id", F.expr(_WINNOW_GRAMS_SPARK).alias("grams"))
         .select("doc_id", F.explode(F.expr(_WINNOW_MINS_SPARK)).alias("fp")),
@@ -695,8 +702,6 @@ def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded frame put the largest syndication group's whole row set
     in one task — then one per-source partial-agg'd rollup."""
     d = balanced(load_table(spark, sf_dir, "documents"))
-    from .text import bind_once_sql
-
     # strip fragment, tracking params, dangling separator
     c3 = (
         "regexp_replace(regexp_replace(regexp_replace("
@@ -711,8 +716,6 @@ def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "|| regexp_replace(replace(substring(c, length(h) + 1), '/?', '?'), "
         "'/$', ''))"
     )
-    from .text import portable_hash60_spark_sql
-
     one = bind_once_sql(
         _url_synth_sql(portable_hash60_spark_sql),
         "u",
@@ -852,17 +855,12 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs clear the ratio>1 gate — like `langid_expr`, the op is
     graded on plumbing + bit-exactness; on a real multi-domain corpus
     the identical plan separates domains."""
-    from .text import bind_once_sql, tokens_expr
-
     d = balanced(load_table(spark, sf_dir, "documents"))
-    feats = bind_once_sql(
-        "split(trim(text), '\\\\s+')",
-        "tk",
-        "concat(tk, CASE WHEN size(tk) < 2 "
-        "THEN CAST(array() AS ARRAY<STRING>) "
-        "ELSE transform(sequence(1, size(tk) - 1), "
-        "i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1))) END)",
+    bigrams = _windows_spark_sql(
+        "tk", 2, "concat(element_at(tk, i), ' ', element_at(tk, i + 1))",
+        "STRING",
     )
+    feats = bind_once_sql(tokens_sql("text"), "tk", f"concat(tk, {bigrams})")
     from pyspark.sql import Window
 
     toks = d.select(

@@ -49,6 +49,7 @@ from .text import (
     portable_hash60,
     portable_hash60_sql,
     portable_hash60_spark_sql,
+    tokens_sql,
 )
 
 #: modulus for order-free content fingerprints — exact in BIGINT on
@@ -149,7 +150,7 @@ def preference_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.expr(
             bind_once_sql(
-                "split(trim(text), '\\\\s+')", "tk", _pref_score_spark()
+                tokens_sql("text"), "tk", _pref_score_spark()
             )
         ).alias("q"),
     )
@@ -232,7 +233,7 @@ def filter_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "named_struct('nt', CAST(0 AS BIGINT), 'nd', CAST(0 AS BIGINT)) "
         "ELSE "
         + bind_once_sql(
-            "split(trim(text), '\\\\s+')",
+            tokens_sql("text"),
             "tk",
             "named_struct('nt', CAST(size(tk) AS BIGINT), "
             "'nd', CAST(size(array_distinct(tk)) AS BIGINT))",
@@ -598,7 +599,7 @@ def span_corruption_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "'n_masked', CAST(0 AS BIGINT), 'n_spans', CAST(0 AS BIGINT), "
         "'mask_rate', CAST(0.0 AS DOUBLE), "
         "'mask_fp', CAST(-1 AS BIGINT)) "
-        "ELSE " + bind_once_sql("split(trim(text), '\\\\s+')", "tk", body)
+        "ELSE " + bind_once_sql(tokens_sql("text"), "tk", body)
         + " END"
     )
     out = d.select(

@@ -42,10 +42,13 @@ from pyspark.sql import functions as F
 from .. import caches
 from ..sources.registry import balanced, load_table
 from .text import (
+    _ngrams_spark_sql,
+    _windows_spark_sql,
     bind_once_sql,
     portable_hash60_spark_sql,
     portable_hash60_sql,
     tokens_expr,
+    tokens_sql,
 )
 
 #: MinHash parameters — k hash functions in b bands of r rows (k=b*r).
@@ -399,10 +402,8 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _shingle_hashes_spark_sql() -> str:
     """Spark-SQL 60-bit md5 hashes of the distinct 3-word shingles
     (LET-bound token split — see `ngram_jaccard_neardup`)."""
-    from .text import _ngrams_spark_sql
-
     return bind_once_sql(
-        "split(trim(text), '\\\\s+')",
+        tokens_sql("text"),
         "t",
         f"array_distinct(transform({_ngrams_spark_sql('t', SHINGLE_N)}, "
         f"g -> {portable_hash60_spark_sql('g')}))",
@@ -461,7 +462,7 @@ def _minhash_signature() -> Column:
     """MinHash signature of each row's distinct whitespace tokens."""
     return F.expr(
         _affine_minhash_sql(
-            "transform(array_distinct(split(trim(text), '\\\\s+')), "
+            f"transform(array_distinct({tokens_sql('text')}), "
             f"t -> {portable_hash60_spark_sql('t')} % {MH_P})"
         )
     )
@@ -662,22 +663,24 @@ WINNOW_W = 4  # winnowing window (grams per window)
 WINNOW_MIN_SHARED = 1  # shared minimizers to emit a candidate pair
 
 #: shared Spark-SQL / DuckDB building blocks (kept as ONE generated
-#: SQL string each — see CLAUDE.md: no per-element Column chaining)
-_WINNOW_TOKS_SPARK = "split(trim(lower(text)), '\\\\s+')"
-#: `toks`/`grams` are LET-bound (transform-over-one-element-array):
-#: CollapseProject would otherwise inline the upstream split/hash
-#: expression into every lambda reference and re-evaluate it per
-#: element under interpreted HOF eval (see text.bind_once_sql).
-_WINNOW_GRAMS_SPARK = (
-    "transform(array(toks), tk -> "
+#: SQL string each: no per-element Column chaining).
+#: `toks`/`grams` are LET-bound (text.bind_once_sql): CollapseProject
+#: would otherwise inline the upstream split/hash expression into
+#: every lambda reference and re-evaluate it per element under
+#: interpreted HOF eval. Callers keep only docs with
+#: size(toks) >= WINNOW_K + WINNOW_W - 1, so neither window descends.
+_WINNOW_GRAMS_SPARK = bind_once_sql(
+    "toks",
+    "tk",
     f"transform(sequence(1, size(tk) - {WINNOW_K - 1}), i -> "
-    "cast(conv(substring(md5(concat_ws(' ', slice(tk, i, "
-    f"{WINNOW_K}))), 1, 15), 16, 10) as bigint) % {MH_P}))[0]"
+    + portable_hash60_spark_sql(f"concat_ws(' ', slice(tk, i, {WINNOW_K}))")
+    + f" % {MH_P})",
 )
-_WINNOW_MINS_SPARK = (
-    "transform(array(grams), gs -> "
+_WINNOW_MINS_SPARK = bind_once_sql(
+    "grams",
+    "gs",
     f"array_distinct(transform(sequence(1, size(gs) - {WINNOW_W - 1}), "
-    f"j -> array_min(slice(gs, j, {WINNOW_W})))))[0]"
+    f"j -> array_min(slice(gs, j, {WINNOW_W}))))",
 )
 
 
@@ -698,7 +701,7 @@ def winnow_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents")
         .where(F.col("source") == DEDUP_SOURCE_BLOCK)
-        .select("doc_id", F.expr(_WINNOW_TOKS_SPARK).alias("toks"))
+        .select("doc_id", F.expr(tokens_sql("lower(text)")).alias("toks"))
         .where(F.size("toks") >= WINNOW_K + WINNOW_W - 1)
         .select("doc_id", F.expr(_WINNOW_GRAMS_SPARK).alias("grams"))
         .select("doc_id", F.explode(F.expr(_WINNOW_MINS_SPARK)).alias("fp"))
@@ -1135,7 +1138,7 @@ WHERE l.doc_id IS NULL
 #: 31 effective bits, inflating the P[hamming ≤ 8] false-pair rate by
 #: ~3 orders of magnitude. SimHash needs all 48 packed bits live.
 _RAW_TOKEN_HASHES_SPARK_SQL = (
-    "transform(array_distinct(split(trim(text), '\\\\s+')), "
+    f"transform(array_distinct({tokens_sql('text')}), "
     f"t -> {portable_hash60_spark_sql('t')})"
 )
 
@@ -1228,11 +1231,7 @@ def _decon_ngrams_spark() -> str:
     """4-gram array with the token split LET-bound (evaluated once per
     row — see text.bind_once_sql; an inlined split re-runs per
     element under interpreted HOF eval)."""
-    from .text import _ngrams_spark_sql
-
-    return bind_once_sql(
-        "split(trim(text), '\\\\s+')", "t", _ngrams_spark_sql("t", DECON_N)
-    )
+    return bind_once_sql(tokens_sql("text"), "t", _ngrams_spark_sql("t", DECON_N))
 
 
 def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2500,18 +2499,16 @@ def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded lists; one window over per-(pair, diagonal) partitions
     whose size is bounded by doc length. The oracle mirrors the cap
     with a HAVING frequency filter — value-identical either shape."""
-    # gram hash via the shared 60-bit recipe helper (r5 advice: an
-    # inlined copy here would silently miss a future recipe change)
-    from .text import portable_hash60_spark_sql as _ph60
-
-    gram_h = _ph60(f"concat_ws(' ', slice(tk, i, {ES_K}))")
-    grams_expr = (
-        "transform(array(split(trim(lower(text)), '\\\\s+')), tk -> "
-        f"CASE WHEN size(tk) < {ES_K} THEN "
-        "CAST(array() AS array<struct<pos: bigint, h: bigint>>) ELSE "
-        f"transform(sequence(1, size(tk) - {ES_K - 1}), i -> "
-        "named_struct('pos', CAST(i AS BIGINT), 'h', "
-        f"{gram_h})) END)[0]"
+    gram_h = portable_hash60_spark_sql(f"concat_ws(' ', slice(tk, i, {ES_K}))")
+    grams_expr = bind_once_sql(
+        tokens_sql("lower(text)"),
+        "tk",
+        _windows_spark_sql(
+            "tk",
+            ES_K,
+            f"named_struct('pos', CAST(i AS BIGINT), 'h', {gram_h})",
+            "struct<pos: bigint, h: bigint>",
+        ),
     )
     # balanced(): the per-token md5 gram hashing dwarfs a slim-row
     # shuffle — without the spread the whole projection rides the 1-3
@@ -2669,7 +2666,7 @@ def exact_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     rewrite_expr = bind_once_sql(
-        "split(trim(lower(text)), '\\\\s+')",
+        tokens_sql("lower(text)"),
         "tk",
         bind_once_sql(
             "filter(sequence(1, size(tk)), i -> NOT exists("

@@ -44,11 +44,31 @@ LANG_MARKERS: list[tuple[str, list[str]]] = [
 
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 PUNCT_PATTERN = r"[.,;:!?]"
+#: the whitespace tokenizer's split regex (`tokens_expr`, `tokens_sql`)
+_WS_SPLIT = r"\s+"
+
+
+def _spark_regex_literal(pattern: str) -> str:
+    """`pattern` as a quoted Spark-SQL string literal. The SQL parser
+    unescapes backslashes, so each is doubled: the JVM sees `pattern`."""
+    return "'" + pattern.replace("\\", "\\\\") + "'"
 
 
 def tokens_expr(text: Column) -> Column:
-    """Whitespace tokenization (both engines split identically)."""
-    return F.split(F.trim(text), r"\s+")
+    """Whitespace tokenization: trim, then split on runs of `\\s`.
+
+    The DuckDB oracles' `regexp_split_to_array(trim(t), '\\s+')` gives
+    the same tokens only when the text's whitespace is ' ', \\t, \\n,
+    \\f or \\r: DuckDB's trim also strips U+00A0 where Spark's does not
+    ('\\xa0a b' is ['\\xa0a', 'b'] here, ['a', 'b'] there), and RE2's
+    `\\s` lacks the vertical tab that Java's has ('a\\x0bb' is
+    ['a', 'b'] here, ['a\\x0bb'] there)."""
+    return F.split(F.trim(text), _WS_SPLIT)
+
+
+def tokens_sql(expr: str) -> str:
+    """Spark-SQL string form of `tokens_expr` over the SQL `expr`."""
+    return f"split(trim({expr}), {_spark_regex_literal(_WS_SPLIT)})"
 
 
 def portable_hash60(col: Column) -> Column:
@@ -153,7 +173,7 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"size(regexp_extract_all(text, '{PUNCT_PATTERN}', 0)) AS npunct, "
         "size(regexp_extract_all(text, '[0-9]', 0)) AS ndigits, "
         "size(regexp_extract_all(text, "
-        "'[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\\\s]', 0)) AS nbpe)"
+        f"{_spark_regex_literal(BPE_ISH_PATTERN)}, 0)) AS nbpe)"
     )
     # try_divide: DuckDB integer '/' yields NULL on a zero divisor
     # (empty doc -> n_chars 0) where Spark ANSI Divide ERRORS —
@@ -197,7 +217,7 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "m.rolling AS fingerprint_rolling)"
     )
     one = bind_once_sql(
-        "split(trim(text), '\\\\s+')",
+        tokens_sql("text"),
         "tk",
         bind_once_sql(m_struct, "m", final_struct),
     )
@@ -309,19 +329,27 @@ REP_2GRAM_TAU = 0.05
 REP_3GRAM_TAU = 0.02
 
 
-def _ngrams_spark_sql(toks_sql: str, n: int) -> str:
-    """Spark-SQL word n-gram array. Guarded: Spark's sequence(1, k)
-    auto-descends for k < 1, so short docs need an explicit empty.
+def _windows_spark_sql(arr: str, n: int, body: str, elem_type: str) -> str:
+    """Spark-SQL array of `body`, an expression over the 1-based start
+    `i`, for each n-wide window of the array `arr`; empty below n
+    elements. The guard is required: Spark's sequence(1, k < 1)
+    DESCENDS ([1, 0, ...]) and slice/element_at at 0 throws under
+    ANSI, where the oracle's generate_series(1, k) is empty.
 
-    IMPORTANT: pass a LAMBDA-BOUND variable (e.g. `t`), never an
-    inline split(...) expression — higher-order functions evaluate
-    interpreted (no codegen/CSE), so an inlined token expression
-    would re-run the regex split once per n-gram element (measured:
-    29 s → <1 s at sf0.1 for the repetition profile)."""
+    Pass a LAMBDA-BOUND `arr` (e.g. `t`), never an inline split(...):
+    higher-order functions evaluate interpreted (no codegen/CSE), so
+    the split would re-run once per window (measured: 29 s → <1 s at
+    sf0.1 for the repetition profile)."""
     return (
-        f"CASE WHEN size({toks_sql}) < {n} THEN CAST(array() AS ARRAY<STRING>) "
-        f"ELSE transform(sequence(1, size({toks_sql}) - {n - 1}), "
-        f"i -> array_join(slice({toks_sql}, i, {n}), ' ')) END"
+        f"CASE WHEN size({arr}) < {n} THEN CAST(array() AS ARRAY<{elem_type}>) "
+        f"ELSE transform(sequence(1, size({arr}) - {n - 1}), i -> {body}) END"
+    )
+
+
+def _ngrams_spark_sql(toks_sql: str, n: int) -> str:
+    """Spark-SQL word n-gram array of the token array `toks_sql`."""
+    return _windows_spark_sql(
+        toks_sql, n, f"array_join(slice({toks_sql}, i, {n}), ' ')", "STRING"
     )
 
 
@@ -403,7 +431,7 @@ def doc_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "g",
         metrics,
     )
-    one_struct = bind_once_sql("split(trim(text), '\\\\s+')", "t", body)
+    one_struct = bind_once_sql(tokens_sql("text"), "t", body)
     return d.select("doc_id", F.expr(f"inline(array({one_struct}))"))
 
 
@@ -584,7 +612,7 @@ def sequence_packing_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .ranking import grouped_ranged_cumsum
 
     d = balanced(load_table(spark, sf_dir, "documents"))
-    nt = "size(split(trim(text), '\\\\s+'))"
+    nt = f"size({tokens_sql('text')})"
     base = d.select(
         "doc_id", "source", F.expr(f"CAST({nt} AS BIGINT)").alias("n_tokens")
     )
@@ -638,7 +666,7 @@ def bigram_conditional_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the (w1, w2) composite key."""
     d = balanced(load_table(spark, sf_dir, "documents"))
     g2 = bind_once_sql(
-        "split(trim(lower(text)), '\\\\s+')",
+        tokens_sql("lower(text)"),
         "t",
         _ngrams_spark_sql("t", 2),
     )
@@ -737,7 +765,7 @@ def ccnet_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     no single-reducer sort at any corpus size."""
     d = balanced(load_table(spark, sf_dir, "documents"))
     g2 = bind_once_sql(
-        "split(trim(lower(text)), '\\\\s+')",
+        tokens_sql("lower(text)"),
         "t",
         _ngrams_spark_sql("t", 2),
     )
@@ -909,7 +937,7 @@ def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence, slice + hash inside the same codegen-free HOF stage.
     No shuffle at any size; a 100 TB corpus chunks scan-parallel."""
     d = balanced(load_table(spark, sf_dir, "documents"))
-    toks = "split(trim(text), '\\\\s+')"
+    toks = tokens_sql("text")
     per_chunk = (
         f"transform(sequence(0, CAST((size(t) - 1) div {CHUNK_STRIDE} AS INT)), "
         f"i -> named_struct("
@@ -1051,23 +1079,27 @@ def _cdc_chunks_expr() -> str:
     boundary = (
         "CASE WHEN size(tk) < 2 THEN CAST(array() AS array<int>) ELSE "
         "filter(sequence(2, size(tk)), i -> "
-        "cast(conv(substring(md5(concat(element_at(tk, i - 1), ' ', "
-        "element_at(tk, i))), 1, 15), 16, 10) as bigint) "
-        f"% {CDC_MOD} = 0) END"
+        + portable_hash60_spark_sql(
+            "concat(element_at(tk, i - 1), ' ', element_at(tk, i))"
+        )
+        + f" % {CDC_MOD} = 0) END"
     )
-    spans = (
-        "filter(transform(sequence(1, size(bp) + 1), j -> "
-        "transform(array(named_struct("
+    span = bind_once_sql(
+        "named_struct("
         "'s', if(j = 1, 1, element_at(bp, j - 1) + 1), "
-        "'e', if(j <= size(bp), element_at(bp, j), size(tk)))), se -> "
+        "'e', if(j <= size(bp), element_at(bp, j), size(tk)))",
+        "se",
         "named_struct("
         "'chunk_id', CAST(j - 1 AS BIGINT), "
         "'start_tok', CAST(se.s AS BIGINT), "
         "'chunk_len', CAST(se.e - se.s + 1 AS BIGINT), "
-        "'ctoks', slice(tk, se.s, se.e - se.s + 1)))[0]), "
+        "'ctoks', slice(tk, se.s, se.e - se.s + 1))",
+    )
+    spans = (
+        f"filter(transform(sequence(1, size(bp) + 1), j -> {span}), "
         "c -> c.chunk_len >= 1)"
     )
-    toks = "split(trim(text), '\\\\s+')"
+    toks = tokens_sql("text")
     return bind_once_sql(toks, "tk", bind_once_sql(boundary, "bp", spans))
 
 
@@ -1158,19 +1190,17 @@ def repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup targets), and the output feeds a span-removal pass. The
     8-gram hash is md5-portable so the oracle matches bitwise."""
     d = balanced(load_table(spark, sf_dir, "documents"))
-    toks = "split(trim(lower(text)), '\\\\s+')"
-    # CASE guard for sub-8-token docs: sequence(1, n) with n ≤ 0
-    # DESCENDS ([1, 0, ...]) and slice(tk, 0, 8) then throws under
-    # Spark 4 ANSI (verified crash) — the oracle filters len(tk) >= 8;
-    # this guard is the Spark mirror (current testdata min is 10
-    # tokens, but the generator has drifted between rounds before)
-    grams = (
-        f"CASE WHEN size(tk) < {REP_NGRAM_N} THEN "
-        "CAST(array() AS array<struct<pos: bigint, g: bigint>>) ELSE "
-        f"transform(sequence(1, size(tk) - {REP_NGRAM_N - 1}), i -> "
+    toks = tokens_sql("lower(text)")
+    # sub-8-token docs get no grams (the oracle filters len(tk) >= 8)
+    grams = _windows_spark_sql(
+        "tk",
+        REP_NGRAM_N,
         "named_struct('pos', CAST(i AS BIGINT), 'g', "
-        "cast(conv(substring(md5(concat_ws(' ', "
-        f"slice(tk, i, {REP_NGRAM_N}))), 1, 15), 16, 10) as bigint))) END"
+        + portable_hash60_spark_sql(
+            f"concat_ws(' ', slice(tk, i, {REP_NGRAM_N}))"
+        )
+        + ")",
+        "struct<pos: bigint, g: bigint>",
     )
     exploded = (
         d.select("doc_id", F.expr(bind_once_sql(toks, "tk", grams)).alias("gs"))
@@ -1240,7 +1270,7 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vocab_oov_toks",
         d.select(
             "doc_id",
-            F.explode(F.expr("split(trim(lower(text)), '\\\\s+')")).alias("w"),
+            F.explode(F.expr(tokens_sql("lower(text)"))).alias("w"),
         ),
     )
     vocab = (
@@ -1328,7 +1358,7 @@ def gopher_structural_gate_sql() -> str:
     NULL text yields NULL exactly like the joined flags did (dropped
     by the gate filter either way)."""
     return bind_once_sql(
-        "split(trim(text), '\\\\s+')",
+        tokens_sql("text"),
         "tk",
         bind_once_sql(
             "struct(" + _GOPHER_COUNT_FIELDS_SQL + ")",
@@ -1403,7 +1433,7 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         "AND (m.nstop >= 2)) AS passes_all)"
     )
     one = bind_once_sql(
-        "split(trim(text), '\\\\s+')",
+        tokens_sql("text"),
         "tk",
         bind_once_sql(
             "transform(tk, t -> lower(t))",
@@ -1475,7 +1505,7 @@ C4_MIN_SENTENCE_WORDS = 5
 _C4_HAS_LOREM_SQL = "(lower(text) LIKE '%lorem ipsum%')"
 _C4_HAS_BRACE_SQL = "(instr(text, '{') > 0)"
 _C4_HAS_JS_SQL = (
-    "array_contains(transform(split(trim(lower(text)), '\\\\s+'), "
+    f"array_contains(transform({tokens_sql('lower(text)')}, "
     "t -> t), 'javascript')"
 )
 
@@ -1505,7 +1535,7 @@ def c4_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         "struct("
         "CAST(size(sn) AS BIGINT) AS n_sent, "
         "(trim(text) rlike '[.!?\"]$') AS ends_term, "
-        f"size(filter(sn, s -> size(split(trim(s), '\\\\s+')) < "
+        f"size(filter(sn, s -> size({tokens_sql('s')}) < "
         f"{C4_MIN_SENTENCE_WORDS})) AS n_short_sent, "
         f"{_C4_HAS_LOREM_SQL} AS has_lorem, "
         f"{_C4_HAS_BRACE_SQL} AS has_brace, "
@@ -1595,14 +1625,14 @@ def token_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: narrow per-doc integer counts riding the scan, then
     one partial-agg'd groupBy on a 5-value key."""
     d = balanced(load_table(spark, sf_dir, "documents"))
-    pat = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
+    pat = _spark_regex_literal(BPE_ISH_PATTERN)
     per_doc = d.select(
         "lang",
-        F.expr("CAST(size(split(trim(text), '\\\\s+')) AS BIGINT)").alias(
+        F.expr(f"CAST(size({tokens_sql('text')}) AS BIGINT)").alias(
             "n_words"
         ),
         F.expr(
-            f"CAST(size(regexp_extract_all(text, '{pat}', 0)) AS BIGINT)"
+            f"CAST(size(regexp_extract_all(text, {pat}, 0)) AS BIGINT)"
         ).alias("n_pieces"),
     )
     return (
@@ -1796,8 +1826,7 @@ def bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chars + end-of-word marker, then adjacent pairs; LET-bound so
     # the char split runs once per word (interpreted-HOF rule)
     pairs_expr = bind_once_sql(
-        "concat(transform(sequence(1, length(word)), "
-        f"i -> substring(word, i, 1)), array('{BPE_EOW}'))",
+        _bpe_syms_spark(),
         "t",
         "transform(sequence(1, size(t) - 1), "
         "i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))",
@@ -1911,7 +1940,7 @@ def hashed_ngram_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "> (m.n_uni + m.n_bi) * 1000) AS keep_flag)"
     )
     one = bind_once_sql(
-        "split(trim(text), '\\\\s+')",
+        tokens_sql("text"),
         "tk",
         bind_once_sql(m_struct, "m", final_struct),
     )
@@ -1997,17 +2026,16 @@ def _bpe_syms_spark() -> str:
 
 
 def _bpe_pairs_expr_spark() -> str:
-    """Adjacent symbol pairs of array column `t`. size-1 guard: a
-    merged word CAN collapse to one symbol (its whole sequence was
-    the winning pair) — Spark's sequence(1, 0) auto-DESCENDS to
-    [1, 0] and element_at(u, 0) throws, while the oracle's
-    generate_series(1, 0) is silently empty."""
+    """Adjacent symbol pairs of array column `t` (guarded: a merged
+    word CAN collapse to one symbol — its whole sequence was the
+    winning pair)."""
     return bind_once_sql(
         "t",
         "u",
-        "CASE WHEN size(u) < 2 THEN CAST(array() AS ARRAY<STRING>) "
-        "ELSE transform(sequence(1, size(u) - 1), "
-        "i -> concat(element_at(u, i), ' ', element_at(u, i + 1))) END",
+        _windows_spark_sql(
+            "u", 2, "concat(element_at(u, i), ' ', element_at(u, i + 1))",
+            "STRING",
+        ),
     )
 
 
@@ -2812,7 +2840,7 @@ def _html_extract_struct(dialect: str) -> str:
         ("t", t_sql),
     ]:
         if sp:
-            body = f"transform(array({val}), {var} -> {body})[0]"
+            body = bind_once_sql(val, var, body)
         else:
             body = f"list_transform([{val}], {var} -> {body})[1]"
     return (
@@ -3095,7 +3123,7 @@ def line_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = balanced(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "text"
     )
-    toks = "split(trim(lower(text)), '\\\\s+')"
+    toks = tokens_sql("lower(text)")
     segs_expr = (
         f"transform(sequence(1, CAST(ceil(size(tk) / CAST({k} AS DOUBLE)) "
         "AS INT)), i -> named_struct('i', CAST(i AS BIGINT), 'seg', "

@@ -84,6 +84,9 @@ def get_spark(
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.driver.memory": driver_memory,
         "spark.ui.enabled": "false",
+        # the progress bar writes `\r`-terminated fragments to stderr,
+        # which glue onto a tool's stdout lines in a shared terminal
+        "spark.ui.showConsoleProgress": "false",
     }
     conf.update(extra_conf or {})
     # scale-dependent overrides without code edits (r13 opt): a JSON

@@ -25,6 +25,12 @@ def untouched():
     return 42
 
 
+def mentions_only():
+    """Calls nothing changed; this docstring names helper."""
+    # nor does this comment: helper, CONST_A
+    return "helper CONST_A"
+
+
 SQL_X = f"{helper()}"
 '''
 
@@ -37,6 +43,12 @@ def helper():
 
 def untouched():
     return 42
+
+
+def mentions_only():
+    """Calls nothing changed; this docstring names helper."""
+    # nor does this comment: helper, CONST_A
+    return "helper CONST_A"
 
 
 SQL_X = f"{helper()}"
@@ -68,8 +80,10 @@ def test_changed_toplevel_names_and_expansion(tmp_path, monkeypatch):
     # LINES are unchanged — SQL_X only changes via the fixpoint)
     assert names == {"CONST_A", "helper"}
 
-    # fixpoint: SQL_X's source references helper → it is changed too;
-    # untouched references nothing changed → stays out
+    # fixpoint: SQL_X's f-string field calls helper → it is changed
+    # too; untouched references nothing changed, and mentions_only
+    # names changed symbols only in a docstring, comment and string
+    # → both stay out
     assert rc.expand_within_module("mod.py", names) == {
         "CONST_A", "helper", "SQL_X"
     }

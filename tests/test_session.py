@@ -106,6 +106,13 @@ def test_conf_json_applies_on_fresh_builder(monkeypatch):
     assert conf["spark.graft.test"] == "env"
 
 
+def test_live_session_has_no_console_progress_bar(spark):
+    """Spark's console progress bar ends its stderr fragments in `\\r`,
+    which then glue onto stdout lines (`grep -c "^\\[ok\\]"` over a
+    verify_local log undercounted); get_spark turns it off."""
+    assert not spark.sparkContext._jsc.sc().progressBar().isDefined()
+
+
 @pytest.mark.parametrize(
     "heap,page_mb",
     [("2g", 1), ("4g", 1), ("16g", 2), ("64g", 8), ("512g", 64), ("1t", 64)],

@@ -244,3 +244,67 @@ def test_line_dedup_rewrite_shuffle_fallback_matches_broadcast(
         key=lambda r: r.doc_id,
     )
     assert fb == base
+
+
+#: ASCII edge cases: empty, blank, padded, a leading tab (neither
+#: engine's trim strips it, so it leaves an empty first token), mixed
+#: whitespace runs, NULL
+_TOKENIZER_CASES = ["", "   ", "  a  b  ", "\ta b", "a\tb\nc", "a \t b", None]
+
+
+def test_tokenizer_paths_agree_on_ascii_whitespace(spark):
+    """`tokens_sql` through spark.sql, `tokens_expr` as a Column and the
+    oracles' DuckDB split give the same tokens on ASCII whitespace."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        list(enumerate(_TOKENIZER_CASES)), "i INT, text STRING"
+    )
+    by_sql = {
+        r.i: r.toks
+        for r in spark.sql(
+            f"SELECT i, {T.tokens_sql('text')} AS toks FROM {{df}}", df=df
+        ).collect()
+    }
+    by_col = {
+        r.i: r.toks
+        for r in df.select("i", T.tokens_expr(F.col("text")).alias("toks"))
+        .collect()
+    }
+    con = duckdb.connect()
+    for i, text in enumerate(_TOKENIZER_CASES):
+        duck = con.execute(
+            "SELECT regexp_split_to_array(trim(?), '\\s+')", [text]
+        ).fetchone()[0]
+        assert by_sql[i] == by_col[i] == duck, (text, by_sql[i], by_col[i], duck)
+    assert by_sql[_TOKENIZER_CASES.index("\ta b")] == ["", "a", "b"]
+
+
+def test_guarded_windows_match_python_slices(spark):
+    """Below n tokens the window helper is empty (sequence(1, k < 1)
+    descends and ANSI slice(.., 0, ..) would throw); from n on it is
+    every n-wide window, as Python slices them."""
+    from pyspark.sql import functions as F
+
+    ns = (2, 3, 8)
+    counts = sorted({c for n in ns for c in (0, 1, n - 1, n, n + 3)})
+    rows = [(c, [f"w{j}" for j in range(c)]) for c in counts]
+    df = spark.createDataFrame(rows, "c INT, t ARRAY<STRING>")
+    out = df.select(
+        "t",
+        *(
+            F.expr(
+                T._windows_spark_sql(
+                    "t", n, f"array_join(slice(t, i, {n}), ' ')", "STRING"
+                )
+            ).alias(f"g{n}")
+            for n in ns
+        ),
+    ).collect()
+    assert len(out) == len(rows)
+    for r in out:
+        t = list(r.t)
+        for n in ns:
+            want = [" ".join(t[i:i + n]) for i in range(len(t) - n + 1)]
+            assert r[f"g{n}"] == want, (n, t, r[f"g{n}"])

@@ -27,11 +27,15 @@ Usage:
 
 from __future__ import annotations
 
+import ast
 import glob
+import inspect
 import json
 import os
+import re
 import subprocess
 import sys
+import textwrap
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
@@ -85,46 +89,46 @@ def file_to_module(path: str) -> str:
     return path[: -len(".py")].replace("/", ".")
 
 
+def _toplevel_defs(tree: ast.Module):
+    """(name, node) for each top-level def, class and assignment to a
+    plain name."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            yield node.name, node
+        elif isinstance(node, ast.Assign):
+            for t in node.targets:
+                if isinstance(t, ast.Name):
+                    yield t.id, node
+        elif isinstance(node, ast.AnnAssign) and isinstance(
+            node.target, ast.Name
+        ):
+            yield node.target.id, node
+
+
 def changed_toplevel_names(base: str, path: str) -> set[str] | None:
     """Top-level def/class/assignment names in `path` whose line spans
     overlap the diff vs BASE (working-tree side). None = can't resolve
     (file deleted, unparseable, binary diff) → caller falls back to
     whole-module granularity."""
-    import ast
-
     try:
         diff = _git("diff", "-U0", base, "--", path)
         src = open(os.path.join(_REPO, path)).read()
         tree = ast.parse(src)
     except (subprocess.CalledProcessError, OSError, SyntaxError):
         return None
-    import re as _re
-
     ranges: list[tuple[int, int]] = []
-    for m in _re.finditer(r"^@@ .* \+(\d+)(?:,(\d+))? @@", diff, _re.M):
+    for m in re.finditer(r"^@@ .* \+(\d+)(?:,(\d+))? @@", diff, re.M):
         start = int(m.group(1))
         count = int(m.group(2)) if m.group(2) is not None else 1
         # a pure deletion (count 0) still touches the surrounding span
         ranges.append((start, start + max(count, 1) - 1))
     if not ranges:
         return set()
-    names: set[str] = set()
-    for node in tree.body:
-        span = (node.lineno, getattr(node, "end_lineno", node.lineno))
-        if not any(a <= span[1] and span[0] <= b for a, b in ranges):
-            continue
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                             ast.ClassDef)):
-            names.add(node.name)
-        elif isinstance(node, ast.Assign):
-            for t in node.targets:
-                if isinstance(t, ast.Name):
-                    names.add(t.id)
-        elif isinstance(node, ast.AnnAssign) and isinstance(
-            node.target, ast.Name
-        ):
-            names.add(node.target.id)
-    return names
+    return {
+        name for name, node in _toplevel_defs(tree)
+        if any(a <= node.end_lineno and node.lineno <= b for a, b in ranges)
+    }
 
 
 def module_importers(changed_module: str) -> set[str]:
@@ -135,8 +139,6 @@ def module_importers(changed_module: str) -> set[str]:
         rf"from\s+\.+[\w.]*\b{short}\b\s+import"
         rf"|from\s+\.+[\w.]*\s+import\s+(?:\([^)]*|[^\n]*)\b{short}\b"
     )
-    import re as _re
-
     out: set[str] = set()
     for root, _dirs, files in os.walk(os.path.join(_REPO, _PKG)):
         for fname in files:
@@ -147,7 +149,7 @@ def module_importers(changed_module: str) -> set[str]:
                 src = open(os.path.join(_REPO, rel)).read()
             except OSError:
                 continue
-            if _re.search(pat, src):
+            if re.search(pat, src):
                 out.add(file_to_module(rel.replace(os.sep, "/")))
     out.discard(changed_module)
     return out
@@ -157,60 +159,43 @@ def module_to_file(module: str) -> str:
     return module.replace(".", "/") + ".py"
 
 
-def _toplevel_sources(path: str) -> dict[str, str] | None:
-    """Top-level def/class/assignment name → its source text."""
-    import ast
+def _identifiers(node) -> set[str]:
+    """Names a node's code refers to: `Name` ids (f-string `{NAME}`
+    fields included) and `Attribute` attrs. Words that appear only in
+    a string, docstring or comment are not references."""
+    return {
+        sub.id if isinstance(sub, ast.Name) else sub.attr
+        for sub in ast.walk(node)
+        if isinstance(sub, (ast.Name, ast.Attribute))
+    }
 
+
+def _toplevel_references(path: str) -> dict[str, set[str]] | None:
+    """Top-level def/class/assignment name → the identifiers its code
+    refers to."""
     try:
-        src = open(os.path.join(_REPO, path)).read()
-        tree = ast.parse(src)
+        tree = ast.parse(open(os.path.join(_REPO, path)).read())
     except (OSError, SyntaxError):
         return None
-    lines = src.splitlines(keepends=True)
-    spans: dict[str, str] = {}
-    for node in tree.body:
-        body = "".join(
-            lines[node.lineno - 1: getattr(node, "end_lineno", node.lineno)]
-        )
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                             ast.ClassDef)):
-            spans[node.name] = body
-        elif isinstance(node, ast.Assign):
-            for t in node.targets:
-                if isinstance(t, ast.Name):
-                    spans[t.id] = body
-    return spans
-
-
-def _name_pattern(names: set[str]):
-    import re as _re
-
-    return _re.compile(
-        r"\b(" + "|".join(map(_re.escape, sorted(names))) + r")\b"
-    )
+    return {name: _identifiers(node) for name, node in _toplevel_defs(tree)}
 
 
 def referencing_names(path: str, names: set[str]) -> set[str]:
-    """Top-level names in `path` whose source mentions one of `names`."""
-    spans = _toplevel_sources(path) or {}
-    pat = _name_pattern(names)
-    return {nm for nm, body in spans.items() if pat.search(body)}
+    """Top-level names in `path` whose code refers to one of `names`."""
+    refs = _toplevel_references(path) or {}
+    return {nm for nm, used in refs.items() if used & names}
 
 
 def expand_within_module(path: str, names: set[str]) -> set[str]:
-    """Fixpoint: a module-level def/constant whose SOURCE references
-    a changed name is itself changed (helpers and generated *_SQL
+    """Fixpoint: a module-level def/constant whose code refers to a
+    changed name is itself changed (helpers and generated *_SQL
     constants propagate to their consumers)."""
-    spans = _toplevel_sources(path)
-    if spans is None:
+    refs = _toplevel_references(path)
+    if refs is None:
         return names
     out = set(names)
     while True:
-        pat = _name_pattern(out)
-        grew = {
-            nm for nm, body in spans.items()
-            if nm not in out and pat.search(body)
-        }
+        grew = {nm for nm, used in refs.items() if nm not in out and used & out}
         if not grew:
             return out
         out |= grew
@@ -240,20 +225,20 @@ def changed_by_module(module: str, names: set[str]) -> dict[str, set[str]]:
     return out
 
 
-def _builder_src(spec) -> str:
-    import inspect
-
+def _builder_identifiers(spec) -> set[str]:
+    """Identifiers the registered builder's code refers to."""
     try:
-        return inspect.getsource(spec.raw or spec.builder)
-    except (OSError, TypeError):
-        return ""
+        src = inspect.getsource(spec.raw or spec.builder)
+        return _identifiers(ast.parse(textwrap.dedent(src)))
+    except (OSError, TypeError, SyntaxError):
+        return set()
 
 
 def queries_reaching(
     changed: dict[str, set[str]], oracle_const: dict[str, str]
 ) -> set[str]:
     """Registered queries whose builder or oracle constant is a changed
-    name of the builder's module, or whose builder source references
+    name of the builder's module, or whose builder code refers to
     one."""
     from etl_portfolio_project_spark import api
 
@@ -265,7 +250,7 @@ def queries_reaching(
         if (
             getattr(s.raw, "__name__", "") in names
             or oracle_const.get(n) in names
-            or _name_pattern(names).search(_builder_src(s))
+            or _builder_identifiers(s) & names
         ):
             out.add(n)
     return out
@@ -276,12 +261,10 @@ def oracle_constants() -> dict[str, str]:
     registration tuples ("q_name", MOD.fn, MOD.SOME_SQL, ...), so a
     changed SQL builder regrades its query even though the builder fn
     didn't move."""
-    import re as _re
-
     api_src = open(os.path.join(_REPO, _PKG, "api.py")).read()
     return {
         m.group(1): m.group(2)
-        for m in _re.finditer(
+        for m in re.finditer(
             r'\(\s*"([a-z0-9_]+)",\s*[A-Za-z_][\w.]*,\s*'
             r'(?:[A-Za-z_][\w]*\.)?([A-Z][A-Z_0-9]*SQL)',
             api_src,
@@ -290,8 +273,6 @@ def oracle_constants() -> dict[str, str]:
 
 
 def _strip_docstrings(node) -> None:
-    import ast
-
     for sub in ast.walk(node):
         if isinstance(
             sub,
@@ -314,7 +295,6 @@ def material_from_sources(
     `names` whose top-level AST — docstrings stripped, comments never
     in the AST — differs between the two sources. Unparseable versions
     degrade to 'everything material' (conservative)."""
-    import ast
 
     def spans(src: str) -> dict[str, str] | None:
         try:
@@ -322,22 +302,9 @@ def material_from_sources(
         except SyntaxError:
             return None
         out: dict[str, str] = {}
-        for node in tree.body:
-            keys: list[str] = []
-            if isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                keys = [node.name]
-            elif isinstance(node, ast.Assign):
-                keys = [
-                    t.id for t in node.targets if isinstance(t, ast.Name)
-                ]
-            if not keys:
-                continue
+        for name, node in _toplevel_defs(tree):
             _strip_docstrings(node)
-            dumped = ast.dump(node)
-            for k in keys:
-                out[k] = dumped
+            out[name] = ast.dump(node)
         return out
 
     so, sn = spans(old_src), spans(new_src)
@@ -352,8 +319,6 @@ def material_names(base: str, path: str, names: set[str]) -> set[str]:
     comment-only edit is COSMETIC: its regrades rank after material
     ones, so a refactored execution path never loses its window slot
     to a reworded docstring."""
-    import subprocess
-
     old = subprocess.run(
         ["git", "show", f"{base}:{path}"],
         capture_output=True,
